@@ -38,7 +38,7 @@ once for committed readers, exactly the reference's contract.
 from __future__ import annotations
 
 import os
-import time
+import threading
 from collections.abc import Iterator
 
 import pandas as pd
@@ -114,6 +114,12 @@ def kafka_source_options(bootstrap: str, topic: str) -> dict[str, str]:
     }
 
 
+# Route-mode output: the target envelope plus the dead-letter error class
+# (NULL for a replicated record). A fresh StructType — StructType.add
+# would mutate the shared module-level envelope.
+DLQ_ENVELOPE = StructType(KAFKA_ENVELOPE.fields + [StructField("error", StringType())])
+
+
 # ---------------------------------------------------------------------------
 # R3–R6: decode → re-key → encode, one Arrow-batched pass
 # ---------------------------------------------------------------------------
@@ -123,6 +129,7 @@ def replicate_transform(
     target_topic: str,
     key_schema_id: int,
     id_mapping: dict,
+    on_error: str = "abort",
 ) -> DataFrame:
     """The record transform of the pipeline: for each source envelope row,
     decode the Confluent-framed value, extract ``id``, emit the target
@@ -135,72 +142,28 @@ def replicate_transform(
 
     One mapInPandas pass — the distributed analog of the reference's
     single listener loop (ReplicationApplication.java:63-78), preserving
-    (partition, offset) passthrough for downstream dedup/audit. A record
-    without ``id`` raises, failing the whole batch before any commit —
-    the NPE→transaction-abort behavior of the reference (§3.1 step 6).
+    (partition, offset) passthrough for downstream dedup/audit.
+
+    ``on_error`` picks what a bad record does:
+
+    - ``"abort"`` (the reference's semantics): the record raises, failing
+      the whole batch before any commit — the NPE→transaction-abort of
+      ReplicationApplication.java:71 (§3.1 step 6). A record without
+      ``id`` raises ``ValueError``; an unknown schema id or a malformed
+      frame raises the codec's own error.
+    - ``"route"`` (the dead-letter production mode): the envelope passes
+      through with NULL key/value and an ``error`` class, good records
+      replicate normally, and the output has the ``DLQ_ENVELOPE`` schema.
+      Classes, in the order they are caught: ``unknown_schema`` (frame
+      carries a schema id absent from the plan-time snapshot — KeyError),
+      ``missing_id`` (decoded record lacks the re-key field),
+      ``decode_error`` (any other failure: malformed frame or payload).
+      The main/DLQ split is a downstream ``filter`` each (both
+      partition-local, no extra shuffle).
     """
-    snapshot = dict(schemas_by_id)
-    mapping = dict(id_mapping)
-
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, values = [], []
-            for raw in pdf["value"]:
-                src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
-                if not isinstance(record, dict) or "id" not in record or record["id"] is None:
-                    raise ValueError(
-                        "record has no 'id' field - aborting batch "
-                        "(reference parity: ReplicationApplication.java:71 NPE "
-                        "aborts the transaction)"
-                    )
-                rid = str(record["id"])
-                keys.append(
-                    avro_codec.serialize_confluent(rid, STRING_SCHEMA, key_schema_id)
-                )
-                values.append(
-                    avro_codec.serialize_confluent(
-                        record, snapshot[src_id], mapping[src_id]
-                    )
-                )
-            out = pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": values,
-                    "topic": target_topic,
-                    "partition": pdf["partition"],
-                    "offset": pdf["offset"],
-                    "timestamp": pdf["timestamp"],
-                }
-            )
-            yield out
-
-    return env.mapInPandas(transform, schema=KAFKA_ENVELOPE)
-
-
-def replicate_transform_tolerant(
-    env: DataFrame,
-    schemas_by_id: dict,
-    target_topic: str,
-    key_schema_id: int,
-    id_mapping: dict,
-) -> DataFrame:
-    """Dead-letter variant of ``replicate_transform``: instead of the
-    reference's abort-batch-on-bad-record semantics (the NPE →
-    transaction-abort of ReplicationApplication.java:71, which
-    ``replicate_transform`` mirrors), records that cannot be decoded or
-    re-keyed are ROUTED — the envelope passes through with NULL
-    key/value plus an ``error`` classification, and good records
-    replicate normally. This is the tolerant production mode every DLQ
-    deployment runs (bad records land on a dead-letter topic with
-    diagnostics; the pipeline keeps its throughput).
-
-    Error classes: ``unknown_schema`` (frame carries a schema id absent
-    from the plan-time registry snapshot — KeyError), ``decode_error``
-    (malformed frame/payload), ``missing_id`` (decoded record lacks the
-    re-key field). Same one-Arrow-pass dataflow as the strict transform;
-    the split into main/DLQ sinks is a downstream ``filter`` each
-    (both partition-local, no extra shuffle).
-    """
+    if on_error not in ("abort", "route"):
+        raise ValueError(f"on_error must be 'abort' or 'route', got {on_error!r}")
+    route = on_error == "route"
     snapshot = dict(schemas_by_id)
     mapping = dict(id_mapping)
 
@@ -208,54 +171,46 @@ def replicate_transform_tolerant(
         for pdf in batches:
             keys, values, errors = [], [], []
             for raw in pdf["value"]:
+                key = value = error = None
                 try:
-                    src_id, record = avro_codec.deserialize_confluent(
-                        bytes(raw), snapshot
-                    )
-                    if (
-                        not isinstance(record, dict)
-                        or record.get("id") is None
-                    ):
-                        raise LookupError("missing_id")
-                    rid = str(record["id"])
-                    keys.append(
-                        avro_codec.serialize_confluent(
-                            rid, STRING_SCHEMA, key_schema_id
+                    src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
+                    rid = record.get("id") if isinstance(record, dict) else None
+                    if rid is None:
+                        if not route:
+                            raise ValueError(
+                                "record has no 'id' field - aborting batch "
+                                "(reference parity: ReplicationApplication.java:71 "
+                                "NPE aborts the transaction)"
+                            )
+                        error = "missing_id"
+                    else:
+                        key = avro_codec.serialize_confluent(
+                            str(rid), STRING_SCHEMA, key_schema_id
                         )
-                    )
-                    values.append(
-                        avro_codec.serialize_confluent(
+                        value = avro_codec.serialize_confluent(
                             record, snapshot[src_id], mapping[src_id]
                         )
-                    )
-                    errors.append(None)
-                except KeyError:
-                    keys.append(None); values.append(None)
-                    errors.append("unknown_schema")
-                except LookupError:
-                    keys.append(None); values.append(None)
-                    errors.append("missing_id")
-                except Exception:
-                    keys.append(None); values.append(None)
-                    errors.append("decode_error")
-            yield pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": values,
-                    "topic": target_topic,
-                    "partition": pdf["partition"],
-                    "offset": pdf["offset"],
-                    "timestamp": pdf["timestamp"],
-                    "error": errors,
-                }
-            )
+                except Exception as e:
+                    if not route:
+                        raise
+                    key = value = None
+                    error = "unknown_schema" if isinstance(e, KeyError) else "decode_error"
+                keys.append(key)
+                values.append(value)
+                errors.append(error)
+            out = {
+                "key": keys,
+                "value": values,
+                "topic": target_topic,
+                "partition": pdf["partition"],
+                "offset": pdf["offset"],
+                "timestamp": pdf["timestamp"],
+            }
+            if route:
+                out["error"] = errors
+            yield pd.DataFrame(out)
 
-    # StructType.add mutates in place — build a fresh schema instead of
-    # appending to the shared module-level envelope.
-    schema = StructType(
-        KAFKA_ENVELOPE.fields + [StructField("error", StringType())]
-    )
-    return env.mapInPandas(transform, schema=schema)
+    return env.mapInPandas(transform, schema=DLQ_ENVELOPE if route else KAFKA_ENVELOPE)
 
 
 def plan_replication(
@@ -264,30 +219,28 @@ def plan_replication(
     target_registry: MockSchemaRegistry,
     target_topic: str,
     value_schema=None,
+    on_error: str = "abort",
 ) -> DataFrame:
     """Plan-time registry work (R6 auto-registration, README.adoc:27
-    parity) + the transform: snapshot the source registry for decode,
-    propagate EVERY known source schema into the target registry (the
+    parity) + the transform: register the key schema on the target,
+    snapshot the source registry for decode (seeded from ``value_schema``
+    when the source registry is empty, as in direct batch use), propagate
+    EVERY known source schema into the target registry (the
     auto-registration the Confluent serde does lazily, done eagerly at
     plan time), and build the distributed transform with the id mapping.
-    ``value_schema`` is accepted for API compatibility; registration is
-    driven by the snapshot."""
+    This is the one place registry propagation happens, for both
+    ``on_error`` modes of ``replicate_transform``."""
     key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
     snapshot = source_registry.snapshot()
     if value_schema is not None and not snapshot:
-        # Source registry empty (direct batch use): seed from the given schema.
-        sid = source_registry.register(f"{target_topic}-value", value_schema)
+        source_registry.register(f"{target_topic}-value", value_schema)
         snapshot = source_registry.snapshot()
     id_mapping = {
         src_id: target_registry.register(f"{target_topic}-value", schema)
         for src_id, schema in snapshot.items()
     }
     return replicate_transform(
-        env,
-        snapshot,
-        target_topic,
-        key_id,
-        id_mapping,
+        env, snapshot, target_topic, key_id, id_mapping, on_error=on_error
     )
 
 
@@ -298,25 +251,32 @@ def committed_marker(target_dir: str, batch_id: int) -> str:
     return os.path.join(target_dir, "commits", str(batch_id))
 
 
-def batch_writer(target_dir: str):
+def _committing_writer(marker_dir: str, outputs):
     """foreachBatch body: write-then-commit-marker, idempotent on replay.
 
-    - data lands in data/<batch_id>/ (task failures abort the whole write
-      — the R8 barrier);
-    - the commit marker is created atomically AFTER a successful write
-      (R7 transaction commit);
+    ``outputs(batch_df)`` returns the ``(DataFrame, target_dir)`` pairs of
+    one batch; it runs only for a batch that is not yet committed.
+
+    - data lands in <target_dir>/data/<batch_id>/, each output in order
+      (task failures abort the whole write — the R8 barrier);
+    - ONE commit marker under ``marker_dir`` is created atomically AFTER
+      every write succeeded (R7 transaction commit), so a batch with
+      several outputs commits all of them or none;
     - a replayed batch (crash between marker and checkpoint ack) sees its
-      marker and skips — effectively-exactly-once downstream;
+      marker and skips — effectively-exactly-once downstream; a replay of
+      an uncommitted batch overwrites its partial data dirs;
     - Structured Streaming acks the checkpoint only after this returns
       (R9 post-commit offset ack).
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = committed_marker(target_dir, batch_id)
+        marker = committed_marker(marker_dir, batch_id)
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
-        data_dir = os.path.join(target_dir, "data", str(batch_id))
-        batch_df.write.mode("overwrite").parquet(data_dir)
+        for df, target_dir in outputs(batch_df):
+            df.write.mode("overwrite").parquet(
+                os.path.join(target_dir, "data", str(batch_id))
+            )
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
@@ -326,35 +286,43 @@ def batch_writer(target_dir: str):
     return write
 
 
+def batch_writer(target_dir: str):
+    """foreachBatch body of the strict pipeline: each batch's records land
+    under ``target_dir`` behind its commit marker."""
+    return _committing_writer(target_dir, lambda batch_df: [(batch_df, target_dir)])
+
+
 def dlq_batch_writer(main_dir: str, dlq_dir: str):
     """foreachBatch body for the DLQ split: good rows (error IS NULL,
     error column dropped) land under the main topic dir, routed rows
     (with their error class) under the dead-letter dir, and ONE commit
-    marker — created only after BOTH writes — covers the pair, so the
-    main/DLQ split is batch-atomic: a crash between the writes replays
-    the whole batch into both sinks idempotently (the R7/R8 semantics of
-    ``batch_writer`` extended to two destinations)."""
+    marker under the main dir — created only after BOTH writes — covers
+    the pair, so the main/DLQ split is batch-atomic: a crash between the
+    writes replays the whole batch into both sinks idempotently."""
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = committed_marker(main_dir, batch_id)
-        if os.path.exists(marker):
-            return  # replay of a committed batch: idempotent skip
+    def split(batch_df: DataFrame):
         batch_df = batch_df.localCheckpoint(eager=True)  # split reads it twice
         good = batch_df.filter(F.col("error").isNull()).drop("error")
         bad = batch_df.filter(F.col("error").isNotNull())
-        good.write.mode("overwrite").parquet(
-            os.path.join(main_dir, "data", str(batch_id))
-        )
-        bad.write.mode("overwrite").parquet(
-            os.path.join(dlq_dir, "data", str(batch_id))
-        )
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("committed")
-        os.rename(tmp, marker)  # atomic commit point for BOTH sinks
+        return [(good, main_dir), (bad, dlq_dir)]
 
-    return write
+    return _committing_writer(main_dir, split)
+
+
+def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: int) -> None:
+    """Run a replication stream once to the end of its source: every
+    available offset, each micro-batch through ``writer``, offsets acked
+    in ``checkpoint_dir`` after the writer returns (availableNow)."""
+    q = (
+        out.writeStream.foreachBatch(writer)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(timeout_sec)
+    finally:
+        q.stop()
 
 
 def replicate_stream_dlq(
@@ -370,37 +338,20 @@ def replicate_stream_dlq(
     corrupt=None,
     timeout_sec: int = 120,
 ) -> None:
-    """The R1–R9 streaming pipeline in tolerant mode: same source and
-    checkpoint mechanics as ``replicate_stream``, but records flow
-    through ``replicate_transform_tolerant`` and the two-sink
-    ``dlq_batch_writer``. ``corrupt`` optionally maps the envelope
-    DataFrame before the transform (test harnesses inject deterministic
-    corruption there)."""
+    """The R1–R9 streaming pipeline in dead-letter mode: same source,
+    registry propagation and checkpoint mechanics as ``replicate_stream``,
+    but records flow through ``replicate_transform(on_error="route")`` and
+    the two-sink ``dlq_batch_writer``. ``corrupt`` optionally maps the
+    envelope DataFrame before the transform (test harnesses inject
+    deterministic corruption there)."""
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
     if corrupt is not None:
         env = corrupt(env)
-    key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
-    snapshot = source_registry.snapshot()
-    if value_schema is not None and not snapshot:
-        source_registry.register(f"{target_topic}-value", value_schema)
-        snapshot = source_registry.snapshot()
-    id_mapping = {
-        src_id: target_registry.register(f"{target_topic}-value", schema)
-        for src_id, schema in snapshot.items()
-    }
-    out = replicate_transform_tolerant(
-        env, snapshot, target_topic, key_id, id_mapping
+    out = plan_replication(
+        env, source_registry, target_registry, target_topic, value_schema,
+        on_error="route",
     )
-    q = (
-        out.writeStream.foreachBatch(dlq_batch_writer(main_dir, dlq_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
+    _drain(out, dlq_batch_writer(main_dir, dlq_dir), checkpoint_dir, timeout_sec)
 
 
 def read_committed(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -432,6 +383,7 @@ class ReplicationProgressListener(StreamingQueryListener):
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
+        self.terminated = threading.Event()
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API names)
         pass
@@ -450,7 +402,7 @@ class ReplicationProgressListener(StreamingQueryListener):
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+        self.terminated.set()
 
     def total_rows(self) -> int:
         return int(sum(b["numInputRows"] for b in self.batches))
@@ -473,34 +425,21 @@ def replicate_stream(
     swap the first line for format("kafka") + kafka_source_options on a
     real cluster; everything downstream is identical)."""
     if listener is not None:
+        listener.terminated.clear()
         spark.streams.addListener(listener)
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
     out = plan_replication(
         env, source_registry, target_registry, target_topic, value_schema
     )
-    q = (
-        out.writeStream.foreachBatch(batch_writer(target_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination(timeout_sec)
+        _drain(out, batch_writer(target_dir), checkpoint_dir, timeout_sec)
     finally:
-        q.stop()
         if listener is not None:
-            # listener events ride an async bus; drain until the recorded
-            # batch count is stable across a polling interval (not merely
-            # non-empty — a multi-micro-batch run delivers events after the
-            # first one arrives) before detaching
-            deadline = time.monotonic() + 10
-            seen = -1
-            while time.monotonic() < deadline:
-                n = len(listener.batches)
-                if n == seen:
-                    break
-                seen = n
-                time.sleep(0.4)
+            # listener events ride an async bus that delivers them in
+            # order, so once the termination event has arrived every
+            # progress event of this run has too (a stable-count poll
+            # could detach before a late first event)
+            listener.terminated.wait(10)
             spark.streams.removeListener(listener)
 
 

@@ -61,7 +61,7 @@ _MODULES = (
 #      every oracle-bearing query, 307/307, has a green driver row);
 #   3. re-samples, STALEST FIRST — ordered by the round in which each
 #      query last received a driver row (``_LAST_SAMPLED_ROUND``, the
-#      union of CORRECTNESS_r01..r12.json), then family order. A static
+#      union of CORRECTNESS_r01..r13.json), then family order. A static
 #      prefix would re-verify the same 50 queries forever while r1-era
 #      rows age; stalest-first keeps every row's latest verification
 #      recent as rounds accumulate.
@@ -70,30 +70,33 @@ _MODULES = (
 # round (they sort to the very back until the tag is dropped, after which
 # they lead the window as never-sampled).
 
-# Oracle-bearing queries whose implementation changed in r12/r13 after
-# their last driver CORRECTNESS row: they lead the next sample window so
-# the driver re-verifies the NEW implementation (builder-side qtime
-# --oracle runs cover them meanwhile, but driver ground truth is the
-# gate). Drop a name from this tuple once the corresponding
-# CORRECTNESS_rNN row lands green and its _LAST_SAMPLED_ROUND entry is
-# bumped. Order within the tuple = order in the window.
+# Oracle-bearing queries whose implementation changed after their last
+# driver CORRECTNESS row: they lead the next sample window so the driver
+# re-verifies the NEW implementation (builder-side qtime --oracle runs
+# cover them meanwhile, but driver ground truth is the gate). Drop a name
+# from this tuple once the corresponding CORRECTNESS_rNN row lands green
+# and its _LAST_SAMPLED_ROUND entry is bumped. Order within the tuple =
+# order in the window.
 _RESAMPLE_FIRST: "tuple[str, ...]" = (
-    # r12 rewrites without an r12 driver row (agg_percentiles was the
-    # only rewritten path the r12 window covered):
-    "text_repetition_metrics",
-    "pipeline_pretraining_batch",
-    "graph_common_neighbors",
-    "stat_bootstrap_poisson_ci",
-    "ml_als_fixed_point",
-    "dedup_minhash_banded",
-    "dedup_ngram_jaccard",
-    # dedup_minhash_lsh is rows-only (no oracle) — a window slot can't
-    # produce a hash row for it; its r12 rewrite is covered by the shared
-    # _shingle_codes_udf set-equality unit test instead.
-    "ts_mad_anomaly",
-    "graph_pagerank_fixed_point",
-    "dedup_clusters",
-    "dedup_cluster_representatives",
+    # rebuilt on the single replication transform (on_error argument)
+    # and the shared registry propagation of plan_replication:
+    "replication_dlq_routing",
+    "replication_batch_roundtrip",
+    "replication_stream_roundtrip",
+    # r13: scans rebalanced (catalog.load_table rebalance_on=) with no
+    # driver row since:
+    "agg_corr",
+    "agg_count_distinct",
+    "agg_moment_stats",
+    "agg_multiple_regression",
+    "agg_pricing_summary",
+    "agg_regression",
+    "agg_skew_kurtosis",
+    "dedup_contamination_check",
+    # dedup_semantic_prune was rebalanced too but is rows-only (no
+    # oracle), so a window slot cannot produce a hash row for it.
+    "text_boilerplate_coverage",
+    "vec_label_centroid_classify",
 )
 _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     # --- last sampled in round 1 ---
@@ -102,59 +105,18 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "sort_partition_local": 3,
     # --- last sampled in round 4 ---
     "agg_approx_count_distinct": 4,
-    "agg_grouping_id": 4,
-    "agg_unpivot": 4,
-    "conditional_expressions": 4,
-    "filter_predicates": 4,
-    "flagship_revenue_by_nation": 4,
-    "join_anti": 4,
-    "join_asof_click_view": 4,
-    "join_cross": 4,
-    "join_full_outer": 4,
-    "join_left_outer": 4,
-    "join_range_bands": 4,
-    "join_right_outer": 4,
-    "join_salted_skew": 4,
-    "join_semi": 4,
-    "join_shuffle_hash": 4,
-    "join_theta_ship_after_order": 4,
-    "proj_computed_columns": 4,
-    "sql_exists_subquery": 4,
-    "sql_lateral_topn": 4,
     # --- last sampled in round 5 ---
-    "dedup_clusters": 5,
     "dedup_embedding_cosine": 5,
     "dedup_exact": 5,
     "dedup_exact_keep_first": 5,
-    "dedup_ngram_jaccard": 5,
     "dedup_simhash": 5,
-    "join_bucketed_colocated": 5,
-    "mm_binary_metadata": 5,
-    "mm_decode_features": 5,
-    "mm_frame_sample": 5,
-    "mm_resize_batch": 5,
     "pipeline_corpus_curation": 5,
     "sample_hash_fraction": 5,
     "sample_stratified_rates": 5,
-    "sink_parquet_clustered": 5,
-    "sink_parquet_partitioned": 5,
-    "sink_upsert_merge": 5,
-    "source_binaryfile": 5,
-    "source_csv_roundtrip": 5,
-    "source_json_roundtrip": 5,
-    "source_orc_roundtrip": 5,
-    "source_text_lines": 5,
     "split_train_val_test": 5,
-    "sql_cte_text_entry": 5,
     "text_bpe_token_count": 5,
-    "text_fingerprint": 5,
-    "text_lang_id": 5,
     "text_langid_eval": 5,
     "text_pii_redaction": 5,
-    "text_quality_score": 5,
-    "text_shingle_stats": 5,
-    "text_tfidf": 5,
-    "text_tokenize_stats": 5,
     "udf_apply_in_pandas": 5,
     "udf_grouped_agg_pandas": 5,
     "udf_pandas_cosine": 5,
@@ -185,7 +147,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     # --- last sampled in round 7 ---
     "agg_bitmap_distinct": 7,
     "agg_mode_deterministic": 7,
-    "dedup_cluster_representatives": 7,
     "dedup_line_rewrite": 7,
     "fn_aes_roundtrip": 7,
     "fn_array_setops": 7,
@@ -241,7 +202,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "events_inter_arrival_stats": 8,
     "events_top_paths": 8,
     "graph_bipartite_copurchase": 8,
-    "graph_common_neighbors": 8,
     "join_asof_tolerance": 8,
     "join_interval_overlap": 8,
     "join_null_safe_eq": 8,
@@ -256,7 +216,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "sql_order_by_all": 8,
     "sql_pivot_clause": 8,
     "sql_unpivot_clause": 8,
-    "stat_bootstrap_poisson_ci": 8,
     "stat_chi2_independence": 8,
     "stat_ks_test": 8,
     "stat_welch_ttest": 8,
@@ -271,7 +230,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "ts_hampel_outliers": 8,
     "ts_holt_linear": 8,
     "ts_linear_interpolate": 8,
-    "ts_mad_anomaly": 8,
     "ts_max_drawdown": 8,
     "ts_rolling_median": 8,
     "ts_seasonal_baseline": 8,
@@ -280,7 +238,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "win_time_range_frame": 8,
     # --- last sampled in round 9 ---
     "cdc_snapshot_diff": 9,
-    "dedup_minhash_banded": 9,
     "dq_expectations": 9,
     "dq_k_anonymity": 9,
     "events_survival_km": 9,
@@ -290,7 +247,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "fn_math": 9,
     "graph_kcore_peel_rounds": 9,
     "graph_labelprop_min_rounds": 9,
-    "graph_pagerank_fixed_point": 9,
     "mba_association_rules": 9,
     "mm_audio_vad_segments": 9,
     "mm_image_histogram_dedup": 9,
@@ -310,7 +266,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "stat_theil_sen_trend": 9,
     "ts_snaive_backtest": 9,
     # --- last sampled in round 10 ---
-    "ml_als_fixed_point": 10,
     "ml_kmeans_fixed_point": 10,
     "vec_ivf_verified": 10,
     "vec_mmr_fixed_steps": 10,
@@ -337,7 +292,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "join_runtime_bloom_filter": 11,
     "pack_sequences_chunks": 11,
     "pipeline_filter_funnel": 11,
-    "pipeline_pretraining_batch": 11,
     "replication_batch_roundtrip": 11,
     "replication_dlq_routing": 11,
     "replication_evolved_consumer": 11,
@@ -358,7 +312,6 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "text_boilerplate_coverage": 11,
     "text_bpe_encode_verified": 11,
     "text_lm_perplexity": 11,
-    "text_repetition_metrics": 11,
     "tpch_q3_shipping_priority": 11,
     "ts_resample_gapfill": 11,
     "ts_rollup_hierarchy": 11,
@@ -417,6 +370,57 @@ _LAST_SAMPLED_ROUND: "dict[str, int]" = {
     "win_rank_customers": 12,
     "win_running_sum": 12,
     "win_topk_per_group": 12,
+    # --- last sampled in round 13 ---
+    "agg_grouping_id": 13,
+    "agg_unpivot": 13,
+    "conditional_expressions": 13,
+    "dedup_cluster_representatives": 13,
+    "dedup_clusters": 13,
+    "dedup_minhash_banded": 13,
+    "dedup_ngram_jaccard": 13,
+    "filter_predicates": 13,
+    "flagship_revenue_by_nation": 13,
+    "graph_common_neighbors": 13,
+    "graph_pagerank_fixed_point": 13,
+    "join_anti": 13,
+    "join_asof_click_view": 13,
+    "join_bucketed_colocated": 13,
+    "join_cross": 13,
+    "join_full_outer": 13,
+    "join_left_outer": 13,
+    "join_range_bands": 13,
+    "join_right_outer": 13,
+    "join_salted_skew": 13,
+    "join_semi": 13,
+    "join_shuffle_hash": 13,
+    "join_theta_ship_after_order": 13,
+    "ml_als_fixed_point": 13,
+    "mm_binary_metadata": 13,
+    "mm_decode_features": 13,
+    "mm_frame_sample": 13,
+    "mm_resize_batch": 13,
+    "pipeline_pretraining_batch": 13,
+    "proj_computed_columns": 13,
+    "sink_parquet_clustered": 13,
+    "sink_parquet_partitioned": 13,
+    "sink_upsert_merge": 13,
+    "source_binaryfile": 13,
+    "source_csv_roundtrip": 13,
+    "source_json_roundtrip": 13,
+    "source_orc_roundtrip": 13,
+    "source_text_lines": 13,
+    "sql_cte_text_entry": 13,
+    "sql_exists_subquery": 13,
+    "sql_lateral_topn": 13,
+    "stat_bootstrap_poisson_ci": 13,
+    "text_fingerprint": 13,
+    "text_lang_id": 13,
+    "text_quality_score": 13,
+    "text_repetition_metrics": 13,
+    "text_shingle_stats": 13,
+    "text_tfidf": 13,
+    "text_tokenize_stats": 13,
+    "ts_mad_anomaly": 13,
 }
 _DRIVER_SAMPLED = frozenset(_LAST_SAMPLED_ROUND)
 _FAMILY_ORDER = (

@@ -50,6 +50,26 @@ def _staged_source(spark: SparkSession, sf_dir: str, registry: MockSchemaRegistr
     return src_dir
 
 
+def _corrupt(env: DataFrame) -> DataFrame:
+    """Deterministic in-plan corruption of a source envelope: offset % 7
+    == 0 → frame truncated to 3 bytes (an unparseable frame, the
+    ``decode_error`` class); offset % 7 == 3 → schema-id field rewritten
+    to 999 (a registry miss, the ``unknown_schema`` class)."""
+    return env.withColumn(
+        "value",
+        F.when(F.col("offset") % 7 == 0, F.expr("substring(value, 1, 3)"))
+        .when(
+            F.col("offset") % 7 == 3,
+            F.concat(
+                F.expr("substring(value, 1, 1)"),
+                F.lit(bytes([0, 0, 3, 231])),  # schema id 999
+                F.expr("substring(value, 6, 2147483647)"),
+            ),
+        )
+        .otherwise(F.col("value")),
+    )
+
+
 @query(
     "replication_batch_roundtrip",
     oracle="""
@@ -250,12 +270,10 @@ def replication_evolved_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter routing, oracle-verified: the clean nation-derived
-    source topic is corrupted IN-PLAN deterministically (offset % 7 == 0
-    → frame truncated to 3 bytes, an unparseable frame; offset % 7 == 3
-    → schema-id field rewritten to 999, a registry miss), then the
-    TOLERANT replicate transform (operators/replication.py
-    ``replicate_transform_tolerant``) routes each record: good ones
-    re-key/re-encode as usual, bad ones pass through with an error
+    source topic is corrupted IN-PLAN deterministically (``_corrupt``),
+    then the replicate transform in route mode (operators/replication.py
+    ``plan_replication(..., on_error="route")``) routes each record: good
+    ones re-key/re-encode as usual, bad ones pass through with an error
     class. The query emits per-disposition accounting, with the good
     rows' decoded ids counted through the full consumer decode — so the
     oracle verifies BOTH that exactly the corrupted offsets land in the
@@ -264,8 +282,8 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The reference's semantics on a bad record is abort-the-batch
     (ReplicationApplication.java:71 NPE → transaction abort; mirrored by
-    ``replicate_transform`` + pytest test_missing_id_aborts_batch); this
-    query is the DLQ production mode layered on the same Arrow pass.
+    ``on_error="abort"`` + pytest test_missing_id_aborts_batch); this
+    query is the DLQ production mode of the same Arrow pass.
     Scale shape: corruption + routing are per-row map work; the
     accounting is one 3-group aggregate.
     """
@@ -274,34 +292,9 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
     try:
         src_dir = _staged_source(spark, sf_dir, src_reg)
-        env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir)
-        corrupted_value = (
-            F.when(
-                F.col("offset") % 7 == 0,
-                F.expr("substring(value, 1, 3)"),
-            )
-            .when(
-                F.col("offset") % 7 == 3,
-                F.concat(
-                    F.expr("substring(value, 1, 1)"),
-                    F.lit(bytes([0, 0, 3, 231])),  # schema id 999
-                    F.expr("substring(value, 6, 2147483647)"),
-                ),
-            )
-            .otherwise(F.col("value"))
-        )
-        env = env.withColumn("value", corrupted_value)
-        # propagate the source schema to the target registry (the good
-        # records' path), then run the tolerant transform
-        sid, _ = src_reg.latest("source-topic-a-value")
-        tgt_value_id = tgt_reg.register("target-topic-b-value", R.FOO_SCHEMA)
-        key_id = tgt_reg.register("target-topic-b-key", R.STRING_SCHEMA)
-        out = R.replicate_transform_tolerant(
-            env,
-            src_reg.snapshot(),
-            "target-topic-b",
-            key_id,
-            {sid: tgt_value_id},
+        env = _corrupt(spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir))
+        out = R.plan_replication(
+            env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA, on_error="route"
         )
         good = R.decode_envelope(
             out.filter(F.col("error").isNull()).drop("error"),
@@ -337,11 +330,10 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("replication", "avro", "dlq", "live"),
 )
 def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tolerant R1–R9 pipeline END TO END in streaming mode: the
-    envelope stream is corrupted deterministically in-plan (the
-    replication_dlq_routing classes), replicated through
-    ``replicate_transform_tolerant``, and committed through the
-    two-sink batch-atomic ``dlq_batch_writer`` (one marker covers the
+    """The dead-letter R1–R9 pipeline END TO END in streaming mode: the
+    envelope stream is corrupted deterministically in-plan (``_corrupt``,
+    the replication_dlq_routing classes), replicated in route mode, and
+    committed through the two-sink batch-atomic ``dlq_batch_writer`` (one marker covers the
     main write AND the dead-letter write). The query then reads BOTH
     committed sinks back and emits per-disposition accounting with the
     good rows' ids verified through the consumer decode.
@@ -360,37 +352,14 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         main_dir = os.path.join(base, "target-topic-b")
         dlq_dir = os.path.join(base, "target-topic-b-dlq")
         ckpt = os.path.join(base, "ckpt")
-
-        def corrupt(env: DataFrame) -> DataFrame:
-            return env.withColumn(
-                "value",
-                F.when(
-                    F.col("offset") % 7 == 0, F.expr("substring(value, 1, 3)")
-                )
-                .when(
-                    F.col("offset") % 7 == 3,
-                    F.concat(
-                        F.expr("substring(value, 1, 1)"),
-                        F.lit(bytes([0, 0, 3, 231])),
-                        F.expr("substring(value, 6, 2147483647)"),
-                    ),
-                )
-                .otherwise(F.col("value")),
-            )
-
         R.replicate_stream_dlq(
             spark, src_dir, main_dir, dlq_dir, src_reg, tgt_reg,
-            "target-topic-b", R.FOO_SCHEMA, ckpt, corrupt=corrupt,
+            "target-topic-b", R.FOO_SCHEMA, ckpt, corrupt=_corrupt,
         )
         good = R.decode_envelope(
             R.read_committed(spark, main_dir), tgt_reg.snapshot(), R.FOO_SCHEMA
         )
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        dlq_schema = StructType(
-            R.KAFKA_ENVELOPE.fields + [StructField("error", StringType())]
-        )  # fresh schema — StructType.add mutates the shared envelope
-        bad = spark.read.schema(dlq_schema).parquet(
+        bad = spark.read.schema(R.DLQ_ENVELOPE).parquet(
             os.path.join(dlq_dir, "data", "*")
         )
         acc_bad = bad.groupBy(F.col("error").alias("disposition")).agg(

@@ -20,9 +20,10 @@ def pytest_sessionstart(session):
 
 
 # The fast core tier (`pytest -m quick`): registry oracle smoke, plan
-# lint, stream goldens, and the Spark-free unit suites — the checks that
-# gate every commit. The hypothesis fuzz tiers and deep integration
-# suites stay in the (~90 min) full run; this tier targets <=10 min so
+# lint, stream goldens, the replication suite, and the Spark-free unit
+# suites — the checks that gate every commit. The hypothesis fuzz tiers
+# and deep integration suites stay in the (~90 min) full run; this tier
+# targets <=10 min so
 # "run it twice to check a flake" stays cheap (r10 verdict item 4).
 QUICK_MODULES = frozenset((
     "test_registry",
@@ -33,6 +34,7 @@ QUICK_MODULES = frozenset((
     "test_bench_drift",
     "test_scratch_gc",
     "test_http_registry",
+    "test_replication",
     "test_scaling_tool",
     "test_r12_optimizations",
     "test_r13_optimizations",

@@ -189,68 +189,6 @@ def test_kcore_empty_graph(spark):
     assert kcore(spark, _edges(spark, []), k=2).count() == 0
 
 
-def test_dlq_transform_routes_all_three_error_classes(spark):
-    """replicate_transform_tolerant: unknown_schema / decode_error /
-    missing_id classification plus byte-correct passthrough of good
-    records — on hand-crafted frames (one of each corruption, one good,
-    one record whose SCHEMA legitimately lacks the id field)."""
-    import datetime as dt
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from avro_topic_replication_spark.functions import avro_codec
-    from avro_topic_replication_spark.operators import replication as R
-    from avro_topic_replication_spark.sources.registry import MockSchemaRegistry
-
-    scope = uuid.uuid4().hex[:8]
-    reg = MockSchemaRegistry.get_scope(f"dlq-{scope}")
-    tgt = MockSchemaRegistry.get_scope(f"dlqt-{scope}")
-    try:
-        sid = reg.register("t-value", R.FOO_SCHEMA)
-        noid_schema = {
-            "type": "record",
-            "name": "NoId",
-            "fields": [{"name": "name", "type": "string"}],
-        }
-        sid_noid = reg.register("t-noid", noid_schema)
-        good = avro_codec.serialize_confluent({"id": "7", "name": "x"}, R.FOO_SCHEMA, sid)
-        unknown = avro_codec.serialize_confluent({"id": "8", "name": "y"}, R.FOO_SCHEMA, 999)
-        truncated = good[:3]
-        noid = avro_codec.serialize_confluent({"name": "z"}, noid_schema, sid_noid)
-        ts = dt.datetime(2024, 1, 1)
-        rows = [
-            (None, good, "t", 0, 0, ts),
-            (None, unknown, "t", 0, 1, ts),
-            (None, truncated, "t", 0, 2, ts),
-            (None, noid, "t", 0, 3, ts),
-        ]
-        env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
-        key_id = tgt.register("t2-key", R.STRING_SCHEMA)
-        mapping = {
-            src_id: tgt.register("t2-value", schema)
-            for src_id, schema in reg.snapshot().items()
-        }
-        out = R.replicate_transform_tolerant(
-            env, reg.snapshot(), "t2", key_id, mapping
-        ).collect()
-        by_off = {r["offset"]: r for r in out}
-        assert by_off[0]["error"] is None
-        assert by_off[1]["error"] == "unknown_schema"
-        assert by_off[2]["error"] == "decode_error"
-        assert by_off[3]["error"] == "missing_id"
-        # good record: key is Avro-framed str(id), value decodes byte-correct
-        _, key = avro_codec.deserialize_confluent(bytes(by_off[0]["key"]), tgt.snapshot())
-        assert key == "7"
-        _, rec = avro_codec.deserialize_confluent(bytes(by_off[0]["value"]), tgt.snapshot())
-        assert rec == {"id": "7", "name": "x"}
-        # the shared envelope schema must not have been mutated
-        assert [f.name for f in R.KAFKA_ENVELOPE.fields][-1] != "error"
-    finally:
-        MockSchemaRegistry.drop_scope(f"dlq-{scope}")
-        MockSchemaRegistry.drop_scope(f"dlqt-{scope}")
-
-
 def test_als_recommendations_are_valid_and_ranked(spark):
     """ml_als_recommend: exactly 5 recs per sampled customer, suppliers
     are real, scores finite and non-increasing within a customer."""

@@ -181,7 +181,10 @@ def test_missing_id_aborts_batch(spark, dirs):
     R.write_envelope_fixture(
         spark, [{"other": "x"}], dirs["src"], "source-topic-a", src_reg, bad_schema
     )
-    with pytest.raises(Exception):
+    # Spark surfaces the worker's ValueError inside a StreamingQueryException;
+    # matching its message keeps any other failure (a broken transform's
+    # AttributeError, say) from passing as an abort.
+    with pytest.raises(Exception, match="ValueError: record has no 'id' field"):
         R.replicate_stream(
             spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
             "target-topic-b", bad_schema, dirs["ckpt"], timeout_sec=60,
@@ -204,6 +207,92 @@ def test_idempotent_replay_of_committed_batch(spark, dirs):
     writer(out, 0)
     writer(out, 0)  # replay
     assert R.read_committed(spark, dirs["tgt"]).count() == 10
+
+
+def test_dlq_transform_routes_all_three_error_classes(spark):
+    """on_error="route": unknown_schema / decode_error / missing_id
+    classification plus byte-correct passthrough of good records — on
+    hand-crafted frames (one of each corruption, one good, one record
+    whose SCHEMA legitimately lacks the id field, and one whose union
+    branch index is out of range, which is a decode error even though
+    the decoder reports it as an IndexError, a LookupError)."""
+    import datetime as dt
+
+    src_reg, tgt_reg = _fresh_registries()
+    sid = src_reg.register("t-value", R.FOO_SCHEMA)
+    noid_schema = {
+        "type": "record",
+        "name": "NoId",
+        "fields": [{"name": "name", "type": "string"}],
+    }
+    sid_noid = src_reg.register("t-noid", noid_schema)
+    good = avro_codec.serialize_confluent({"id": "7", "name": "x"}, R.FOO_SCHEMA, sid)
+    unknown = avro_codec.serialize_confluent({"id": "8", "name": "y"}, R.FOO_SCHEMA, 999)
+    truncated = good[:3]
+    noid = avro_codec.serialize_confluent({"name": "z"}, noid_schema, sid_noid)
+    # frame + id "7" (length 1 → zigzag 2, then b"7"), then union index 5
+    bad_branch = good[:7] + bytes([10])
+    ts = dt.datetime(2024, 1, 1)
+    rows = [
+        (None, good, "t", 0, 0, ts),
+        (None, unknown, "t", 0, 1, ts),
+        (None, truncated, "t", 0, 2, ts),
+        (None, noid, "t", 0, 3, ts),
+        (None, bad_branch, "t", 0, 4, ts),
+    ]
+    env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+    out = R.plan_replication(env, src_reg, tgt_reg, "t2", on_error="route")
+    assert out.schema == R.DLQ_ENVELOPE
+    by_off = {r["offset"]: r for r in out.collect()}
+    assert by_off[0]["error"] is None
+    assert by_off[1]["error"] == "unknown_schema"
+    assert by_off[2]["error"] == "decode_error"
+    assert by_off[3]["error"] == "missing_id"
+    assert by_off[4]["error"] == "decode_error"
+    for off in (1, 2, 3, 4):
+        assert by_off[off]["key"] is None and by_off[off]["value"] is None
+    # good record: key is Avro-framed str(id), value decodes byte-correct
+    _, key = avro_codec.deserialize_confluent(bytes(by_off[0]["key"]), tgt_reg.snapshot())
+    assert key == "7"
+    _, rec = avro_codec.deserialize_confluent(bytes(by_off[0]["value"]), tgt_reg.snapshot())
+    assert rec == {"id": "7", "name": "x"}
+    # the shared envelope schema must not have been mutated
+    assert [f.name for f in R.KAFKA_ENVELOPE.fields][-1] != "error"
+
+
+def test_route_mode_replicates_good_records_like_abort_mode(spark):
+    """On a clean Foo v1/v2 multi-schema topic the two on_error modes
+    must agree byte for byte: every record's key and value from "route"
+    equal those from "abort", and no record carries an error class."""
+    import datetime as dt
+
+    src_reg, tgt_reg = _fresh_registries()
+    v1 = src_reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    v2 = src_reg.register("source-topic-a-value", R.FOO_SCHEMA_V2)
+    rows = []
+    for i in range(40):
+        name = None if i % 5 == 0 else f"n{i}"
+        if i % 2:
+            payload = avro_codec.serialize_confluent(
+                {"id": str(i), "name": name, "tag": f"t{i}"}, R.FOO_SCHEMA_V2, v2
+            )
+        else:
+            payload = avro_codec.serialize_confluent(
+                {"id": str(i), "name": name}, R.FOO_SCHEMA, v1
+            )
+        rows.append((None, payload, "source-topic-a", i % 3, i, dt.datetime(2024, 1, 1)))
+    env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+    # registration is idempotent, so both plans map onto the same target ids
+    strict = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b")
+    routed = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b", on_error="route")
+    want = {r["offset"]: r for r in strict.collect()}
+    got = {r["offset"]: r for r in routed.collect()}
+    assert len(want) == 40 and set(got) == set(want)
+    for off, r in got.items():
+        assert r["error"] is None
+        assert bytes(r["key"]) == bytes(want[off]["key"])
+        assert bytes(r["value"]) == bytes(want[off]["value"])
+        assert (r["topic"], r["partition"]) == (want[off]["topic"], want[off]["partition"])
 
 
 def test_multi_record_replication_preserves_all(spark, dirs):

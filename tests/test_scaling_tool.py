@@ -1,7 +1,9 @@
 """Unit tests for tools/scaling_analysis.py (SCALE.md r12): the
 first-difference exponent fit, the input-growth family classification
 (documents/embeddings are flat until sf0.1), and the super-linear exit
-gate. Spark-free — the registry import is exercised but no session."""
+gate; plus tools/core_scaling.py's --cpus check and its partial report
+on a failed child. Spark-free — the registry import is exercised but no
+session."""
 
 from __future__ import annotations
 
@@ -93,3 +95,47 @@ def test_main_gates_on_super_linear(tool, tmp_path, monkeypatch, capsys):
     assert tool.main() == 1
     out = capsys.readouterr().out
     assert "SUPER-LINEAR" in out and "quad" in out
+
+
+def _core_scaling():
+    path = os.path.join(os.path.dirname(_TOOL), "core_scaling.py")
+    spec = importlib.util.spec_from_file_location("core_scaling", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_core_scaling_rejects_other_than_two_core_counts(monkeypatch):
+    """The report has one low/high ratio per query, so `run` refuses a
+    third core count up front instead of timing it and dropping it."""
+    tool = _core_scaling()
+
+    def no_child(*a, **k):
+        raise AssertionError("no child may start for a rejected --cpus")
+
+    monkeypatch.setattr(tool.subprocess, "run", no_child)
+    for cpus in ([8], [8, 16, 32]):
+        with pytest.raises(SystemExit, match="exactly two core counts"):
+            tool.run(["q"], cpus, runs=1, passes=1)
+
+
+def test_core_scaling_reports_partial_table_on_child_failure(monkeypatch, capsys):
+    """A failing child still leaves the timings measured before it."""
+    tool = _core_scaling()
+    calls = []
+
+    class Done:
+        def __init__(self, rc, out):
+            self.returncode, self.stdout, self.stderr = rc, out, ""
+
+    def fake_child(cmd, env, **k):
+        calls.append(env["SPARK_GRAFT_CPUS"])
+        if len(calls) == 1:
+            return Done(0, json.dumps({"q": 2.0}))
+        return Done(1, "")
+
+    monkeypatch.setattr(tool.subprocess, "run", fake_child)
+    with pytest.raises(SystemExit, match="child at 32 cores failed"):
+        tool.run(["q"], [8, 32], runs=1, passes=1)
+    table = json.loads(capsys.readouterr().out)["queries"]
+    assert table == {"q": {"c8": 2.0, "c32": None, "ratio": None}}

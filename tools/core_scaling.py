@@ -127,6 +127,9 @@ def build(mult: int) -> None:
                     # realistic instead of forcing mult-sized clusters)
                     c = c.withColumn(
                         "text", F.concat(F.lit(f"x{i} "), F.col("text"))
+                    ).withColumn(
+                        "n_chars",
+                        F.length("text").cast(dict(src.dtypes)["n_chars"]),
                     )
                 copies.append(c)
             out = copies[0]
@@ -175,6 +178,10 @@ def child(names: list[str], runs: int) -> None:
 
 
 def run(names: list[str], cpus: list[int], runs: int, passes: int) -> None:
+    if len(cpus) != 2:
+        # the table reports one low/high ratio per query; a third core
+        # count would be timed and then silently dropped
+        sys.exit(f"--cpus takes exactly two core counts, got {cpus}")
     # Alternate core counts across passes (8,32,8,32,…) and keep the min
     # per (cpu, query): container weather drifts on multi-minute scales,
     # so back-to-back same-order children bias the ratio — alternation
@@ -193,21 +200,28 @@ def run(names: list[str], cpus: list[int], runs: int, passes: int) -> None:
             )
             sys.stderr.write(p.stderr[-2000:])
             if p.returncode != 0:
+                # keep what earlier children measured before giving up
+                _report(names, cpus, runs, passes, results)
                 sys.exit(f"child at {c} cores failed rc={p.returncode}")
             got = json.loads(p.stdout.strip().splitlines()[-1])
             for n, t in got.items():
                 prev = results[c].get(n)
                 results[c][n] = t if prev is None else min(prev, t)
+    _report(names, cpus, runs, passes, results)
+
+
+def _report(names, cpus, runs, passes, results) -> None:
+    """Print the low/high-core table; a query a failed run never timed
+    at some core count shows null there."""
     lo, hi = min(cpus), max(cpus)
-    table = {
-        n: {
-            f"c{lo}": results[lo][n],
-            f"c{hi}": results[hi][n],
-            "ratio": round(results[lo][n] / results[hi][n], 2)
-            if results[hi][n] > 0 else None,
+    table = {}
+    for n in names:
+        t_lo, t_hi = results[lo].get(n), results[hi].get(n)
+        table[n] = {
+            f"c{lo}": t_lo,
+            f"c{hi}": t_hi,
+            "ratio": round(t_lo / t_hi, 2) if t_lo is not None and t_hi else None,
         }
-        for n in names
-    }
     print(json.dumps({"cpus": cpus, "runs": runs, "passes": passes,
                       "queries": table}, indent=1))
 
