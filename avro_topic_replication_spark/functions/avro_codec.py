@@ -198,12 +198,23 @@ def decode(data: bytes, schema):
     return datum
 
 
+def _read_exact(buf: io.BytesIO, n: int) -> bytes:
+    """Exactly ``n`` bytes: a negative length or a short read raises
+    (``buf.read`` alone would read to the end, or return fewer bytes)."""
+    if n < 0:
+        raise ValueError(f"negative length {n}")
+    b = buf.read(n)
+    if len(b) != n:
+        raise EOFError(f"truncated payload: wanted {n} bytes, got {len(b)}")
+    return b
+
+
 def _decode(buf: io.BytesIO, schema):
     t = _schema_type(schema)
     if t == "null":
         return None
     if t == "boolean":
-        return buf.read(1) == b"\x01"
+        return _read_exact(buf, 1) == b"\x01"
     if t in ("int", "long"):
         return _read_long(buf)
     if t == "float":
@@ -211,11 +222,11 @@ def _decode(buf: io.BytesIO, schema):
     if t == "double":
         return struct.unpack("<d", buf.read(8))[0]
     if t == "bytes":
-        return buf.read(_read_long(buf))
+        return _read_exact(buf, _read_long(buf))
     if t == "string":
-        return buf.read(_read_long(buf)).decode("utf-8")
+        return _read_exact(buf, _read_long(buf)).decode("utf-8")
     if t == "fixed":
-        return buf.read(schema["size"])
+        return _read_exact(buf, schema["size"])
     if t == "enum":
         return schema["symbols"][_read_long(buf)]
     if t == "union":
@@ -279,6 +290,217 @@ def deserialize_confluent(data: bytes, schemas_by_id: dict):
             "(topic schema evolved; restart the query)"
         )
     return sid, decode(payload, schemas_by_id[sid])
+
+
+# ---------------------------------------------------------------------------
+# payload walker (the replication header-rewrite check)
+# ---------------------------------------------------------------------------
+# A walker checks that a payload is exactly what ``encode(decode(payload))``
+# would give back, without building the decoded datum. It raises on any
+# payload for which that is not so: a non-minimal or over-long varint, a
+# negative or out-of-bounds length, invalid UTF-8, a boolean byte other
+# than 0 or 1, an out-of-range union or enum index, a float that does not
+# round-trip bit-exactly, trailing bytes. Positions only move forward, so
+# a length past the end shows as an IndexError or struct.error on the next
+# read or as a final position other than the payload's end. Callers treat
+# every exception alike: take the full path.
+
+# The Python class each union branch's datum has, as _union_branch_matches
+# sees it. Re-encoding picks the FIRST branch of the datum's class, so a
+# union whose branches share a class may re-encode under another index.
+_MATCH_CLASS = {
+    "null": "none", "boolean": "bool", "int": "int", "long": "int",
+    "float": "float", "double": "float", "string": "str", "enum": "str",
+    "bytes": "bytes", "fixed": "bytes", "array": "list", "map": "dict",
+    "record": "dict",
+}
+
+
+class _Unwalkable(Exception):
+    """A schema outside the walker's surface (the full path handles it)."""
+
+
+def _walk_varint(data: bytes, pos: int) -> tuple[int, int]:
+    """(value, next position) of the varint at ``pos``; raises unless it is
+    the shortest encoding of a value below 2**64 (what _write_varint
+    writes)."""
+    b = data[pos]
+    if b < 0x80:
+        return b, pos + 1
+    result, shift = b & 0x7F, 7
+    while True:
+        pos += 1
+        b = data[pos]
+        result |= (b & 0x7F) << shift
+        if b < 0x80:
+            if b == 0:
+                raise ValueError("non-minimal varint")
+            if result >> 64:
+                raise ValueError("varint above 64 bits")
+            return result, pos + 1
+        shift += 7
+        if shift >= 70:
+            raise ValueError("over-long varint")
+
+
+def _walk_span(data: bytes, pos: int) -> tuple[int, int]:
+    """(start, end) of the length-prefixed bytes at ``pos``."""
+    n, pos = _walk_varint(data, pos)
+    if n & 1:
+        raise ValueError("negative length")
+    return pos, pos + (n >> 1)
+
+
+def _walk_string(data: bytes, pos: int) -> int:
+    start, end = _walk_span(data, pos)
+    chunk = data[start:end]
+    if not chunk.isascii():
+        chunk.decode("utf-8")  # raises on invalid UTF-8
+    return end
+
+
+def _walk_bytes(data: bytes, pos: int) -> int:
+    return _walk_span(data, pos)[1]
+
+
+def _walk_long(data: bytes, pos: int) -> int:
+    return _walk_varint(data, pos)[1]
+
+
+def _walk_boolean(data: bytes, pos: int) -> int:
+    if data[pos] > 1:
+        raise ValueError("boolean byte other than 0 or 1")
+    return pos + 1
+
+
+def _float_walker(codec: struct.Struct):
+    size = codec.size
+
+    def walk(data: bytes, pos: int) -> int:
+        chunk = data[pos:pos + size]
+        if codec.pack(codec.unpack(chunk)[0]) != chunk:
+            raise ValueError("float does not round-trip bit-exactly")
+        return pos + size
+
+    return walk
+
+
+def _fields_walker(walkers: list):
+    walkers = [w for w in walkers if w is not None]
+
+    def walk(data: bytes, pos: int) -> int:
+        for w in walkers:
+            pos = w(data, pos)
+        return pos
+
+    return walk
+
+
+def _record_fields(schema: dict) -> list[dict]:
+    fields = schema["fields"]
+    names = [f["name"] for f in fields]
+    if len(set(names)) != len(names):
+        raise _Unwalkable("duplicate field names")  # decode keeps the last
+    return fields
+
+
+_PRIMITIVE_WALKERS = {
+    "null": None,
+    "boolean": _walk_boolean,
+    "int": _walk_long,
+    "long": _walk_long,
+    "float": _float_walker(struct.Struct("<f")),
+    "double": _float_walker(struct.Struct("<d")),
+    "bytes": _walk_bytes,
+    "string": _walk_string,
+}
+
+
+def _compile_walker(schema):
+    """Walker ``(data, pos) -> end`` of one value of ``schema`` (None for
+    null, which takes no bytes); raises _Unwalkable outside the surface."""
+    t = _schema_type(schema)
+    if t in _PRIMITIVE_WALKERS:
+        return _PRIMITIVE_WALKERS[t]
+    if t == "fixed":
+        size = schema["size"]
+        if not isinstance(size, int) or size < 0:
+            raise _Unwalkable("bad fixed size")
+
+        def walk_fixed(data: bytes, pos: int) -> int:
+            return pos + size
+
+        return walk_fixed
+    if t == "enum":
+        symbols = schema["symbols"]
+        if len(set(symbols)) != len(symbols):
+            raise _Unwalkable("duplicate enum symbols")  # encode finds the first
+        n = len(symbols)
+
+        def walk_enum(data: bytes, pos: int) -> int:
+            i, pos = _walk_varint(data, pos)
+            if i & 1 or i >> 1 >= n:
+                raise ValueError("enum index out of range")
+            return pos
+
+        return walk_enum
+    if t == "union":
+        classes = [_MATCH_CLASS[_schema_type(b)] for b in schema]
+        if len(set(classes)) != len(classes):
+            raise _Unwalkable("union branches of one match class")
+        branches = [_compile_walker(b) for b in schema]
+
+        def walk_union(data: bytes, pos: int) -> int:
+            i, pos = _walk_varint(data, pos)
+            if i & 1 or i >> 1 >= len(branches):
+                raise ValueError("union index out of range")
+            branch = branches[i >> 1]
+            return pos if branch is None else branch(data, pos)
+
+        return walk_union
+    if t == "record":
+        return _fields_walker([_compile_walker(f["type"]) for f in _record_fields(schema)])
+    raise _Unwalkable(f"no walker for {t!r}")  # array, map, named references
+
+
+def compile_walker(schema):
+    """Plan-time compile of the replication fast path's check for one
+    writer schema: a record whose top-level ``id`` field is a plain
+    ``string``. Returns ``walk(data, pos) -> (id_start, id_end)``: it walks
+    the payload that starts at ``pos`` to its end and returns the span of
+    the ``id`` string INCLUDING its length prefix — the Avro encoding of
+    ``id`` as a bare string, i.e. a key payload. It raises (see above)
+    unless re-encoding the decoded datum gives back the payload and its
+    ``id`` span byte for byte.
+
+    Returns None for a schema the walker does not cover: a non-record, an
+    ``id`` that is missing or not a plain string, duplicate field names
+    or enum symbols, arrays, maps, named-type references, or unions with
+    two branches of one match class."""
+    try:
+        schema = parse_schema(schema)
+        if _schema_type(schema) != "record":
+            return None
+        fields = _record_fields(schema)
+        names = [f["name"] for f in fields]
+        if "id" not in names:
+            return None
+        at = names.index("id")
+        if _schema_type(fields[at]["type"]) != "string":
+            return None
+        before = _fields_walker([_compile_walker(f["type"]) for f in fields[:at]])
+        after = _fields_walker([_compile_walker(f["type"]) for f in fields[at + 1:]])
+    except (_Unwalkable, KeyError, TypeError, AttributeError):
+        return None
+
+    def walk(data: bytes, pos: int) -> tuple[int, int]:
+        start = before(data, pos)
+        end = _walk_string(data, start)
+        if after(data, end) != len(data):
+            raise ValueError("payload does not end where the record does")
+        return start, end
+
+    return walk
 
 
 # ---------------------------------------------------------------------------

@@ -15,13 +15,17 @@ Spark mapping implemented here:
 |    |                                    | cluster, maxOffsetsPerTrigger)   |
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
-| R3 | KafkaAvroDeserializer              | Arrow-batched decode against a   |
-|    | (application.yml:12)               | plan-time registry snapshot      |
-| R4 | consumerRecord.get("id") (:71)     | record["id"] in the same pass    |
-| R5 | re-key with id.toString() (:70-71) | key = Confluent-framed Avro      |
-|    |                                    | string of id (serde parity)      |
-| R6 | KafkaAvroSerializer + auto-register| encode + register() at plan time |
-|    | (application.yml:15-16,README:27)  | against the target registry      |
+| R3 | KafkaAvroDeserializer              | mapInArrow walk of each payload  |
+|    | (application.yml:12)               | with a per-schema walker compiled|
+|    |                                    | from the plan-time snapshot; full|
+|    |                                    | decode only as the fallback      |
+| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte span  |
+| R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
+|    |                                    | (Avro string of id, serde parity)|
+| R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
+|    | (application.yml:15-16,README:27)  | 5-byte frame rewritten to the    |
+|    |                                    | target id + the writer's payload |
+|    |                                    | (fallback: full re-encode)       |
 | R7 | executeInTransaction (:66-78)      | foreachBatch: write data, then   |
 | R8 | future.get barrier → abort (:80-94)| atomically create commit marker; |
 |    |                                    | any task failure fails the batch |
@@ -42,6 +46,7 @@ import threading
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,8 +126,73 @@ DLQ_ENVELOPE = StructType(KAFKA_ENVELOPE.fields + [StructField("error", StringTy
 
 
 # ---------------------------------------------------------------------------
-# R3–R6: decode → re-key → encode, one Arrow-batched pass
+# R3–R6: walk → re-key → re-frame, one Arrow-batched pass
 # ---------------------------------------------------------------------------
+def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
+    """The full path for one framed value: decode, extract ``id``, encode
+    the key and re-encode the value; returns ``(key, value, error)``. It is
+    the one place that classifies a bad record (see
+    ``replicate_transform``) or, in abort mode, raises for it."""
+    try:
+        src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
+        rid = record.get("id") if isinstance(record, dict) else None
+        if rid is None:
+            if not route:
+                raise ValueError(
+                    "record has no 'id' field - aborting batch "
+                    "(reference parity: ReplicationApplication.java:71 "
+                    "NPE aborts the transaction)"
+                )
+            return None, None, "missing_id"
+        return (
+            avro_codec.serialize_confluent(str(rid), STRING_SCHEMA, key_schema_id),
+            avro_codec.serialize_confluent(record, snapshot[src_id], mapping[src_id]),
+            None,
+        )
+    except Exception as e:
+        if not route:
+            raise
+        return None, None, "unknown_schema" if isinstance(e, KeyError) else "decode_error"
+
+
+def _replication_kernel(snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
+    """Plan-time build of the per-record replication: returns
+    ``replicate(raws) -> (keys, values, errors)`` over framed values.
+
+    Each schema id whose writer schema has a walker
+    (``avro_codec.compile_walker``) takes the header rewrite: the walker
+    checks the payload and finds ``id``, the key is the key frame plus the
+    payload's ``id`` bytes and the value is the payload under the target
+    id's frame — exactly the bytes the full path would encode, with no
+    decoded datum built. Any other record (unknown id, bad frame, a
+    payload the walker rejects, a schema it does not cover) takes
+    ``_reencode``, so both modes give the full path's output for every
+    input."""
+    key_frame = avro_codec.frame(key_schema_id, b"")
+    rewrites = {}
+    for sid, schema in snapshot.items():
+        walk = avro_codec.compile_walker(schema) if sid in mapping else None
+        if walk is not None:
+            rewrites[avro_codec.frame(sid, b"")] = (walk, avro_codec.frame(mapping[sid], b""))
+
+    def replicate(raws):
+        keys, values, errors = [], [], []
+        for raw in raws:
+            try:
+                walk, value_frame = rewrites[raw[:5]]
+                start, end = walk(raw, 5)
+            except Exception:  # whatever the cause, the full path decides
+                key, value, error = _reencode(raw, snapshot, mapping, key_schema_id, route)
+            else:
+                key, value, error = key_frame + raw[start:end], value_frame + raw[5:], None
+            keys.append(key)
+            values.append(value)
+            errors.append(error)
+        return keys, values, errors
+
+    return replicate
+
+
 def replicate_transform(
     env: DataFrame,
     schemas_by_id: dict,
@@ -132,17 +202,23 @@ def replicate_transform(
     on_error: str = "abort",
 ) -> DataFrame:
     """The record transform of the pipeline: for each source envelope row,
-    decode the Confluent-framed value, extract ``id``, emit the target
+    extract ``id`` from the Confluent-framed value and emit the target
     envelope with key = Avro-string(id) framed for the target registry and
-    value re-encoded under ITS OWN schema's target-registry id
+    value = the record under ITS OWN schema's target-registry id
     (``id_mapping``: source schema id → target schema id). Per-record
     schema dispatch mirrors the GenericRecord serde of the reference — a
     topic carrying several schema versions replicates each record under
     the matching propagated schema, exactly like KafkaAvroSerializer.
 
-    One mapInPandas pass — the distributed analog of the reference's
-    single listener loop (ReplicationApplication.java:63-78), preserving
-    (partition, offset) passthrough for downstream dedup/audit.
+    The value is re-encoded under its writer schema, so a payload that
+    re-encodes to itself needs only a new frame: the header rewrite of
+    ``_replication_kernel``, with the full decode → re-encode as the
+    fallback for every record the rewrite cannot vouch for.
+
+    One mapInArrow pass — the distributed analog of the reference's
+    single listener loop (ReplicationApplication.java:63-78); the
+    (partition, offset, timestamp) Arrow columns pass through untouched
+    for downstream dedup/audit.
 
     ``on_error`` picks what a bad record does:
 
@@ -164,53 +240,29 @@ def replicate_transform(
     if on_error not in ("abort", "route"):
         raise ValueError(f"on_error must be 'abort' or 'route', got {on_error!r}")
     route = on_error == "route"
-    snapshot = dict(schemas_by_id)
-    mapping = dict(id_mapping)
+    schema = DLQ_ENVELOPE if route else KAFKA_ENVELOPE
+    replicate = _replication_kernel(
+        dict(schemas_by_id), dict(id_mapping), key_schema_id, route
+    )
 
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, values, errors = [], [], []
-            for raw in pdf["value"]:
-                key = value = error = None
-                try:
-                    src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
-                    rid = record.get("id") if isinstance(record, dict) else None
-                    if rid is None:
-                        if not route:
-                            raise ValueError(
-                                "record has no 'id' field - aborting batch "
-                                "(reference parity: ReplicationApplication.java:71 "
-                                "NPE aborts the transaction)"
-                            )
-                        error = "missing_id"
-                    else:
-                        key = avro_codec.serialize_confluent(
-                            str(rid), STRING_SCHEMA, key_schema_id
-                        )
-                        value = avro_codec.serialize_confluent(
-                            record, snapshot[src_id], mapping[src_id]
-                        )
-                except Exception as e:
-                    if not route:
-                        raise
-                    key = value = None
-                    error = "unknown_schema" if isinstance(e, KeyError) else "decode_error"
-                keys.append(key)
-                values.append(value)
-                errors.append(error)
-            out = {
-                "key": keys,
-                "value": values,
-                "topic": target_topic,
-                "partition": pdf["partition"],
-                "offset": pdf["offset"],
-                "timestamp": pdf["timestamp"],
-            }
+    def transform(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            keys, values, errors = replicate(batch.column("value").to_pylist())
+            columns = [
+                pa.array(keys, pa.binary()),
+                pa.array(values, pa.binary()),
+                pa.array([target_topic] * batch.num_rows, pa.string()),
+                batch.column("partition"),
+                batch.column("offset"),
+                batch.column("timestamp"),
+            ]
             if route:
-                out["error"] = errors
-            yield pd.DataFrame(out)
+                columns.append(pa.array(errors, pa.string()))
+            yield pa.RecordBatch.from_arrays(columns, names=schema.fieldNames())
 
-    return env.mapInPandas(transform, schema=DLQ_ENVELOPE if route else KAFKA_ENVELOPE)
+    return env.select("value", "partition", "offset", "timestamp").mapInArrow(
+        transform, schema=schema
+    )
 
 
 def plan_replication(
@@ -379,7 +431,10 @@ class ReplicationProgressListener(StreamingQueryListener):
     metrics (ReplicationApplication.java:64 "Received batch of {} records",
     :73-75 per-record send, :101 post-commit ack log). Spark's listener
     bus delivers one progress event per micro-batch; we keep batch id,
-    input rows and throughput — what an operator dashboards at 100 TB."""
+    input rows, throughput and the phase durations (``durationMs``:
+    addBatch, walCommit, commitOffsets, latestOffset, queryPlanning,
+    getBatch, triggerExecution — whichever the batch ran) — what an
+    operator dashboards at 100 TB."""
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
@@ -395,6 +450,7 @@ class ReplicationProgressListener(StreamingQueryListener):
                 "batchId": p.batchId,
                 "numInputRows": p.numInputRows,
                 "processedRowsPerSecond": p.processedRowsPerSecond,
+                "durationMs": dict(p.durationMs),
             }
         )
 

@@ -93,6 +93,209 @@ def test_codec_long_roundtrip(n):
     assert avro_codec.decode(avro_codec.encode(n, "long"), "long") == n
 
 
+_FOO_ABC = {"id": "abc", "name": "hello"}
+_FIXED3 = {"type": "fixed", "name": "F3", "size": 3}
+
+
+@pytest.mark.parametrize(
+    "payload, schema, exc",
+    [
+        # a frame cut two bytes short used to decode as name="hel"
+        (avro_codec.encode(_FOO_ABC, R.FOO_SCHEMA)[:-2], R.FOO_SCHEMA, EOFError),
+        (b"\x06ab", "bytes", EOFError),
+        (b"ab", _FIXED3, EOFError),
+        (b"\x01abc", "string", ValueError),  # zigzag -1: read to the end
+        (b"\x01abc", "bytes", ValueError),
+        (b"", "boolean", EOFError),  # used to decode as False
+    ],
+    ids=["string_short", "bytes_short", "fixed_short", "string_negative_length",
+         "bytes_negative_length", "boolean_empty"],
+)
+def test_codec_short_read_raises(payload, schema, exc):
+    with pytest.raises(exc):
+        avro_codec.decode(payload, schema)
+
+
+def test_truncated_frame_no_longer_decodes_shortened():
+    frame = avro_codec.serialize_confluent(_FOO_ABC, R.FOO_SCHEMA, 1)
+    assert avro_codec.deserialize_confluent(frame, {1: R.FOO_SCHEMA}) == (1, _FOO_ABC)
+    with pytest.raises(EOFError):
+        avro_codec.deserialize_confluent(frame[:-2], {1: R.FOO_SCHEMA})
+
+
+# ---------------------------------------------------------------------------
+# header-rewrite kernel vs the full decode → re-encode path (no Spark)
+# ---------------------------------------------------------------------------
+ARRAY_SCHEMA = {
+    "type": "record",
+    "name": "Tagged",
+    "fields": [
+        {"name": "id", "type": "string"},
+        {"name": "tags", "type": {"type": "array", "items": "string"}},
+    ],
+}
+# source id → schema, source id → target id, as plan_replication builds them
+_SNAPSHOT = {1: R.FOO_SCHEMA, 2: R.FOO_SCHEMA_V2, 3: ARRAY_SCHEMA}
+_MAPPING = {1: 11, 2: 12, 3: 13}
+_KEY_ID = 10
+
+
+def _outcomes(raw, snapshot=_SNAPSHOT, mapping=_MAPPING):
+    """(key, value, error) of one framed value — or the exception's type
+    and message — from the kernel and from the full path, in both modes."""
+
+    def run(fn):
+        try:
+            return fn()
+        except Exception as e:  # abort mode: the error is the outcome
+            return type(e), str(e)
+
+    out = {}
+    for route in (False, True):
+        kernel = R._replication_kernel(snapshot, mapping, _KEY_ID, route)
+        out[route] = (
+            run(lambda: tuple(col[0] for col in kernel([raw]))),
+            run(lambda: R._reencode(raw, snapshot, mapping, _KEY_ID, route)),
+        )
+    return out
+
+
+def _mutations(frame: bytes, id_start: int, id_end: int):
+    """Damaged copies of a valid Foo frame; ``id_start:id_end`` is the id's
+    length prefix and bytes (frame offsets)."""
+    yield from (frame[:k] for k in range(len(frame)))  # truncation
+    yield b"\x01" + frame[1:]  # bad magic
+    yield avro_codec.frame(999, frame[5:])  # unknown schema id
+    n, at = avro_codec._walk_varint(frame, id_start)  # the id's length varint
+    yield frame[:at - 1] + bytes([frame[at - 1] | 0x80, 0]) + frame[at:]  # non-minimal
+    yield frame[:id_start] + b"\x01" + frame[at:]  # negative length (zigzag -1)
+    yield frame + b"\x00"  # one trailing byte
+    yield frame[:id_end] + bytes([4]) + frame[id_end + 1:]  # union index 2
+    if id_end > at:
+        yield frame[:at] + b"\xff" + frame[at + 1:]  # invalid UTF-8
+
+
+@given(
+    st.fixed_dictionaries(
+        {
+            # short ids, and ids of 64+ bytes, whose length takes a 2-byte varint
+            "id": st.one_of(st.text(max_size=8), st.text(min_size=64, max_size=90)),
+            "name": st.one_of(st.none(), st.text(max_size=20)),
+        }
+    ),
+    st.one_of(st.none(), st.text(max_size=8)),
+)
+@settings(max_examples=60, deadline=None)
+def test_kernel_matches_full_path_property(datum, tag):
+    """The header rewrite gives the full path's (key, value, error) byte for
+    byte in both on_error modes, on valid Foo v1/v2 frames (multi-byte
+    UTF-8, null names, 2-byte id lengths) and on damaged copies of them.
+    A record with a ``tag`` is a v2 record."""
+    sid, schema = (1, R.FOO_SCHEMA) if tag is None else (2, R.FOO_SCHEMA_V2)
+    if tag is not None:
+        datum = {**datum, "tag": tag}
+    frame = avro_codec.serialize_confluent(datum, schema, sid)
+    # the valid frame really takes the fast path, and finds the id
+    id_start, id_end = avro_codec.compile_walker(schema)(frame, 5)
+    assert frame[id_start:id_end] == avro_codec.encode(datum["id"], "string")
+    for raw in [frame, *_mutations(frame, id_start, id_end)]:
+        for route, (kernel, full) in _outcomes(raw).items():
+            assert kernel == full, (raw, route)
+    key, value, error = _outcomes(frame)[True][0]
+    assert error is None and value == avro_codec.frame(_MAPPING[sid], frame[5:])
+
+
+WALKABLE_SCHEMA = {
+    "type": "record",
+    "name": "Walkable",
+    "fields": [
+        {"name": "b", "type": "boolean"},
+        {"name": "i", "type": "int"},
+        {"name": "id", "type": "string"},
+        {"name": "l", "type": "long"},
+        {"name": "f", "type": "float"},
+        {"name": "d", "type": "double"},
+        {"name": "by", "type": "bytes"},
+        {"name": "e", "type": {"type": "enum", "name": "E", "symbols": ["A", "B", "C"]}},
+        {"name": "fx", "type": {"type": "fixed", "name": "FX", "size": 3}},
+        {"name": "u", "type": ["null", "long", "string",
+                               {"type": "record", "name": "In",
+                                "fields": [{"name": "x", "type": "boolean"}]}]},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "datum",
+    [
+        # f's bytes are 01 00 80 3F: a 0x7F in the last one makes a
+        # signaling NaN, which float32 -> float -> float32 does not keep
+        {"b": True, "i": -42, "id": "é1", "l": 1 << 40, "f": 1.0000001192092896, "d": -2.25,
+         "by": b"\x00\xff", "e": "C", "fx": b"abc", "u": None},
+        {"b": False, "i": 0, "id": "", "l": -(2**63), "f": float("nan"),
+         "d": float("inf"), "by": b"", "e": "A", "fx": b"\x80\x00\x01", "u": 2**63 - 1},
+        {"b": True, "i": 63, "id": "x" * 70, "l": 64, "f": -0.0, "d": 1e-310,
+         "by": b"\x01" * 70, "e": "B", "fx": b"zzz", "u": {"x": True}},
+    ],
+)
+def test_kernel_matches_full_path_on_every_walkable_type(datum):
+    """Every type the walker covers, on valid frames and on every
+    truncation, one extra byte, and each byte replaced by each of a few
+    values (varint continuation and sign bits, boolean 2, UTF-8 lead
+    bytes): the kernel's outcome equals the full path's in both modes."""
+    snapshot, mapping = {5: WALKABLE_SCHEMA}, {5: 15}
+    frame = avro_codec.serialize_confluent(datum, WALKABLE_SCHEMA, 5)
+    assert avro_codec.compile_walker(WALKABLE_SCHEMA)(frame, 5)  # the fast path
+    damaged = [frame[:k] for k in range(len(frame))] + [frame + b"\x01"]
+    for at in range(5, len(frame)):
+        for b in (0x00, 0x01, 0x02, 0x7F, 0x80, 0xC3, 0xFF):
+            damaged.append(frame[:at] + bytes([b]) + frame[at + 1:])
+    for raw in [frame, *damaged]:
+        for route, (kernel, full) in _outcomes(raw, snapshot, mapping).items():
+            assert kernel == full, (raw, route)
+
+
+def test_walker_covers_only_what_reencodes_exactly():
+    """Schemas the walker does not cover get no walker (the full path
+    replicates their records)."""
+    def rec(*fields):
+        return {"type": "record", "name": "R", "fields": [
+            {"name": n, "type": t} for n, t in fields]}
+
+    assert avro_codec.compile_walker(rec(("id", "string"))) is not None
+    for schema in [
+        "string",  # not a record
+        rec(("name", "string")),  # no id
+        rec(("id", ["null", "string"])),  # id not a plain string
+        rec(("id", "long")),
+        rec(("id", "string"), ("id", "string")),  # decode keeps the last
+        rec(("id", "string"), ("m", {"type": "map", "values": "long"})),
+        rec(("id", "string"), ("u", ["int", "long"])),  # one match class
+        rec(("id", "string"), ("u", ["string", {"type": "enum", "name": "E",
+                                                 "symbols": ["A"]}])),
+        rec(("id", "string"), ("e", {"type": "enum", "name": "E", "symbols": ["A", "A"]})),
+        rec(("id", "string"), ("fx", {"type": "fixed", "name": "F", "size": -1})),
+        rec(("id", "string"), ("r", rec(("x", "long"), ("x", "long")))),
+        rec(("id", "string"), ("r", "com.foo.Named")),  # named-type reference
+    ]:
+        assert avro_codec.compile_walker(schema) is None, schema
+
+
+def test_kernel_array_schema_takes_full_path():
+    """A schema the walker does not cover gets no walker, and its records
+    still replicate correctly through the full path."""
+    assert avro_codec.compile_walker(ARRAY_SCHEMA) is None
+    datum = {"id": "x7", "tags": ["a", "é"]}
+    raw = avro_codec.serialize_confluent(datum, ARRAY_SCHEMA, 3)
+    outcomes = _outcomes(raw)
+    for kernel, full in outcomes.values():
+        assert kernel == full
+    key, value, error = outcomes[True][0]
+    assert error is None
+    assert avro_codec.deserialize_confluent(key, {_KEY_ID: "string"}) == (_KEY_ID, "x7")
+    assert avro_codec.deserialize_confluent(value, {13: ARRAY_SCHEMA}) == (13, datum)
+
+
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -263,7 +466,9 @@ def test_dlq_transform_routes_all_three_error_classes(spark):
 def test_route_mode_replicates_good_records_like_abort_mode(spark):
     """On a clean Foo v1/v2 multi-schema topic the two on_error modes
     must agree byte for byte: every record's key and value from "route"
-    equal those from "abort", and no record carries an error class."""
+    equal those from "abort", and no record carries an error class. Both
+    carry the source envelope's partition, offset and timestamp through
+    exactly, values and types (distinct microsecond timestamps)."""
     import datetime as dt
 
     src_reg, tgt_reg = _fresh_registries()
@@ -280,15 +485,22 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
             payload = avro_codec.serialize_confluent(
                 {"id": str(i), "name": name}, R.FOO_SCHEMA, v1
             )
-        rows.append((None, payload, "source-topic-a", i % 3, i, dt.datetime(2024, 1, 1)))
+        ts = dt.datetime(2024, 3, 31, 1, 59, i, 1000 * i + 7)
+        rows.append((None, payload, "source-topic-a", i % 3, 5 * i, ts))
     env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+    source = {r["offset"]: r for r in env.collect()}
     # registration is idempotent, so both plans map onto the same target ids
     strict = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b")
     routed = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b", on_error="route")
     want = {r["offset"]: r for r in strict.collect()}
     got = {r["offset"]: r for r in routed.collect()}
-    assert len(want) == 40 and set(got) == set(want)
+    assert len(want) == 40 and set(got) == set(want) == set(source)
+    envelope = ("partition", "offset", "timestamp")
+    for out in (strict, routed):
+        assert [out.schema[c] for c in envelope] == [R.KAFKA_ENVELOPE[c] for c in envelope]
     for off, r in got.items():
+        for c in envelope:
+            assert r[c] == want[off][c] == source[off][c], (off, c)
         assert r["error"] is None
         assert bytes(r["key"]) == bytes(want[off]["key"])
         assert bytes(r["value"]) == bytes(want[off]["value"])
@@ -388,6 +600,8 @@ def test_progress_listener_observes_batches(spark, dirs):
     )
     assert lst.total_rows() == 7
     assert all(b["processedRowsPerSecond"] >= 0 for b in lst.batches)
+    # per-batch phase durations ride along (addBatch = the foreachBatch write)
+    assert all("addBatch" in b["durationMs"] for b in lst.batches)
 
 
 FOO_V2 = {
