@@ -15,18 +15,22 @@ Spark mapping implemented here:
 |    |                                    | cluster, maxOffsetsPerTrigger)   |
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
-| R3 | KafkaAvroDeserializer              | mapInArrow walk of each payload  |
-|    | (application.yml:12)               | with a per-schema walker compiled|
-|    |                                    | from the plan-time snapshot; full|
-|    |                                    | decode only as the fallback      |
-| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte span  |
+| R3 | KafkaAvroDeserializer              | mapInArrow: a per-schema walker  |
+|    | (application.yml:12)               | compiled from the plan-time      |
+|    |                                    | snapshot checks a whole batch's  |
+|    |                                    | payloads at once, columnar (numpy|
+|    |                                    | positions over the value buffer);|
+|    |                                    | full decode only as the fallback |
+| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte spans |
 | R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
 |    |                                    | (Avro string of id, serde parity)|
-| R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
-|    | (application.yml:15-16,README:27)  | 5-byte frame rewritten to the    |
-|    |                                    | target id + the writer's payload |
+| R6 | KafkaAvroSerializer + auto-register| register() at plan time; values =|
+|    | (application.yml:15-16,README:27)  | the input value buffer with each |
+|    |                                    | 5-byte frame's id rewritten to   |
+|    |                                    | the target id, offsets unchanged |
 |    |                                    | (fallback: full re-encode)       |
-| R7 | executeInTransaction (:66-78)      | foreachBatch: write data, then   |
+| R7 | executeInTransaction (:66-78)      | foreachBatch: write data (parquet|
+|    |                                    | without dictionaries), then      |
 | R8 | future.get barrier → abort (:80-94)| atomically create commit marker; |
 |    |                                    | any task failure fails the batch |
 |    |                                    | before the marker exists         |
@@ -42,11 +46,14 @@ once for committed readers, exactly the reference's contract.
 from __future__ import annotations
 
 import os
+import struct
 import threading
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -156,39 +163,71 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
 
 
 def _replication_kernel(snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
-    """Plan-time build of the per-record replication: returns
-    ``replicate(raws) -> (keys, values, errors)`` over framed values.
+    """Plan-time build of the batch replication: returns
+    ``replicate(raws) -> (keys, values, errors)``, Arrow arrays in and out
+    over a binary array of framed values.
 
     Each schema id whose writer schema has a walker
-    (``avro_codec.compile_walker``) takes the header rewrite: the walker
-    checks the payload and finds ``id``, the key is the key frame plus the
-    payload's ``id`` bytes and the value is the payload under the target
-    id's frame — exactly the bytes the full path would encode, with no
-    decoded datum built. Any other record (unknown id, bad frame, a
-    payload the walker rejects, a schema it does not cover) takes
-    ``_reencode``, so both modes give the full path's output for every
-    input."""
-    key_frame = avro_codec.frame(key_schema_id, b"")
+    (``avro_codec.compile_walker``) takes the header rewrite, columnar over
+    the whole batch: the walker checks its payloads and finds each ``id``
+    span; the key is the key frame plus those bytes, and the value is a
+    copy of the input value buffer with the 4 schema-id bytes rewritten to
+    the target id at each row's offset — exactly the bytes the full path
+    would encode, with no decoded datum built. Every row the walker does
+    not vouch for (null, bad frame, unknown id, a schema it does not cover,
+    a payload it rejects) goes through ``_reencode`` in row order and is
+    merged in, so both modes give the full path's output for every input,
+    and abort mode raises the first failing row's error."""
+    key_frame = np.frombuffer(avro_codec.frame(key_schema_id, b""), np.uint8)
     rewrites = {}
     for sid, schema in snapshot.items():
         walk = avro_codec.compile_walker(schema) if sid in mapping else None
         if walk is not None:
-            rewrites[avro_codec.frame(sid, b"")] = (walk, avro_codec.frame(mapping[sid], b""))
+            rewrites[sid] = (walk, np.frombuffer(struct.pack(">I", mapping[sid]), np.uint8))
 
-    def replicate(raws):
-        keys, values, errors = [], [], []
-        for raw in raws:
-            try:
-                walk, value_frame = rewrites[raw[:5]]
-                start, end = walk(raw, 5)
-            except Exception:  # whatever the cause, the full path decides
-                key, value, error = _reencode(raw, snapshot, mapping, key_schema_id, route)
-            else:
-                key, value, error = key_frame + raw[start:end], value_frame + raw[5:], None
-            keys.append(key)
-            values.append(value)
-            errors.append(error)
-        return keys, values, errors
+    def replicate(raws: pa.Array):
+        n = len(raws)
+        data, offsets = avro_codec.binary_buffers(raws)
+        start, end = offsets[:-1], offsets[1:]
+        ok = np.zeros(n, bool)
+        id_start, id_end = np.zeros(n, np.int64), np.zeros(n, np.int64)
+        values = data.copy()
+        if data.size:
+            header = data.take(start[:, None] + np.arange(5), mode="clip")
+            framed = (end - start >= 5) & (header[:, 0] == 0)
+            if raws.null_count:
+                framed &= raws.is_valid().to_numpy(zero_copy_only=False)
+            sids = header[:, 1:].copy().view(">u4")[:, 0]
+            for sid, (walk, target) in rewrites.items():
+                rows = np.flatnonzero(framed & (sids == sid))
+                if not rows.size:
+                    continue
+                good, a, b = walk(data, start[rows] + 5, end[rows])
+                rows = rows[good]
+                ok[rows], id_start[rows], id_end[rows] = True, a[good], b[good]
+                values[start[rows, None] + np.arange(1, 5)] = target
+        # key = key frame + id span: two spans per row over key frame ++
+        # value bytes (both empty where not ok)
+        source = np.concatenate([key_frame, data])
+        span_start = np.column_stack([np.zeros(n, np.int64), id_start + 5]).ravel()
+        span_stop = np.column_stack([np.where(ok, 5, 0), np.where(ok, id_end, id_start) + 5]).ravel()
+        key_offsets, key_bytes = avro_codec.gather_spans(source, span_start, span_stop)
+        keys = avro_codec.binary_array(key_offsets[::2], key_bytes)
+        values = avro_codec.binary_array(offsets, values)
+        errors = pa.nulls(n, pa.string())
+        slow = np.flatnonzero(~ok)
+        if not slow.size:
+            return keys, values, errors
+        out = [_reencode(raw, snapshot, mapping, key_schema_id, route)
+               for raw in raws.take(pa.array(slow)).to_pylist()]
+        # row -> its place in ``out`` (fast rows: any, if_else ignores it)
+        pick = pa.array(np.maximum(np.cumsum(~ok) - 1, 0))
+        fast = pa.array(ok)
+        merged = [
+            pc.if_else(fast, arr, pa.array(col, arr.type).take(pick))
+            for arr, col in zip((keys, values, errors), zip(*out))
+        ]
+        return tuple(merged)
 
     return replicate
 
@@ -247,17 +286,17 @@ def replicate_transform(
 
     def transform(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            keys, values, errors = replicate(batch.column("value").to_pylist())
+            keys, values, errors = replicate(batch.column("value"))
             columns = [
-                pa.array(keys, pa.binary()),
-                pa.array(values, pa.binary()),
+                keys,
+                values,
                 pa.array([target_topic] * batch.num_rows, pa.string()),
                 batch.column("partition"),
                 batch.column("offset"),
                 batch.column("timestamp"),
             ]
             if route:
-                columns.append(pa.array(errors, pa.string()))
+                columns.append(errors)
             yield pa.RecordBatch.from_arrays(columns, names=schema.fieldNames())
 
     return env.select("value", "partition", "offset", "timestamp").mapInArrow(
@@ -326,7 +365,9 @@ def _committing_writer(marker_dir: str, outputs):
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
         for df, target_dir in outputs(batch_df):
-            df.write.mode("overwrite").parquet(
+            # no dictionaries: keys, values and offsets are unique per
+            # record, so parquet would build each dictionary only to drop it
+            df.write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(
                 os.path.join(target_dir, "data", str(batch_id))
             )
         os.makedirs(os.path.dirname(marker), exist_ok=True)
@@ -364,7 +405,9 @@ def dlq_batch_writer(main_dir: str, dlq_dir: str):
 def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: int) -> None:
     """Run a replication stream once to the end of its source: every
     available offset, each micro-batch through ``writer``, offsets acked
-    in ``checkpoint_dir`` after the writer returns (availableNow)."""
+    in ``checkpoint_dir`` after the writer returns (availableNow). Raises
+    ``TimeoutError`` after stopping a stream that has not drained within
+    ``timeout_sec``; its checkpoint lets a rerun resume."""
     q = (
         out.writeStream.foreachBatch(writer)
         .option("checkpointLocation", checkpoint_dir)
@@ -372,9 +415,14 @@ def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: int) -> Non
         .start()
     )
     try:
-        q.awaitTermination(timeout_sec)
+        drained = q.awaitTermination(timeout_sec)
     finally:
         q.stop()
+    if not drained:
+        raise TimeoutError(
+            f"replication stream did not drain within {timeout_sec} s "
+            f"(checkpoint {checkpoint_dir})"
+        )
 
 
 def replicate_stream_dlq(

@@ -297,7 +297,9 @@ def run_to_memory(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink; return
-    the sink contents as a batch DataFrame.
+    the sink contents as a batch DataFrame. A stream still running after
+    ``timeout_sec`` is stopped and raises ``TimeoutError`` (its memory
+    table would hold only part of the result).
 
     Stateful operators create one state store per shuffle partition; the
     partition count is pinned into the checkpoint at first start. For
@@ -333,7 +335,11 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
-        q.awaitTermination(timeout_sec)
+        finished = q.awaitTermination(timeout_sec)
     finally:
         q.stop()
+    if not finished:  # the memory table would hold a partial result
+        raise TimeoutError(
+            f"stream {name} did not finish within {timeout_sec} s (checkpoint {ckpt})"
+        )
     return spark.table(name)

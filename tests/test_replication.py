@@ -13,9 +13,14 @@ missing id, and idempotent replay of a committed batch.
 
 from __future__ import annotations
 
+import math
 import os
+import re
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -154,10 +159,20 @@ def _outcomes(raw, snapshot=_SNAPSHOT, mapping=_MAPPING):
     for route in (False, True):
         kernel = R._replication_kernel(snapshot, mapping, _KEY_ID, route)
         out[route] = (
-            run(lambda: tuple(col[0] for col in kernel([raw]))),
+            run(lambda: tuple(col[0].as_py() for col in kernel(pa.array([raw], pa.binary())))),
             run(lambda: R._reencode(raw, snapshot, mapping, _KEY_ID, route)),
         )
     return out
+
+
+def _walk_one(schema, frame: bytes):
+    """The ``id`` span (frame offsets) the columnar walker finds in one
+    framed value, or None where it declines the payload."""
+    data = np.frombuffer(frame, np.uint8)
+    ok, id_start, id_end = avro_codec.compile_walker(schema)(
+        data, np.array([5]), np.array([len(frame)])
+    )
+    return (int(id_start[0]), int(id_end[0])) if ok[0] else None
 
 
 def _mutations(frame: bytes, id_start: int, id_end: int):
@@ -166,7 +181,9 @@ def _mutations(frame: bytes, id_start: int, id_end: int):
     yield from (frame[:k] for k in range(len(frame)))  # truncation
     yield b"\x01" + frame[1:]  # bad magic
     yield avro_codec.frame(999, frame[5:])  # unknown schema id
-    n, at = avro_codec._walk_varint(frame, id_start)  # the id's length varint
+    at = id_start + 1  # past the id's length varint
+    while frame[at - 1] & 0x80:
+        at += 1
     yield frame[:at - 1] + bytes([frame[at - 1] | 0x80, 0]) + frame[at:]  # non-minimal
     yield frame[:id_start] + b"\x01" + frame[at:]  # negative length (zigzag -1)
     yield frame + b"\x00"  # one trailing byte
@@ -175,16 +192,16 @@ def _mutations(frame: bytes, id_start: int, id_end: int):
         yield frame[:at] + b"\xff" + frame[at + 1:]  # invalid UTF-8
 
 
-@given(
-    st.fixed_dictionaries(
-        {
-            # short ids, and ids of 64+ bytes, whose length takes a 2-byte varint
-            "id": st.one_of(st.text(max_size=8), st.text(min_size=64, max_size=90)),
-            "name": st.one_of(st.none(), st.text(max_size=20)),
-        }
-    ),
-    st.one_of(st.none(), st.text(max_size=8)),
+_FOO_DATUM = st.fixed_dictionaries(
+    {
+        # short ids, and ids of 64+ bytes, whose length takes a 2-byte varint
+        "id": st.one_of(st.text(max_size=8), st.text(min_size=64, max_size=90)),
+        "name": st.one_of(st.none(), st.text(max_size=20)),
+    }
 )
+
+
+@given(_FOO_DATUM, st.one_of(st.none(), st.text(max_size=8)))
 @settings(max_examples=60, deadline=None)
 def test_kernel_matches_full_path_property(datum, tag):
     """The header rewrite gives the full path's (key, value, error) byte for
@@ -196,7 +213,7 @@ def test_kernel_matches_full_path_property(datum, tag):
         datum = {**datum, "tag": tag}
     frame = avro_codec.serialize_confluent(datum, schema, sid)
     # the valid frame really takes the fast path, and finds the id
-    id_start, id_end = avro_codec.compile_walker(schema)(frame, 5)
+    id_start, id_end = _walk_one(schema, frame)
     assert frame[id_start:id_end] == avro_codec.encode(datum["id"], "string")
     for raw in [frame, *_mutations(frame, id_start, id_end)]:
         for route, (kernel, full) in _outcomes(raw).items():
@@ -245,7 +262,8 @@ def test_kernel_matches_full_path_on_every_walkable_type(datum):
     bytes): the kernel's outcome equals the full path's in both modes."""
     snapshot, mapping = {5: WALKABLE_SCHEMA}, {5: 15}
     frame = avro_codec.serialize_confluent(datum, WALKABLE_SCHEMA, 5)
-    assert avro_codec.compile_walker(WALKABLE_SCHEMA)(frame, 5)  # the fast path
+    # the fast path, but for a NaN float, which the walker declines
+    assert (_walk_one(WALKABLE_SCHEMA, frame) is None) == math.isnan(datum["f"])
     damaged = [frame[:k] for k in range(len(frame))] + [frame + b"\x01"]
     for at in range(5, len(frame)):
         for b in (0x00, 0x01, 0x02, 0x7F, 0x80, 0xC3, 0xFF):
@@ -253,6 +271,90 @@ def test_kernel_matches_full_path_on_every_walkable_type(datum):
     for raw in [frame, *damaged]:
         for route, (kernel, full) in _outcomes(raw, snapshot, mapping).items():
             assert kernel == full, (raw, route)
+
+
+def _walkable_payload(**raw: bytes) -> bytes:
+    """A WALKABLE_SCHEMA payload (no NaN, a 10-byte ``l``) built field by
+    field; ``raw`` gives some fields' bytes instead of their encoding."""
+    datum = {"b": True, "i": 1, "id": "k", "l": -(2**63), "f": 0.5, "d": 2.0,
+             "by": b"", "e": "C", "fx": b"xyz", "u": 5}
+    return b"".join(
+        raw[f["name"]] if f["name"] in raw else avro_codec.encode(datum[f["name"]], f["type"])
+        for f in WALKABLE_SCHEMA["fields"]
+    )
+
+
+@pytest.mark.parametrize(
+    "raw",
+    [
+        {"l": b"\xff" * 9 + b"\x02"},  # 2**64 or more
+        {"l": b"\xff" * 10 + b"\x01"},  # over-long: 11 bytes
+        {"i": b"\x82\x00"},  # non-minimal
+        {"b": b"\x02"},
+        {"e": b"\x06"},  # enum index 3 of 3 symbols
+        {"e": b"\x01"},  # enum index -1
+        {"u": b"\x08"},  # union index 4 of 4 branches
+        {"by": b"\x03"},  # length -2
+        {"by": b"\x40"},  # length 32, past the end
+        {"fx": b"xy"},  # fixed short: the payload ends early
+        {"u": b"\x02\x0a\x00"},  # one trailing byte
+        # NaN, quiet or signaling, declines whether or not its bits would
+        # survive decode -> encode (a signaling float32 NaN would not)
+        {"f": b"\x00\x00\xc0\x7f"},
+        {"f": b"\x01\x00\x80\x7f"},
+        {"d": b"\x00\x00\x00\x00\x00\x00\xf8\x7f"},
+        {"d": b"\x01\x00\x00\x00\x00\x00\xf0\xff"},
+    ],
+    ids=["l_2pow64", "l_overlong", "i_nonminimal", "boolean_2", "enum_3", "enum_neg",
+         "union_4", "bytes_neg", "bytes_past_end", "fixed_short", "trailing_byte",
+         "float_quiet_nan", "float_signaling_nan", "double_quiet_nan",
+         "double_signaling_nan"],
+)
+def test_walker_declines_what_the_full_path_would_not_give_back(raw):
+    """Each check of the walker, on its own: a payload one field away
+    from a walkable one is declined, and the kernel still gives the full
+    path's outcome for it in both modes. The walker is conservative on
+    NaN: it declines every NaN float or double."""
+    snapshot, mapping = {5: WALKABLE_SCHEMA}, {5: 15}
+    assert _walk_one(WALKABLE_SCHEMA, avro_codec.frame(5, _walkable_payload())) is not None
+    frame = avro_codec.frame(5, _walkable_payload(**raw))
+    assert _walk_one(WALKABLE_SCHEMA, frame) is None
+    for kernel, full in _outcomes(frame, snapshot, mapping).values():
+        assert kernel == full
+
+
+def _reference_varint(b: bytes):
+    """(value, size) of the varint that starts ``b`` as the scalar codec
+    reads it, or None unless _write_varint writes exactly those bytes."""
+    import io
+
+    buf = io.BytesIO(b)
+    try:
+        value = avro_codec._read_varint(buf)
+    except EOFError:
+        return None
+    out = io.BytesIO()
+    avro_codec._write_varint(out, value)
+    size = buf.tell()
+    return (value, size) if value < 2**64 and out.getvalue() == b[:size] else None
+
+
+@given(st.one_of(
+    st.binary(min_size=1, max_size=12),
+    st.integers(0, 2**64 - 1).map(lambda n: avro_codec.encode(n >> 1 ^ -(n & 1), "long")),
+    st.lists(st.sampled_from([0x80, 0xFF, 0x81]), min_size=9, max_size=11).map(bytes).flatmap(
+        lambda head: st.sampled_from([head + bytes([t]) for t in (0, 1, 2, 0x7F)])),
+))
+@settings(max_examples=300, deadline=None)
+def test_columnar_varint_reads_exactly_the_shortest_encodings(b):
+    """The walker's varint reader accepts a varint exactly where the
+    scalar codec reads a value below 2**64 that it would write back with
+    the same bytes, and then agrees on the value and the size."""
+    value, nxt, ok = avro_codec._varint(np.frombuffer(b, np.uint8), np.array([0]))
+    want = _reference_varint(b)
+    assert bool(ok[0]) == (want is not None), b
+    if want is not None:
+        assert (int(value[0]), int(nxt[0])) == want
 
 
 def test_walker_covers_only_what_reencodes_exactly():
@@ -296,6 +398,120 @@ def test_kernel_array_schema_takes_full_path():
     assert avro_codec.deserialize_confluent(value, {13: ARRAY_SCHEMA}) == (13, datum)
 
 
+def _kernel_rows(values: pa.Array, route: bool):
+    """The kernel's (key, value, error) rows for a batch of framed values
+    or, when it raises, the exception's type and message."""
+    try:
+        columns = R._replication_kernel(_SNAPSHOT, _MAPPING, _KEY_ID, route)(values)
+    except Exception as e:
+        return type(e), str(e)
+    return list(zip(*(c.to_pylist() for c in columns)))
+
+
+def _full_path_rows(raws: list, route: bool):
+    """Per-row ``_reencode`` of each value: its (key, value, error) rows
+    or, in abort mode, the first failing row's exception type and message."""
+    rows = []
+    for raw in raws:
+        try:
+            rows.append(R._reencode(raw, _SNAPSHOT, _MAPPING, _KEY_ID, route))
+        except Exception as e:
+            return type(e), str(e)
+    return rows
+
+
+@given(
+    st.lists(st.tuples(_FOO_DATUM, st.one_of(st.none(), st.text(max_size=8))),
+             min_size=1, max_size=4),
+    st.randoms(use_true_random=False),
+)
+@settings(max_examples=25, deadline=None)
+def test_kernel_matches_full_path_on_mixed_batches(datums, rnd):
+    """One batch mixing Foo v1/v2 frames, their damaged copies, nulls,
+    unknown ids and records of a schema the walker does not cover, in a
+    shuffled order: the kernel's (key, value, error) columns equal per-row
+    ``_reencode`` in both modes, on the whole array and on a slice with a
+    non-zero offset; in abort mode it raises the first failing row's
+    error. Where no row fails, abort mode replicates the whole batch."""
+    clean = [avro_codec.serialize_confluent({"id": "x7", "tags": ["a", "é"]}, ARRAY_SCHEMA, 3)]
+    raws = [None, None, avro_codec.serialize_confluent({"id": "u", "name": None}, R.FOO_SCHEMA, 999)]
+    for datum, tag in datums:
+        sid, schema = (1, R.FOO_SCHEMA) if tag is None else (2, R.FOO_SCHEMA_V2)
+        frame = avro_codec.serialize_confluent(
+            datum if tag is None else {**datum, "tag": tag}, schema, sid
+        )
+        clean.append(frame)
+        raws.extend(_mutations(frame, *_walk_one(schema, frame)))
+    raws.extend(clean * 2)
+    rnd.shuffle(raws)
+    rnd.shuffle(clean)
+    values = pa.array(raws, pa.binary())
+    lo = rnd.randrange(1, len(raws))
+    hi = rnd.randrange(lo, len(raws) + 1)
+    for arr, rows in ((values, raws), (values.slice(lo, hi - lo), raws[lo:hi]),
+                      (pa.array(clean, pa.binary()), clean)):
+        for route in (False, True):
+            assert _kernel_rows(arr, route) == _full_path_rows(rows, route), (route, arr.offset)
+    assert _kernel_rows(pa.array(clean, pa.binary()), False) == _full_path_rows(clean, True)
+
+
+def _utf8_cases() -> list[bytes]:
+    """Every 1- and 2-byte sequence, the 3- and 4-byte edges (surrogates,
+    overlongs, the end of Unicode), truncated sequences alone and between
+    ASCII, and a few valid multi-character strings."""
+    cases = [bytes([a]) for a in range(256)]
+    cases += [bytes([a, b]) for a in range(256) for b in range(256)]
+    cases += [bytes.fromhex(h) for h in (
+        "eda080", "edbfbf", "ed9fbf", "ee8080",  # surrogates and their neighbours
+        "c080", "c1bf", "c280", "e08080", "e09fbf", "e0a080",  # overlongs and the
+        "f0808080", "f08fbfbf", "f0908080",  # first non-overlong of each width
+        "f48fbfbf", "f4908080", "f5808080", "f8888080", "ffbfbfbf",  # U+10FFFF and past
+        "efbfbf", "efbbbf", "e282ac",
+    )]
+    for c in ("é", "€", "日", "😀"):
+        full = c.encode()
+        cases += [full[:k] for k in range(1, len(full))]
+        cases += [b"a" + full[:k] + b"b" for k in range(1, len(full))]
+        cases += [full[k:] for k in range(1, len(full))]
+    cases += ["héllo wörld".encode(), "日本語😀".encode(), b""]
+    return cases
+
+
+def _is_utf8(b: bytes) -> bool:
+    try:
+        b.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    return True
+
+
+def test_arrow_utf8_check_agrees_with_python():
+    """The kernel checks UTF-8 by casting the non-ASCII string spans of a
+    batch to ``pa.string()``: that cast must accept exactly what
+    ``bytes.decode("utf-8")`` accepts, span by span (a sequence split
+    across two spans is invalid in each). The walker, on one batch of all
+    the cases, vouches for exactly the payloads whose string decodes."""
+    cases = _utf8_cases()
+    valid = [c for c in cases if _is_utf8(c)]
+    invalid = [c for c in cases if not _is_utf8(c)]
+    assert len(valid) > 18000 and len(invalid) > 45000
+    pa.array(valid, pa.binary()).cast(pa.string())  # every valid span at once
+    for c in invalid:
+        with pytest.raises(pa.ArrowInvalid):
+            pa.array([c], pa.binary()).cast(pa.string())
+    with pytest.raises(pa.ArrowInvalid):
+        pa.array(["é".encode()[:1], "é".encode()[1:]], pa.binary()).cast(pa.string())
+
+    schema = {"type": "record", "name": "S", "fields": [{"name": "id", "type": "string"}]}
+    walk = avro_codec.compile_walker(schema)
+    for batch in (valid, cases):  # the cast passes; the cast raises
+        payloads = [avro_codec.encode(len(c), "long") + c for c in batch]
+        data = np.frombuffer(b"".join(payloads), np.uint8)
+        end = np.cumsum([len(p) for p in payloads])
+        ok, _, _ = walk(data, end - [len(p) for p in payloads], end)
+        assert ok.tolist() == [_is_utf8(c) for c in batch]
+
+
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -321,6 +537,24 @@ def dirs(tmp_path_factory):
         "tgt": os.path.join(base, "target-topic-b"),
         "ckpt": os.path.join(base, "ckpt"),
     }
+
+
+def dictionary_encoded_chunks(target_dir: str) -> list[tuple[str, str]]:
+    """(file, column) of every column chunk in the committed parquet files
+    under ``target_dir`` whose footer lists a dictionary encoding or page."""
+    found = []
+    for batch in os.listdir(os.path.join(target_dir, "data")):
+        batch_dir = os.path.join(target_dir, "data", batch)
+        files = [f for f in os.listdir(batch_dir) if f.endswith(".parquet")]
+        assert files, batch_dir
+        for f in files:
+            meta = pq.ParquetFile(os.path.join(batch_dir, f)).metadata
+            for g in range(meta.num_row_groups):
+                for c in range(meta.num_columns):
+                    chunk = meta.row_group(g).column(c)
+                    if chunk.has_dictionary_page or any("DICTIONARY" in e for e in chunk.encodings):
+                        found.append((f, chunk.path_in_schema))
+    return found
 
 
 def _fresh_registries():
@@ -353,6 +587,8 @@ def test_replication_golden(spark, dirs):
     assert row["id"] == rid                 # value round-trips field-equal
     assert row["name"] is None
     assert row["topic"] == "target-topic-b"
+    # the commit writer builds no parquet dictionaries
+    assert dictionary_encoded_chunks(dirs["tgt"]) == []
 
 
 def test_schema_auto_registered_on_target(spark, dirs):
@@ -393,6 +629,28 @@ def test_missing_id_aborts_batch(spark, dirs):
             "target-topic-b", bad_schema, dirs["ckpt"], timeout_sec=60,
         )
     assert R.read_committed(spark, dirs["tgt"]).count() == 0
+
+
+def test_timed_out_drain_raises(spark, dirs):
+    """A drain still running at its timeout is stopped and raises
+    ``TimeoutError`` naming its checkpoint, instead of returning as if the
+    topic were replicated; so does ``run_to_memory``, instead of handing
+    back a partial memory table."""
+    from avro_topic_replication_spark.streaming.replay import run_to_memory
+
+    src_reg, tgt_reg = _fresh_registries()
+    R.write_envelope_fixture(
+        spark, [{"id": "1", "name": None}], dirs["src"], "source-topic-a",
+        src_reg, R.FOO_SCHEMA,
+    )
+    with pytest.raises(TimeoutError, match=re.escape(dirs["ckpt"])):
+        R.replicate_stream(  # pyspark rejects a timeout of 0
+            spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
+            "target-topic-b", R.FOO_SCHEMA, dirs["ckpt"], timeout_sec=0.001,
+        )
+    stream = spark.readStream.schema(R.KAFKA_ENVELOPE).parquet(dirs["src"])
+    with pytest.raises(TimeoutError, match="did not finish within"):
+        run_to_memory(stream, timeout_sec=0.001)
 
 
 def test_idempotent_replay_of_committed_batch(spark, dirs):

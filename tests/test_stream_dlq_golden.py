@@ -13,15 +13,21 @@ schema, tolerant transform wiring) can no longer hide behind rows-only.
 
 from __future__ import annotations
 
+import glob
 import os
+
+from tests.test_replication import dictionary_encoded_chunks
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
     from avro_topic_replication_spark.queries import all_queries
+    from avro_topic_replication_spark.streaming.replay import SCRATCH
 
     qs = all_queries()
+    runs = os.path.join(SCRATCH, "replq-dlq", "*", "*")
+    before = set(glob.glob(runs))
     batch = {
         r["disposition"]: r
         for r in qs["replication_dlq_routing"].fn(spark, SF_DIR).collect()
@@ -49,3 +55,9 @@ def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
     # distinct decoded ids (read back from the COMMITTED main sink) must
     # match the batch arm's driver-hash-verified count.
     assert stream["ok"]["n_distinct"] == batch["ok"]["n_distinct_ids"]
+
+    # Both sinks of the stream arm were written without parquet
+    # dictionaries (the run's scope dir is the one the query just made).
+    (run,) = set(glob.glob(runs)) - before
+    for sink in ("target-topic-b", "target-topic-b-dlq"):
+        assert dictionary_encoded_chunks(os.path.join(run, sink)) == [], sink
