@@ -60,6 +60,19 @@ def table_schema(spark: SparkSession, path: str) -> StructType:
     return schema
 
 
+def _parquet_files(path: str) -> "list[str]":
+    """A table's parquet files: the file itself, or a Spark-written
+    directory's part files in name order (markers and hidden files
+    skipped)."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 # Footer-statistics cache, same key discipline as _SCHEMA_CACHE: metadata
 # only, never data. Used for plan-shape decisions that need a column
 # bound (e.g. "do two custkeys fit one packed int64?") without spending a
@@ -85,15 +98,8 @@ def column_max(sf_dir: str, table: str, column: str) -> "int | float | None":
     try:
         import pyarrow.parquet as pq
 
-        files = [path]
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in sorted(os.listdir(path))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
         mx: "int | float | None" = None
-        for fp in files:
+        for fp in _parquet_files(path):
             pf = pq.ParquetFile(fp)
             idx = pf.schema_arrow.get_field_index(column)
             if idx < 0:
@@ -137,14 +143,7 @@ def table_row_groups(path: str) -> "int | None":
     try:
         import pyarrow.parquet as pq
 
-        files = [path]
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in sorted(os.listdir(path))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        n = sum(pq.ParquetFile(fp).metadata.num_row_groups for fp in files)
+        n = sum(pq.ParquetFile(fp).metadata.num_row_groups for fp in _parquet_files(path))
     except Exception:
         n = None
     _ROWGROUPS_CACHE[key] = n

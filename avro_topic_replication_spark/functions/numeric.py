@@ -36,6 +36,16 @@ def dec_sum_sql(expr: str, round_to: int = 2) -> str:
     return f"CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL({PREC},{SCALE}))), {round_to}) AS DOUBLE)"
 
 
+def dec_sum_exact(col: Column | str) -> Column:
+    """Exact decimal SUM, unrounded, emitted as double via the string hop
+    both engines print identically."""
+    return F.sum(dec(col)).cast("string").cast("double")
+
+
+def dec_sum_exact_sql(expr: str) -> str:
+    return f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL({PREC},{SCALE}))) AS VARCHAR) AS DOUBLE)"
+
+
 def dec_avg(col: Column | str) -> Column:
     """Order-independent AVG: exact decimal sum, one IEEE divide at the end."""
     c = F.col(col) if isinstance(col, str) else col

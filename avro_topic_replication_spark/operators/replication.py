@@ -454,13 +454,23 @@ def replicate_stream_dlq(
     _drain(out, dlq_batch_writer(main_dir, dlq_dir), checkpoint_dir, timeout_sec)
 
 
-def read_committed(spark: SparkSession, target_dir: str) -> DataFrame:
+def read_committed(
+    spark: SparkSession,
+    target_dir: str,
+    marker_dir: str | None = None,
+    schema: StructType = KAFKA_ENVELOPE,
+) -> DataFrame:
     """R2 on the output side: expose only batches whose commit marker
     exists (the read_committed isolation the reference's downstream
-    consumers rely on, application.yml:10)."""
-    commits = os.path.join(target_dir, "commits")
+    consumers rely on, application.yml:10). Data is read from
+    ``target_dir`` with ``schema``; markers from ``marker_dir``, which
+    defaults to ``target_dir``. A dead-letter sink shares the main sink's
+    markers (``dlq_batch_writer``), so it reads as
+    ``read_committed(spark, dlq_dir, marker_dir=main_dir,
+    schema=DLQ_ENVELOPE)``."""
+    commits = os.path.join(marker_dir or target_dir, "commits")
     if not os.path.isdir(commits):
-        return spark.createDataFrame([], KAFKA_ENVELOPE)
+        return spark.createDataFrame([], schema)
     dirs = [
         os.path.join(target_dir, "data", b)
         # digit-only filter: a crash between the tmp-marker write and its
@@ -470,8 +480,8 @@ def read_committed(spark: SparkSession, target_dir: str) -> DataFrame:
         if os.path.isdir(os.path.join(target_dir, "data", b))
     ]
     if not dirs:
-        return spark.createDataFrame([], KAFKA_ENVELOPE)
-    return spark.read.schema(KAFKA_ENVELOPE).parquet(*dirs)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
 
 
 class ReplicationProgressListener(StreamingQueryListener):
@@ -586,33 +596,59 @@ def write_envelope_fixture(
 def decode_envelope(
     env: DataFrame, schemas_by_id: dict, value_schema
 ) -> DataFrame:
-    """Consumer-side deserializer (KafkaAvroDeserializer analog used by
-    the golden test to verify the target topic): key as Avro string,
-    value decoded into typed columns of the Foo fixture shape."""
+    """Consumer-side deserializer (KafkaAvroDeserializer analog): key as
+    an Avro string, each value decoded with its writer schema (Confluent
+    frame id -> ``schemas_by_id``) and resolved onto the reader record
+    ``value_schema``, one column per reader field, between ``kafka_key``
+    and ``topic, offset``. Avro record resolution: a reader field the
+    writer has takes the written value, one it lacks takes its default,
+    writer-only fields drop. Reader fields must be ``string`` or
+    ``["null", "string"]``; anything else raises here, at plan time."""
     snapshot = dict(schemas_by_id)
+    reader = avro_codec.parse_schema(value_schema)
+    fields = reader["fields"]
+    for f in fields:
+        if f["type"] not in ("string", ["null", "string"]):
+            raise ValueError(
+                f"decode_envelope reads string fields only; {f['name']!r} is {f['type']!r}"
+            )
+    names = [f["name"] for f in fields]
+    defaults = [f.get("default") for f in fields]
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        resolved: set = set()  # writer schema ids checked against the reader
         for pdf in batches:
-            out_keys, ids, names = [], [], []
-            for kraw, vraw in zip(pdf["key"], pdf["value"]):
-                if kraw is None:
-                    out_keys.append(None)
-                else:
-                    _, k = avro_codec.deserialize_confluent(bytes(kraw), snapshot)
-                    out_keys.append(k)
-                _, record = avro_codec.deserialize_confluent(bytes(vraw), snapshot)
-                ids.append(record.get("id"))
-                names.append(record.get("name"))
+            out_keys = [
+                None if kraw is None
+                else avro_codec.deserialize_confluent(bytes(kraw), snapshot)[1]
+                for kraw in pdf["key"]
+            ]
+            cols: list[list] = [[] for _ in names]
+            for vraw in pdf["value"]:
+                sid, record = avro_codec.deserialize_confluent(bytes(vraw), snapshot)
+                if sid not in resolved:
+                    # the codec's resolution raises, once per writer schema,
+                    # on one the reader cannot read (not a record, or a
+                    # reader field it lacks has no default); past that each
+                    # field is the written value or the reader's default
+                    avro_codec.resolve(record, snapshot[sid], reader)
+                    resolved.add(sid)
+                for col, name, default in zip(cols, names, defaults):
+                    col.append(record.get(name, default))
             yield pd.DataFrame(
                 {
                     "kafka_key": out_keys,
-                    "id": ids,
-                    "name": names,
+                    **dict(zip(names, cols)),
                     "topic": pdf["topic"],
                     "offset": pdf["offset"],
                 }
             )
 
     return env.mapInPandas(
-        dec, schema="kafka_key string, id string, name string, topic string, offset long"
+        dec,
+        schema=StructType(
+            [StructField("kafka_key", StringType())]
+            + [StructField(n, StringType()) for n in names]
+            + [StructField("topic", StringType()), StructField("offset", LongType())]
+        ),
     )

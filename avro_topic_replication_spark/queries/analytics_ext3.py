@@ -24,17 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.numeric import dec
+from ..functions.numeric import dec, dec_sum_exact, dec_sum_exact_sql
 from . import query
-
-# Exact decimal power sum emitted as double, via the string hop both
-# engines print identically (aggregates.py uses the same idiom).
-_DSUM = "CAST(CAST(SUM(CAST(({e}) AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)"
-
-
-def _dsum(col):
-    return F.sum(dec(col)).cast("string").cast("double")
-
 
 @query(
     "stat_welch_ttest",
@@ -43,10 +34,10 @@ def _dsum(col):
             SELECT
                 COUNT(*) FILTER (c_mktsegment = 'BUILDING') AS n1,
                 COUNT(*) FILTER (c_mktsegment = 'MACHINERY') AS n2,
-                {_DSUM.format(e="CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal END")} AS sx1,
-                {_DSUM.format(e="CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal * c_acctbal END")} AS sxx1,
-                {_DSUM.format(e="CASE WHEN c_mktsegment = 'MACHINERY' THEN c_acctbal END")} AS sx2,
-                {_DSUM.format(e="CASE WHEN c_mktsegment = 'MACHINERY' THEN c_acctbal * c_acctbal END")} AS sxx2
+                {dec_sum_exact_sql("CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal END")} AS sx1,
+                {dec_sum_exact_sql("CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal * c_acctbal END")} AS sxx1,
+                {dec_sum_exact_sql("CASE WHEN c_mktsegment = 'MACHINERY' THEN c_acctbal END")} AS sx2,
+                {dec_sum_exact_sql("CASE WHEN c_mktsegment = 'MACHINERY' THEN c_acctbal * c_acctbal END")} AS sxx2
             FROM customer
         )
         SELECT n1, n2,
@@ -88,10 +79,10 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = c.agg(
         F.count(F.when(b, 1)).alias("n1"),
         F.count(F.when(m, 1)).alias("n2"),
-        _dsum(F.when(b, bal)).alias("sx1"),
-        _dsum(F.when(b, bal * bal)).alias("sxx1"),
-        _dsum(F.when(m, bal)).alias("sx2"),
-        _dsum(F.when(m, bal * bal)).alias("sxx2"),
+        dec_sum_exact(F.when(b, bal)).alias("sx1"),
+        dec_sum_exact(F.when(b, bal * bal)).alias("sxx1"),
+        dec_sum_exact(F.when(m, bal)).alias("sx2"),
+        dec_sum_exact(F.when(m, bal * bal)).alias("sxx2"),
     )
     n1, n2 = F.col("n1"), F.col("n2")
     sx1, sxx1 = F.col("sx1"), F.col("sxx1")
@@ -119,10 +110,10 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         SELECT o_orderpriority,
                COUNT(*) AS n,
-               {_DSUM.format(e='o_totalprice')} / COUNT(*) AS arithmetic_mean,
+               {dec_sum_exact_sql('o_totalprice')} / COUNT(*) AS arithmetic_mean,
                COUNT(*) / CAST(CAST(SUM(CAST(1.0 / o_totalprice AS DECIMAL(18,16)))
                                 AS VARCHAR) AS DOUBLE) AS harmonic_mean,
-               sqrt({_DSUM.format(e='o_totalprice * o_totalprice')} / COUNT(*))
+               sqrt({dec_sum_exact_sql('o_totalprice * o_totalprice')} / COUNT(*))
                  AS quadratic_mean
         FROM orders
         GROUP BY o_orderpriority
@@ -145,9 +136,9 @@ def agg_generalized_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = F.sum((F.lit(1.0) / tp).cast("decimal(18,16)")).cast("string").cast("double")
     return o.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
-        (_dsum(tp) / F.count("*")).alias("arithmetic_mean"),
+        (dec_sum_exact(tp) / F.count("*")).alias("arithmetic_mean"),
         (F.count("*") / inv).alias("harmonic_mean"),
-        F.sqrt(_dsum(tp * tp) / F.count("*")).alias("quadratic_mean"),
+        F.sqrt(dec_sum_exact(tp * tp) / F.count("*")).alias("quadratic_mean"),
     )
 
 
@@ -192,7 +183,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-collapse partition is value-bounded."""
     li = load_table(spark, sf_dir, "lineitem")
     g = li.groupBy("l_returnflag", F.col("l_extendedprice").alias("price")).agg(
-        _dsum("l_quantity").alias("w")
+        dec_sum_exact("l_quantity").alias("w")
     )
     win = Window.partitionBy("l_returnflag").orderBy("price")
     c = g.select(
@@ -250,7 +241,7 @@ def ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(_dsum("value").alias("revenue"))
+    ).agg(dec_sum_exact("value").alias("revenue"))
     win = Window.partitionBy("event_type").orderBy("day")
     r = daily.select(
         "event_type",
@@ -1239,11 +1230,7 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted_ms = means.filter(F.col("mean_r").isNotNull()).agg(
         F.sort_array(F.collect_list("mean_r")).alias("ms")
     )
-    point = o.agg(
-        (
-            F.sum(dec("o_totalprice")).cast("string").cast("double") / F.count("*")
-        ).alias("point_mean")
-    )
+    point = o.agg((dec_sum_exact("o_totalprice") / F.count("*")).alias("point_mean"))
     return sorted_ms.crossJoin(F.broadcast(point)).select(
         F.lit(32).alias("n_replicates"),
         "point_mean",
@@ -1339,7 +1326,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(_dsum("value").alias("revenue"))
+    ).agg(dec_sum_exact("value").alias("revenue"))
     win = Window.partitionBy("event_type").orderBy("day")
     f = daily.select(
         "event_type",
@@ -1402,7 +1389,7 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     wide = o.groupBy("o_orderpriority").agg(
         F.count("*").cast("double").alias("n_orders"),
-        _dsum("o_totalprice").alias("total_price"),
+        dec_sum_exact("o_totalprice").alias("total_price"),
         F.max("o_totalprice").cast("double").alias("max_price"),
     )
     wide.createOrReplaceTempView("orders_wide_metrics")
@@ -1443,7 +1430,7 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((days + 3) % 7 + 1).alias("dow_iso"), F.hour("ts").alias("hr")
     ).agg(
         F.count("*").alias("n_events"),
-        _dsum("value").alias("total_value"),
+        dec_sum_exact("value").alias("total_value"),
     )
 
 

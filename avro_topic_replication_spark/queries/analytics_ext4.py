@@ -20,17 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.numeric import dec
+from ..functions.numeric import dec, dec_sum_exact
 from . import query
-
-# Exact decimal sum emitted as double via the string hop both engines
-# print identically (aggregates.py idiom).
-_DSUM = "CAST(CAST(SUM(CAST(({e}) AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)"
-
-
-def _dsum(col):
-    return F.sum(dec(col)).cast("string").cast("double")
-
 
 # Benford expected first-digit probabilities log10(1 + 1/d), hardcoded to
 # 10 dp so no engine evaluates a transcendental (SCALE.md discipline).
@@ -869,7 +860,7 @@ def stat_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
         ).alias("mi")
-    ).agg(_dsum("o_totalprice").alias("rev"))
+    ).agg(dec_sum_exact("o_totalprice").alias("rev"))
     a = m.select(F.col("mi").alias("mi_a"), F.col("rev").alias("rev_a"))
     b = m.select(F.col("mi").alias("mi_b"), F.col("rev").alias("rev_b"))
     slopes = a.join(b, F.col("mi_a") < F.col("mi_b")).select(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..session import track_persist
 from . import query
+from .llm_sampling import _BKT_SQL, _TRAIN, _VAL, _bkt  # one md5-bucket split, both modules
 
 # --------------------------------------------------------------------------
 # token n-grams, identically in both engines.
@@ -68,18 +69,6 @@ def _token_grams_sql(expr: str, n: int) -> str:
         f"i -> array_to_string(list_slice(string_split({expr}, ' '), i, i + {n} - 1), ' ')) "
         f"ELSE [] END)"
     )
-
-
-# md5-bucket split boundaries — keep in lockstep with llm_sampling.py.
-_TRAIN = "cccc"  # < cccc → train (~80%)
-_VAL = "e666"  # < e666 → val; >= e666 → test
-
-
-def _bkt(col):
-    return F.substring(F.md5(col.cast("string")), 1, 4)
-
-
-_BKT_SQL = "substring(md5(CAST({k} AS VARCHAR)), 1, 4)"
 
 
 @query(

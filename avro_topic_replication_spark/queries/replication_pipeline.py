@@ -189,13 +189,10 @@ def replication_evolved_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes every record with its per-record writer schema (Confluent
     frame id -> registry snapshot) and resolves onto the v2 reader, so
     v1 records surface the default — registry BACKWARD compatibility on
-    the real envelope path, not just the codec unit test. Arrow-batched
-    decode; registry resolution is plan-time (snapshot in the closure)."""
+    the real envelope path, not just the codec unit test. Decoded by the
+    shared consumer decoder (``decode_envelope``) with the v2 reader; the
+    registry snapshot is taken at plan time."""
     import datetime as dt
-
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..functions import avro_codec
 
@@ -228,21 +225,9 @@ def replication_evolved_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (None, payload, "source-topic-a", 0, i, dt.datetime(2024, 1, 1))
             )
         env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
-        snapshot = reg.snapshot()
-
-        def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, names, tags = [], [], []
-                for vraw in pdf["value"]:
-                    _, rec = avro_codec.deserialize_confluent_evolved(
-                        bytes(vraw), snapshot, R.FOO_SCHEMA_V2
-                    )
-                    ids.append(rec["id"])
-                    names.append(rec["name"])
-                    tags.append(rec["tag"])
-                yield pd.DataFrame({"id": ids, "name": names, "tag": tags})
-
-        return env.mapInPandas(dec, schema="id string, name string, tag string")
+        return R.decode_envelope(env, reg.snapshot(), R.FOO_SCHEMA_V2).select(
+            "id", "name", "tag"
+        )
     finally:
         MockSchemaRegistry.drop_scope(f"evo-{scope}")
 
@@ -359,8 +344,8 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         good = R.decode_envelope(
             R.read_committed(spark, main_dir), tgt_reg.snapshot(), R.FOO_SCHEMA
         )
-        bad = spark.read.schema(R.DLQ_ENVELOPE).parquet(
-            os.path.join(dlq_dir, "data", "*")
+        bad = R.read_committed(
+            spark, dlq_dir, marker_dir=main_dir, schema=R.DLQ_ENVELOPE
         )
         acc_bad = bad.groupBy(F.col("error").alias("disposition")).agg(
             F.count("*").cast("bigint").alias("n"),

@@ -1,14 +1,19 @@
 """Registry invariants: the driver harness samples a fixed-size prefix of
 the registry's presentation order for its correctness gate, so the prefix
-must always be spent on oracle-bearing queries that have never received a
-driver CORRECTNESS row. Pure-Python — no SparkSession needed."""
+must always be spent on oracle-bearing queries that most need a driver
+CORRECTNESS row. Which rows exist is read from the committed
+CORRECTNESS_rNN.json files (``_sampling_ledger``). Pure-Python — no
+SparkSession needed."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
+
 from avro_topic_replication_spark.queries import (
-    _DRIVER_SAMPLED,
-    _LAST_SAMPLED_ROUND,
     _RESAMPLE_FIRST,
+    _sampling_ledger,
     all_queries,
 )
 
@@ -22,17 +27,18 @@ def test_sample_window_drains_the_backlog():
     cannot produce a hash row)."""
     reg = all_queries()
     names = list(reg)
+    sampled = set(_sampling_ledger())
     backlog = [
         n
         for n in names
         if reg[n].oracle is not None
-        and n not in _DRIVER_SAMPLED
+        and n not in sampled
         and "defer-sample" not in reg[n].tags
     ]
     window = names[: min(WINDOW, len(backlog))]
     for n in window:
         assert reg[n].oracle is not None, f"rows-only query in window: {n}"
-        assert n not in _DRIVER_SAMPLED, f"already-sampled query in window: {n}"
+        assert n not in sampled, f"already-sampled query in window: {n}"
 
 
 def test_rewritten_queries_lead_the_window():
@@ -69,16 +75,18 @@ def test_resamples_rotate_stalest_first():
     rest = oracle[WINDOW - len(_RESAMPLE_FIRST):]
     if not rest:
         return
-    newest_in = max(_LAST_SAMPLED_ROUND.get(n, 0) for n in in_window)
-    oldest_out = min(_LAST_SAMPLED_ROUND.get(n, 0) for n in rest)
+    ledger = _sampling_ledger()
+    newest_in = max(ledger.get(n, 0) for n in in_window)
+    oldest_out = min(ledger.get(n, 0) for n in rest)
     assert newest_in <= oldest_out, (newest_in, oldest_out)
 
 
 def test_driver_sampled_names_exist():
-    """Every name folded into _DRIVER_SAMPLED must still be a registered
-    query — a rename would silently re-enqueue its old driver row."""
+    """Every name with a row in the committed CORRECTNESS files must still
+    be a registered query — a rename would silently re-enqueue its old
+    driver row."""
     reg = all_queries()
-    missing = sorted(_DRIVER_SAMPLED - set(reg))
+    missing = sorted(set(_sampling_ledger()) - set(reg))
     assert not missing, missing
 
 
@@ -89,3 +97,30 @@ def test_every_query_has_fn_and_unique_oracle_columns():
         assert callable(q.fn), name
         if q.oracle is not None:
             assert q.oracle.strip(), name
+
+
+def _rows(path, rows):
+    path.write_text(json.dumps({n: {"hash_match": ok} for n, ok in rows.items()}))
+
+
+def test_sampling_ledger_takes_the_numeric_maximum_round(tmp_path):
+    """Each name maps to the largest N over exactly-named
+    CORRECTNESS_rN.json files: N is compared as an integer (r10 beats
+    r9), a non-green row still counts as sampled, and a file whose name
+    only looks like a round file is ignored."""
+    _rows(tmp_path / "CORRECTNESS_r9.json", {"a": True, "b": True, "c": False})
+    _rows(tmp_path / "CORRECTNESS_r10.json", {"a": True, "c": False})
+    _rows(tmp_path / "CORRECTNESS_r12_c8.json", {"a": True, "d": True})
+    _rows(tmp_path / "CORRECTNESS_r13.json.bak", {"a": True, "e": True})
+    (tmp_path / "BENCH_r13.json").write_text("{}")
+    assert _sampling_ledger(str(tmp_path)) == {"a": 10, "b": 9, "c": 10}
+
+
+def test_sampling_ledger_raises_without_correctness_files(tmp_path):
+    """No round file at all means the package is not in its repository:
+    ordering the driver's window without the ledger must fail loudly."""
+    with pytest.raises(FileNotFoundError):
+        _sampling_ledger(str(tmp_path))
+    _rows(tmp_path / "CORRECTNESS_r12_c8.json", {"a": True})
+    with pytest.raises(FileNotFoundError):
+        _sampling_ledger(str(tmp_path))

@@ -918,6 +918,44 @@ def test_confluent_deserialize_with_evolution():
     assert out[1] == (2, {"id": "b", "name": "n", "tag": "t"})
 
 
+def test_decode_envelope_rejects_non_string_reader_fields():
+    """The consumer decoder emits string columns only: a reader field of
+    any other type fails while the plan is built, before any job runs."""
+    reader = {**R.FOO_SCHEMA, "fields": R.FOO_SCHEMA["fields"] + [{"name": "n", "type": "long"}]}
+    with pytest.raises(ValueError, match="string fields only"):
+        R.decode_envelope(None, {1: R.FOO_SCHEMA}, reader)
+
+
+def test_decode_envelope_resolves_mixed_versions_onto_the_reader(spark):
+    """One mixed v1/v2 topic through ``decode_envelope``: a v1 reader
+    drops v2's ``tag``; a v2 reader surfaces its default on v1 records;
+    a reader field that the writer lacks and that has no default fails
+    the job. Keys decode as Avro strings, NULL keys stay NULL."""
+    from avro_topic_replication_spark.functions import avro_codec as C
+
+    schemas = {1: R.FOO_SCHEMA, 2: FOO_V2, 3: R.STRING_SCHEMA}
+    rows = [
+        (C.serialize_confluent("a", R.STRING_SCHEMA, 3),
+         C.serialize_confluent({"id": "a", "name": None}, R.FOO_SCHEMA, 1), "t", 0, 0, None),
+        (None, C.serialize_confluent({"id": "b", "name": "n", "tag": "x"}, FOO_V2, 2),
+         "t", 0, 1, None),
+    ]
+    env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+
+    v1 = R.decode_envelope(env, schemas, R.FOO_SCHEMA)
+    assert v1.columns == ["kafka_key", "id", "name", "topic", "offset"]
+    assert [tuple(r) for r in v1.orderBy("offset").collect()] == [
+        ("a", "a", None, "t", 0), (None, "b", "n", "t", 1)
+    ]
+    v2 = R.decode_envelope(env, schemas, FOO_V2).orderBy("offset")
+    assert [tuple(r) for r in v2.select("id", "name", "tag").collect()] == [
+        ("a", None, "untagged"), ("b", "n", "x")
+    ]
+    no_default = {**FOO_V2, "fields": FOO_V2["fields"][:2] + [{"name": "tag", "type": "string"}]}
+    with pytest.raises(Exception, match="not read-compatible"):
+        R.decode_envelope(env, schemas, no_default).collect()
+
+
 def test_kafka_swap_path_options_reach_the_missing_jar(spark):
     """Exercise the documented real-broker swap as far as a jar-less
     sandbox allows: the readStream.format("kafka") plan built from

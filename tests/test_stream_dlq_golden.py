@@ -22,6 +22,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
+    from avro_topic_replication_spark.operators import replication as R
     from avro_topic_replication_spark.queries import all_queries
     from avro_topic_replication_spark.streaming.replay import SCRATCH
 
@@ -61,3 +62,32 @@ def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
     (run,) = set(glob.glob(runs)) - before
     for sink in ("target-topic-b", "target-topic-b-dlq"):
         assert dictionary_encoded_chunks(os.path.join(run, sink)) == [], sink
+
+    # The dead-letter sink is read committed through the main sink's
+    # markers (the one marker per batch covers both writes): it holds
+    # exactly the routed records, one row per corrupted source offset
+    # with its class (``_corrupt``: offset % 7 == 0 truncated, == 3 an
+    # unknown schema id).
+    main, dlq = os.path.join(run, "target-topic-b"), os.path.join(run, "target-topic-b-dlq")
+
+    def committed_dlq():
+        df = R.read_committed(spark, dlq, marker_dir=main, schema=R.DLQ_ENVELOPE)
+        return sorted((r["offset"], r["error"]) for r in df.select("offset", "error").collect())
+
+    n_source = sum(b["n"] for b in batch.values())
+    routed = [
+        (o, "decode_error" if o % 7 == 0 else "unknown_schema")
+        for o in range(n_source)
+        if o % 7 in (0, 3)
+    ]
+    assert committed_dlq() == routed
+
+    # A batch dir written before a crash, before its marker existed, stays
+    # invisible — though a plain read of the sink's data dirs sees it.
+    last = max(int(b) for b in os.listdir(os.path.join(main, "commits")) if b.isdigit())
+    R.read_committed(spark, dlq, marker_dir=main, schema=R.DLQ_ENVELOPE).write.parquet(
+        os.path.join(dlq, "data", str(last + 1))
+    )
+    everything = spark.read.schema(R.DLQ_ENVELOPE).parquet(os.path.join(dlq, "data", "*"))
+    assert everything.count() == 2 * len(routed)
+    assert committed_dlq() == routed
