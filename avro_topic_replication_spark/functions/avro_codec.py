@@ -1,5 +1,5 @@
-"""Avro binary codec + Confluent wire framing, in Python (numpy and
-pyarrow only for the columnar walker of the replication fast path).
+"""Avro binary codec + Confluent wire framing, in Python, plus the
+compiler of the replication fast path's walker programs.
 
 Implements the Apache Avro binary encoding from the public specification
 (https://avro.apache.org/docs/current/specification/): zigzag-varint
@@ -24,9 +24,6 @@ from __future__ import annotations
 import io
 import json
 import struct
-
-import numpy as np
-import pyarrow as pa
 
 MAGIC = b"\x00"
 
@@ -77,13 +74,21 @@ def _read_long(buf: io.BytesIO) -> int:
 # ---------------------------------------------------------------------------
 # schema helpers
 # ---------------------------------------------------------------------------
+_PRIMITIVES = frozenset(
+    ("null", "boolean", "int", "long", "float", "double", "bytes", "string"))
+
+
 def parse_schema(schema: str | dict | list) -> dict | list | str:
-    """Accept a JSON string or already-parsed schema; return parsed form."""
+    """Accept a JSON string or already-parsed schema; return parsed form.
+    A bare primitive name like ``"string"`` is returned as is, without a
+    JSON parse (``decode`` and ``encode`` call this on every datum)."""
     if isinstance(schema, str):
+        if schema in _PRIMITIVES:
+            return schema
         try:
             return json.loads(schema)
         except json.JSONDecodeError:
-            return schema  # bare primitive name like "string"
+            return schema  # a named-type reference
     return schema
 
 
@@ -297,27 +302,13 @@ def deserialize_confluent(data: bytes, schemas_by_id: dict):
 
 
 # ---------------------------------------------------------------------------
-# columnar payload walker (the replication header-rewrite check)
+# walker programs (the replication header-rewrite check)
 # ---------------------------------------------------------------------------
-# A walker checks a whole column of payloads at once: which of them are
-# exactly what ``encode(decode(payload))`` would give back, without building
-# a decoded datum. It walks the schema field by field with one position per
-# payload (a numpy vector over the shared value buffer), and rejects a
-# payload for: a varint that is not the shortest encoding of a value below
-# 2**64, a negative length or one past the payload's end, invalid UTF-8, a
-# boolean byte other than 0 or 1, an out-of-range union or enum index, a
-# fixed that does not fit, a payload that does not end where the record
-# does. It is conservative on one point: a NaN float or double rejects the
-# payload, whether or not its bits would survive the round trip. A
-# rejected payload is no error, only one the walker does not vouch for:
-# callers take the full path for it.
-#
-# Steps never raise on payload bytes: reads go through ``take(...,
-# mode="clip")`` and a rejected payload's later steps run on harmlessly.
-# Positions only grow, so a read past a payload's end leaves its position
-# past the end, which the final row-end check rejects; only lengths are
-# checked against the end as they are read (they also bound the spans the
-# UTF-8 check gathers).
+# The check itself runs in the JVM (jvm/GraftWalk.java, one Spark SQL UDF):
+# it walks a payload by an opcode tree compiled here from the writer schema
+# and vouches for the payloads that ``encode(decode(payload))`` gives back
+# byte for byte. This module only decides which schemas it covers and
+# emits their opcodes; GraftWalk.java documents the checks and the layout.
 
 # The Python class each union branch's datum has, as _union_branch_matches
 # sees it. Re-encoding picks the FIRST branch of the datum's class, so a
@@ -329,205 +320,14 @@ _MATCH_CLASS = {
     "record": "dict",
 }
 
-_ONE = np.uint64(1)
+# GraftWalk's opcodes
+_PRIMITIVE_OPS = {"null": 0, "boolean": 1, "int": 2, "long": 2, "float": 3, "double": 4,
+                  "bytes": 5, "string": 6}
+_FIXED, _ENUM, _UNION, _RECORD, _ID = 7, 8, 9, 10, 11
 
 
 class _Unwalkable(Exception):
     """A schema outside the walker's surface (the full path handles it)."""
-
-
-def binary_buffers(values: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """``(data, offsets)`` of a binary array as numpy: row ``i`` is
-    ``data[offsets[i]:offsets[i + 1]]``. Only the bytes the rows span are
-    viewed (a slice's parent buffer stays out) and ``offsets`` start at 0."""
-    n = len(values)
-    if not n:  # an empty array's offsets buffer may be empty too
-        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-    width = 8 if pa.types.is_large_binary(values.type) else 4
-    _, obuf, dbuf = values.buffers()
-    offsets = np.frombuffer(obuf, f"<i{width}", n + 1, values.offset * width)
-    base, stop = int(offsets[0]), int(offsets[-1])
-    data = np.frombuffer(dbuf, np.uint8, stop - base, base) if stop > base else np.zeros(0, np.uint8)
-    return data, offsets.astype(np.int64) - base
-
-
-def binary_array(offsets: np.ndarray, data: np.ndarray) -> pa.Array:
-    """A ``pa.binary()`` array (no nulls) from ``binary_buffers``-style
-    numpy offsets and bytes."""
-    return pa.Array.from_buffers(
-        pa.binary(), len(offsets) - 1,
-        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
-    )
-
-
-def gather_spans(data: np.ndarray, start: np.ndarray, stop: np.ndarray):
-    """``(offsets, bytes)`` of the spans ``data[start[i]:stop[i]]`` laid
-    end to end, with no Python loop."""
-    lengths = stop - start
-    offsets = np.zeros(len(lengths) + 1, np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    idx = np.arange(offsets[-1]) + np.repeat(start - offsets[:-1], lengths)
-    return offsets, data[idx]
-
-
-def _varint(data, pos):
-    """``(value, next, ok)`` of the varints at ``pos``, value as uint64:
-    ``ok`` where the varint is the shortest encoding of a value below
-    2**64 (what _write_varint writes)."""
-    first = data.take(pos, mode="clip")
-    value = (first & 0x7F).astype(np.uint64)
-    nxt = pos + 1
-    ok = np.ones(len(pos), bool)
-    more = np.flatnonzero(first >= 0x80)
-    if more.size:
-        p, acc = pos[more], value[more]
-        size = np.zeros(more.size, np.int64)  # bytes read; 0 while reading
-        for k in range(1, 10):
-            live = size == 0
-            if not live.any():
-                break
-            b = data.take(p + k, mode="clip")
-            acc |= np.where(live, b & 0x7F, 0).astype(np.uint64) << np.uint64(7 * k)
-            size[live & (b < 0x80)] = k + 1
-        last = data.take(p + size - 1, mode="clip")
-        good = size > 0  # no end within 10 bytes: over-long
-        good &= last != 0  # a 0 last byte: non-minimal
-        good &= (size < 10) | (last == 1)  # a 10th byte above 1: 2**64 or more
-        value[more], nxt[more], ok[more] = acc, p + np.maximum(size, 1), good
-    return value, nxt, ok
-
-
-def _count(data, pos):
-    """``(n, next, ok)`` of zigzag longs that must not be negative: lengths
-    and indexes, as int64."""
-    value, pos, ok = _varint(data, pos)
-    ok &= (value & _ONE) == 0
-    return (value >> _ONE).astype(np.int64), pos, ok
-
-
-class _Walk:
-    """One columnar walk: the value buffer, plus every string span walked,
-    for one UTF-8 check at the end."""
-
-    def __init__(self, data: np.ndarray) -> None:
-        self.data = data
-        self.strings: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-
-    def invalid_utf8(self) -> np.ndarray:
-        """Rows with a walked string span that is not valid UTF-8. Spans
-        holding a byte >= 0x80 are gathered into one binary array and cast
-        to string, which validates them all at once; only if that cast
-        raises are they decoded one by one."""
-        if not self.strings:
-            return np.zeros(0, np.int64)
-        rows, start, stop = (np.concatenate(c) for c in zip(*self.strings))
-        # each span's largest byte: reduceat over start/stop pairs (the
-        # pad keeps a stop at the buffer's end a valid index; an empty
-        # span reduces to one byte that is not its own)
-        padded = np.append(self.data, np.uint8(0))
-        largest = np.maximum.reduceat(padded, np.column_stack([start, stop]).ravel())[::2]
-        mixed = (largest >= 0x80) & (stop > start)
-        rows, start, stop = rows[mixed], start[mixed], stop[mixed]
-        if not rows.size:
-            return rows
-        spans = binary_array(*gather_spans(self.data, start, stop))
-        try:
-            spans.cast(pa.string())
-            return rows[:0]
-        except pa.ArrowInvalid:
-            return rows[[i for i, s in enumerate(spans.to_pylist()) if not _is_utf8(s)]]
-
-
-def _is_utf8(b: bytes) -> bool:
-    try:
-        b.decode("utf-8")
-    except UnicodeDecodeError:
-        return False
-    return True
-
-
-# A step walks one value of its schema for a set of rows:
-# ``step(w, rows, pos, end) -> (next, ok)``, ``rows`` the payload numbers
-# (for the UTF-8 check), ``pos``/``end`` each payload's position and end.
-def _walk_boolean(w, rows, pos, end):
-    return pos + 1, w.data.take(pos, mode="clip") <= 1
-
-
-def _walk_long(w, rows, pos, end):
-    _, pos, ok = _varint(w.data, pos)
-    return pos, ok
-
-
-def _walk_span(w, pos, end):
-    n, pos, ok = _count(w.data, pos)
-    ok &= n <= end - pos
-    return pos, pos + np.where(ok, n, 0), ok
-
-
-def _walk_bytes(w, rows, pos, end):
-    _, stop, ok = _walk_span(w, pos, end)
-    return stop, ok
-
-
-def _walk_string(w, rows, pos, end):
-    start, stop, ok = _walk_span(w, pos, end)
-    w.strings.append((rows[ok], start[ok], stop[ok]))
-    return stop, ok
-
-
-def _float_step(dtype: str):
-    size = np.dtype(dtype).itemsize
-    at = np.arange(size)
-
-    def walk(w, rows, pos, end):
-        values = w.data.take(pos[:, None] + at, mode="clip").view(dtype)[:, 0]
-        return pos + size, ~np.isnan(values)
-
-    return walk
-
-
-def _fixed_step(size: int):
-    def walk(w, rows, pos, end):
-        return pos + size, np.ones(len(pos), bool)
-
-    return walk
-
-
-def _enum_step(n: int):
-    def walk(w, rows, pos, end):
-        i, pos, ok = _count(w.data, pos)
-        return pos, ok & (i < n)
-
-    return walk
-
-
-def _union_step(branches: list):
-    def walk(w, rows, pos, end):
-        i, pos, ok = _count(w.data, pos)
-        ok &= i < len(branches)
-        for b, step in enumerate(branches):
-            if step is None:
-                continue
-            sel = np.flatnonzero(ok & (i == b))
-            if sel.size:
-                pos[sel], sub_ok = step(w, rows[sel], pos[sel], end[sel])
-                ok[sel] &= sub_ok
-        return pos, ok
-
-    return walk
-
-
-def _record_step(steps: list):
-    steps = [s for s in steps if s is not None]
-
-    def walk(w, rows, pos, end):
-        ok = np.ones(len(pos), bool)
-        for step in steps:
-            pos, step_ok = step(w, rows, pos, end)
-            ok &= step_ok
-        return pos, ok
-
-    return walk
 
 
 def _record_fields(schema: dict) -> list[dict]:
@@ -538,54 +338,45 @@ def _record_fields(schema: dict) -> list[dict]:
     return fields
 
 
-_PRIMITIVE_STEPS = {
-    "null": None,
-    "boolean": _walk_boolean,
-    "int": _walk_long,
-    "long": _walk_long,
-    "float": _float_step("<f4"),
-    "double": _float_step("<f8"),
-    "bytes": _walk_bytes,
-    "string": _walk_string,
-}
+def _record_op(fields: list[dict], id_at: int = -1) -> bytes:
+    ops = [bytes([_ID]) if i == id_at else _op(f["type"]) for i, f in enumerate(fields)]
+    return struct.pack(">bi", _RECORD, len(ops)) + b"".join(ops)
 
 
-def _compile_step(schema):
-    """The step of one value of ``schema`` (None for null, which takes no
-    bytes); raises _Unwalkable outside the surface."""
+def _op(schema) -> bytes:
+    """The opcodes of one value of ``schema``; raises _Unwalkable outside
+    the surface."""
     t = _schema_type(schema)
-    if t in _PRIMITIVE_STEPS:
-        return _PRIMITIVE_STEPS[t]
+    if t in _PRIMITIVE_OPS:
+        return bytes([_PRIMITIVE_OPS[t]])
     if t == "fixed":
         size = schema["size"]
-        if not isinstance(size, int) or size < 0:
+        if not isinstance(size, int) or not 0 <= size < 2**31:
             raise _Unwalkable("bad fixed size")
-        return _fixed_step(size)
+        return struct.pack(">bi", _FIXED, size)
     if t == "enum":
         symbols = schema["symbols"]
         if len(set(symbols)) != len(symbols):
             raise _Unwalkable("duplicate enum symbols")  # encode finds the first
-        return _enum_step(len(symbols))
+        return struct.pack(">bi", _ENUM, len(symbols))
     if t == "union":
         classes = [_MATCH_CLASS[_schema_type(b)] for b in schema]
         if len(set(classes)) != len(classes):
             raise _Unwalkable("union branches of one match class")
-        return _union_step([_compile_step(b) for b in schema])
+        branches = [_op(b) for b in schema]
+        return struct.pack(">bi", _UNION, len(branches)) + b"".join(
+            struct.pack(">i", len(b)) + b for b in branches)
     if t == "record":
-        return _record_step([_compile_step(f["type"]) for f in _record_fields(schema)])
+        return _record_op(_record_fields(schema))
     raise _Unwalkable(f"no walker for {t!r}")  # array, map, named references
 
 
-def compile_walker(schema):
+def compile_walker(schema) -> bytes | None:
     """Plan-time compile of the replication fast path's check for one
     writer schema: a record whose top-level ``id`` field is a plain
-    ``string``. Returns ``walk(data, start, end) -> (ok, id_start,
-    id_end)`` over the payloads ``data[start[i]:end[i]]`` (numpy: a uint8
-    value buffer and int64 positions). ``ok[i]`` says payload ``i`` passed
-    every check above, so re-encoding its decoded datum gives it back byte
-    for byte; ``id_start[i]:id_end[i]`` is then the span of its ``id``
-    string INCLUDING the length prefix — the Avro encoding of ``id`` as a
-    bare string, i.e. a key payload.
+    ``string``. Returns the GraftWalk opcodes of the record, the ``id``
+    field marked as the span to return (its Avro encoding as a bare
+    string, length prefix included, i.e. a key payload).
 
     Returns None for a schema the walker does not cover: a non-record, an
     ``id`` that is missing or not a plain string, duplicate field names
@@ -597,27 +388,11 @@ def compile_walker(schema):
             return None
         fields = _record_fields(schema)
         names = [f["name"] for f in fields]
-        if "id" not in names:
+        if "id" not in names or _schema_type(fields[names.index("id")]["type"]) != "string":
             return None
-        at = names.index("id")
-        if _schema_type(fields[at]["type"]) != "string":
-            return None
-        before = _record_step([_compile_step(f["type"]) for f in fields[:at]])
-        after = _record_step([_compile_step(f["type"]) for f in fields[at + 1:]])
+        return _record_op(fields, names.index("id"))
     except (_Unwalkable, KeyError, TypeError, AttributeError):
         return None
-
-    def walk(data: np.ndarray, start: np.ndarray, end: np.ndarray):
-        w = _Walk(data)
-        rows = np.arange(len(start))
-        id_start, ok = before(w, rows, start, end)
-        id_end, id_ok = _walk_string(w, rows, id_start, end)
-        stop, after_ok = after(w, rows, id_end, end)
-        ok &= id_ok & after_ok & (stop == end)
-        ok[w.invalid_utf8()] = False
-        return ok, id_start, id_end
-
-    return walk
 
 
 # ---------------------------------------------------------------------------

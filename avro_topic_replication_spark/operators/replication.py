@@ -15,24 +15,26 @@ Spark mapping implemented here:
 |    |                                    | cluster, maxOffsetsPerTrigger)   |
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
-| R3 | KafkaAvroDeserializer              | mapInArrow: a per-schema walker  |
-|    | (application.yml:12)               | compiled from the plan-time      |
-|    |                                    | snapshot checks a whole batch's  |
-|    |                                    | payloads at once, columnar (numpy|
-|    |                                    | positions over the value buffer);|
-|    |                                    | full decode only as the fallback |
-| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte spans |
+| R3 | KafkaAvroDeserializer              | graft_walk: a Java UDF walks each|
+|    | (application.yml:12)               | payload by opcodes compiled from |
+|    |                                    | the plan-time snapshot and checks|
+|    |                                    | it would re-encode to itself;    |
+|    |                                    | full decode only for the rows it |
+|    |                                    | declines (a second job)          |
+| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte span  |
 | R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
-|    |                                    | (Avro string of id, serde parity)|
-| R6 | KafkaAvroSerializer + auto-register| register() at plan time; values =|
-|    | (application.yml:15-16,README:27)  | the input value buffer with each |
-|    |                                    | 5-byte frame's id rewritten to   |
-|    |                                    | the target id, offsets unchanged |
+|    |                                    | (Catalyst concat/substring; the  |
+|    |                                    | Avro string of id, serde parity) |
+| R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
+|    | (application.yml:15-16,README:27)  | 0x00 + the target id (CASE on the|
+|    |                                    | source id) + the payload as is   |
 |    |                                    | (fallback: full re-encode)       |
-| R7 | executeInTransaction (:66-78)      | foreachBatch: write data (parquet|
-|    |                                    | without dictionaries), then      |
-| R8 | future.get barrier → abort (:80-94)| atomically create commit marker; |
-|    |                                    | any task failure fails the batch |
+| R7 | executeInTransaction (:66-78)      | foreachBatch: write the accepted |
+|    |                                    | rows, then the declined rows' job|
+|    |                                    | if any (parquet without          |
+|    |                                    | dictionaries), then atomically   |
+| R8 | future.get barrier → abort (:80-94)| create the commit marker; any    |
+|    |                                    | task failure fails the batch     |
 |    |                                    | before the marker exists         |
 | R9 | ack after commit (:99-100)         | checkpoint advances only after   |
 |    |                                    | foreachBatch returns             |
@@ -45,17 +47,20 @@ once for committed readers, exactly the reference's contract.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import struct
+import subprocess
+import tempfile
 import threading
+import zipfile
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
-
-from pyspark.sql import DataFrame, SparkSession
+import pyspark
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.types import (
@@ -70,6 +75,7 @@ from pyspark.sql.types import (
 
 from ..functions import avro_codec
 from ..sources.registry import MockSchemaRegistry
+from ..streaming.replay import SCRATCH
 
 # A2 envelope (FIXTURES.md): the fixed schema of Spark's Kafka source.
 KAFKA_ENVELOPE = StructType(
@@ -133,7 +139,7 @@ DLQ_ENVELOPE = StructType(KAFKA_ENVELOPE.fields + [StructField("error", StringTy
 
 
 # ---------------------------------------------------------------------------
-# R3–R6: walk → re-key → re-frame, one Arrow-batched pass
+# R3–R6: walk → re-key → re-frame in the JVM; full decode as the fallback
 # ---------------------------------------------------------------------------
 def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
     """The full path for one framed value: decode, extract ``id``, encode
@@ -162,74 +168,174 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
         return None, None, "unknown_schema" if isinstance(e, KeyError) else "decode_error"
 
 
-def _replication_kernel(snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
-    """Plan-time build of the batch replication: returns
-    ``replicate(raws) -> (keys, values, errors)``, Arrow arrays in and out
-    over a binary array of framed values.
+_WALKER_SOURCE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                              "jvm", "GraftWalk.java")
+_SPAN = "_span"  # the walked envelope's column: the id span, or -1 where declined
 
-    Each schema id whose writer schema has a walker
-    (``avro_codec.compile_walker``) takes the header rewrite, columnar over
-    the whole batch: the walker checks its payloads and finds each ``id``
-    span; the key is the key frame plus those bytes, and the value is a
-    copy of the input value buffer with the 4 schema-id bytes rewritten to
-    the target id at each row's offset — exactly the bytes the full path
-    would encode, with no decoded datum built. Every row the walker does
-    not vouch for (null, bad frame, unknown id, a schema it does not cover,
-    a payload it rejects) goes through ``_reencode`` in row order and is
-    merged in, so both modes give the full path's output for every input,
-    and abort mode raises the first failing row's error."""
-    key_frame = np.frombuffer(avro_codec.frame(key_schema_id, b""), np.uint8)
-    rewrites = {}
-    for sid, schema in snapshot.items():
-        walk = avro_codec.compile_walker(schema) if sid in mapping else None
-        if walk is not None:
-            rewrites[sid] = (walk, np.frombuffer(struct.pack(">I", mapping[sid]), np.uint8))
 
-    def replicate(raws: pa.Array):
-        n = len(raws)
-        data, offsets = avro_codec.binary_buffers(raws)
-        start, end = offsets[:-1], offsets[1:]
-        ok = np.zeros(n, bool)
-        id_start, id_end = np.zeros(n, np.int64), np.zeros(n, np.int64)
-        values = data.copy()
-        if data.size:
-            header = data.take(start[:, None] + np.arange(5), mode="clip")
-            framed = (end - start >= 5) & (header[:, 0] == 0)
-            if raws.null_count:
-                framed &= raws.is_valid().to_numpy(zero_copy_only=False)
-            sids = header[:, 1:].copy().view(">u4")[:, 0]
-            for sid, (walk, target) in rewrites.items():
-                rows = np.flatnonzero(framed & (sids == sid))
-                if not rows.size:
-                    continue
-                good, a, b = walk(data, start[rows] + 5, end[rows])
-                rows = rows[good]
-                ok[rows], id_start[rows], id_end[rows] = True, a[good], b[good]
-                values[start[rows, None] + np.arange(1, 5)] = target
-        # key = key frame + id span: two spans per row over key frame ++
-        # value bytes (both empty where not ok)
-        source = np.concatenate([key_frame, data])
-        span_start = np.column_stack([np.zeros(n, np.int64), id_start + 5]).ravel()
-        span_stop = np.column_stack([np.where(ok, 5, 0), np.where(ok, id_end, id_start) + 5]).ravel()
-        key_offsets, key_bytes = avro_codec.gather_spans(source, span_start, span_stop)
-        keys = avro_codec.binary_array(key_offsets[::2], key_bytes)
-        values = avro_codec.binary_array(offsets, values)
-        errors = pa.nulls(n, pa.string())
-        slow = np.flatnonzero(~ok)
-        if not slow.size:
-            return keys, values, errors
-        out = [_reencode(raw, snapshot, mapping, key_schema_id, route)
-               for raw in raws.take(pa.array(slow)).to_pylist()]
-        # row -> its place in ``out`` (fast rows: any, if_else ignores it)
-        pick = pa.array(np.maximum(np.cumsum(~ok) - 1, 0))
-        fast = pa.array(ok)
-        merged = [
-            pc.if_else(fast, arr, pa.array(col, arr.type).take(pick))
-            for arr, col in zip((keys, values, errors), zip(*out))
-        ]
-        return tuple(merged)
+def _walker_jar() -> str:
+    """The JVM walker's jar, compiled by ``javac`` against Spark's jars on
+    first use into the scratch dir, named by the source's sha256 and
+    moved into place whole (tmp dir + rename)."""
+    with open(_WALKER_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    jar = os.path.join(SCRATCH, "jvm", f"GraftWalk-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            "the replication fast path compiles jvm/GraftWalk.java with javac, "
+            "which is not on PATH: install a JDK (17 or later)"
+        )
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    os.makedirs(os.path.dirname(jar), exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+        built = subprocess.run(
+            [javac, "--release", "17", "-cp", os.path.join(spark_home, "jars", "*"),
+             "-d", tmp, _WALKER_SOURCE],
+            capture_output=True, text=True,
+        )
+        if built.returncode:
+            raise RuntimeError(f"javac failed on {_WALKER_SOURCE}:\n{built.stderr}")
+        with zipfile.ZipFile(os.path.join(tmp, "walker.jar"), "w") as z:
+            for root, _, files in os.walk(tmp):
+                for name in files:
+                    if name.endswith(".class"):
+                        path = os.path.join(root, name)
+                        z.write(path, os.path.relpath(path, tmp))
+        os.rename(os.path.join(tmp, "walker.jar"), jar)
+    return jar
 
-    return replicate
+
+def _ensure_walker(spark: SparkSession) -> None:
+    """Add the walker's jar to ``spark`` and register it as the SQL
+    function ``graft_walk`` (once per session object, like
+    ``ensure_runtime_conf``)."""
+    if getattr(spark, "_graft_walk_registered", False):
+        return
+    spark.sql(f"ADD JAR '{_walker_jar()}'")
+    spark.udf.registerJavaFunction("graft_walk", "sparkgraft.GraftWalk", LongType())
+    spark._graft_walk_registered = True
+
+
+class ReplicationPlan:
+    """The plan-time half of R3–R6 for one registry snapshot.
+
+    ``walk`` adds the JVM walker's verdict to each envelope row: the span of
+    its ``id`` within the value, or -1 where the walker declines it (null,
+    bad frame, unknown id, a schema it does not cover, a payload that would
+    not re-encode to itself). ``accepted`` rewrites the rows it vouches for
+    with Catalyst expressions alone: key = the key frame + the id span;
+    value = ``0x00`` + the target id (a ``CASE`` on the source id) + the
+    payload as is; exactly the bytes the full path would encode, and no
+    Python worker runs. ``declined`` runs ``_reencode`` over the other rows
+    only (one ``mapInArrow``), so both modes give the full path's output
+    for every input, and abort mode raises the first failing row's error.
+    """
+
+    def __init__(self, spark: SparkSession, schemas_by_id: dict, target_topic: str,
+                 key_schema_id: int, id_mapping: dict, on_error: str = "abort") -> None:
+        if on_error not in ("abort", "route"):
+            raise ValueError(f"on_error must be 'abort' or 'route', got {on_error!r}")
+        _ensure_walker(spark)
+        snapshot, mapping = dict(schemas_by_id), dict(id_mapping)
+        route = on_error == "route"
+        self.route = route
+        self.schema = DLQ_ENVELOPE if route else KAFKA_ENVELOPE
+        self.target_topic = target_topic
+        self.key_frame = avro_codec.frame(key_schema_id, b"")
+        program, self.targets = [], {}
+        for sid, schema in snapshot.items():
+            ops = avro_codec.compile_walker(schema) if sid in mapping else None
+            if ops is not None:
+                program.append(struct.pack(">ii", sid, len(ops)) + ops)
+                self.targets[struct.pack(">I", sid)] = struct.pack(">I", mapping[sid])
+        self.program = b"".join(program)
+        names = self.schema.fieldNames()
+
+        def fallback(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                out = [_reencode(raw, snapshot, mapping, key_schema_id, route)
+                       for raw in batch.column("value").to_pylist()]
+                keys, values, errors = zip(*out) if out else ((), (), ())
+                columns = [
+                    pa.array(keys, pa.binary()),
+                    pa.array(values, pa.binary()),
+                    pa.array([target_topic] * batch.num_rows, pa.string()),
+                    batch.column("partition"),
+                    batch.column("offset"),
+                    batch.column("timestamp"),
+                ]
+                if route:
+                    columns.append(pa.array(errors, pa.string()))
+                yield pa.RecordBatch.from_arrays(columns, names=names)
+
+        self._fallback = fallback
+
+    @classmethod
+    def from_registries(cls, spark: SparkSession, source_registry: MockSchemaRegistry,
+                        target_registry: MockSchemaRegistry, target_topic: str,
+                        value_schema=None, on_error: str = "abort") -> ReplicationPlan:
+        """Plan-time registry work (R6 auto-registration, README.adoc:27
+        parity): register the key schema on the target, snapshot the source
+        registry for decode (seeded from ``value_schema`` when the source
+        registry is empty, as in direct batch use), and propagate EVERY
+        known source schema into the target registry (the auto-registration
+        the Confluent serde does lazily, done eagerly at plan time). This is
+        the one place registry propagation happens, for both modes."""
+        key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
+        snapshot = source_registry.snapshot()
+        if value_schema is not None and not snapshot:
+            source_registry.register(f"{target_topic}-value", value_schema)
+            snapshot = source_registry.snapshot()
+        id_mapping = {
+            src_id: target_registry.register(f"{target_topic}-value", schema)
+            for src_id, schema in snapshot.items()
+        }
+        return cls(spark, snapshot, target_topic, key_id, id_mapping, on_error)
+
+    def walk(self, env: DataFrame) -> DataFrame:
+        """The envelope columns the output keeps, plus the walker's span."""
+        span = F.call_udf("graft_walk", F.col("value"), F.lit(self.program))
+        return env.select("value", "partition", "offset", "timestamp", span.alias(_SPAN))
+
+    def accepted(self, walked: DataFrame) -> DataFrame:
+        """The target envelope (``KAFKA_ENVELOPE``) of the rows the walker
+        vouches for, built in the JVM."""
+        span, value = F.col(_SPAN), F.col("value")
+        start = F.shiftright(span, 32).cast("int")
+        end = span.bitwiseAND(0xFFFFFFFF).cast("int")
+        target = F.lit(None).cast("binary")
+        for source, dest in self.targets.items():
+            target = F.when(value.substr(2, 4) == F.lit(source), F.lit(dest)).otherwise(target)
+        return walked.filter(span >= 0).select(
+            F.concat(F.lit(self.key_frame), value.substr(start + 1, end - start)).alias("key"),
+            F.concat(F.lit(avro_codec.MAGIC), target, value.substr(6, 2**31 - 1)).alias("value"),
+            F.lit(self.target_topic).alias("topic"),
+            "partition",
+            "offset",
+            "timestamp",
+        )
+
+    def declined(self, walked: DataFrame) -> DataFrame:
+        """The full path's output (``self.schema``) for every row the
+        walker declines."""
+        return walked.filter(F.col(_SPAN) < 0).drop(_SPAN).mapInArrow(
+            self._fallback, schema=self.schema)
+
+    def transform(self, env: DataFrame) -> DataFrame:
+        """Both halves over a static ``env``, as one DataFrame. A JVM-only
+        job counts the declined rows first (one parallel pass; ``isEmpty``
+        would scan partitions in waves): a Python stage costs its fixed
+        price even over 0 rows, so a clean ``env`` gets the rewrite alone."""
+        walked = self.walk(env)
+        fast = self.accepted(walked)
+        if self.route:
+            fast = fast.withColumn("error", F.lit(None).cast("string"))
+        if not walked.filter(F.col(_SPAN) < 0).count():
+            return fast
+        return fast.unionByName(self.declined(walked))
 
 
 def replicate_transform(
@@ -251,13 +357,9 @@ def replicate_transform(
 
     The value is re-encoded under its writer schema, so a payload that
     re-encodes to itself needs only a new frame: the header rewrite of
-    ``_replication_kernel``, with the full decode → re-encode as the
-    fallback for every record the rewrite cannot vouch for.
-
-    One mapInArrow pass — the distributed analog of the reference's
-    single listener loop (ReplicationApplication.java:63-78); the
-    (partition, offset, timestamp) Arrow columns pass through untouched
-    for downstream dedup/audit.
+    ``ReplicationPlan``, with the full decode → re-encode as the fallback
+    for every record the rewrite cannot vouch for. The (partition, offset,
+    timestamp) columns pass through untouched for downstream dedup/audit.
 
     ``on_error`` picks what a bad record does:
 
@@ -276,32 +378,9 @@ def replicate_transform(
       The main/DLQ split is a downstream ``filter`` each (both
       partition-local, no extra shuffle).
     """
-    if on_error not in ("abort", "route"):
-        raise ValueError(f"on_error must be 'abort' or 'route', got {on_error!r}")
-    route = on_error == "route"
-    schema = DLQ_ENVELOPE if route else KAFKA_ENVELOPE
-    replicate = _replication_kernel(
-        dict(schemas_by_id), dict(id_mapping), key_schema_id, route
-    )
-
-    def transform(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            keys, values, errors = replicate(batch.column("value"))
-            columns = [
-                keys,
-                values,
-                pa.array([target_topic] * batch.num_rows, pa.string()),
-                batch.column("partition"),
-                batch.column("offset"),
-                batch.column("timestamp"),
-            ]
-            if route:
-                columns.append(errors)
-            yield pa.RecordBatch.from_arrays(columns, names=schema.fieldNames())
-
-    return env.select("value", "partition", "offset", "timestamp").mapInArrow(
-        transform, schema=schema
-    )
+    return ReplicationPlan(
+        env.sparkSession, schemas_by_id, target_topic, key_schema_id, id_mapping, on_error
+    ).transform(env)
 
 
 def plan_replication(
@@ -312,27 +391,12 @@ def plan_replication(
     value_schema=None,
     on_error: str = "abort",
 ) -> DataFrame:
-    """Plan-time registry work (R6 auto-registration, README.adoc:27
-    parity) + the transform: register the key schema on the target,
-    snapshot the source registry for decode (seeded from ``value_schema``
-    when the source registry is empty, as in direct batch use), propagate
-    EVERY known source schema into the target registry (the
-    auto-registration the Confluent serde does lazily, done eagerly at
-    plan time), and build the distributed transform with the id mapping.
-    This is the one place registry propagation happens, for both
-    ``on_error`` modes of ``replicate_transform``."""
-    key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
-    snapshot = source_registry.snapshot()
-    if value_schema is not None and not snapshot:
-        source_registry.register(f"{target_topic}-value", value_schema)
-        snapshot = source_registry.snapshot()
-    id_mapping = {
-        src_id: target_registry.register(f"{target_topic}-value", schema)
-        for src_id, schema in snapshot.items()
-    }
-    return replicate_transform(
-        env, snapshot, target_topic, key_id, id_mapping, on_error=on_error
-    )
+    """``ReplicationPlan.from_registries`` (the registry propagation) +
+    ``replicate_transform`` over a static ``env``."""
+    return ReplicationPlan.from_registries(
+        env.sparkSession, source_registry, target_registry, target_topic, value_schema,
+        on_error,
+    ).transform(env)
 
 
 # ---------------------------------------------------------------------------
@@ -342,34 +406,60 @@ def committed_marker(target_dir: str, batch_id: int) -> str:
     return os.path.join(target_dir, "commits", str(batch_id))
 
 
-def _committing_writer(marker_dir: str, outputs):
-    """foreachBatch body: write-then-commit-marker, idempotent on replay.
+def _write_parquet(df: DataFrame, target_dir: str, batch_id: int, mode: str) -> None:
+    # no dictionaries: keys, values and offsets are unique per record, so
+    # parquet would build each dictionary only to drop it
+    df.write.mode(mode).option("parquet.enable.dictionary", "false").parquet(
+        os.path.join(target_dir, "data", str(batch_id))
+    )
 
-    ``outputs(batch_df)`` returns the ``(DataFrame, target_dir)`` pairs of
-    one batch; it runs only for a batch that is not yet committed.
 
-    - data lands in <target_dir>/data/<batch_id>/, each output in order
-      (task failures abort the whole write — the R8 barrier);
-    - ONE commit marker under ``marker_dir`` is created atomically AFTER
-      every write succeeded (R7 transaction commit), so a batch with
-      several outputs commits all of them or none;
+def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = None):
+    """foreachBatch body over ``plan.walk`` batches: write-then-commit-
+    marker, idempotent on replay. ``dlq_dir`` is given in route mode only.
+
+    - the rows the walker vouches for land in <main_dir>/data/<batch_id>/
+      (overwrite), in one job that also counts the declined rows;
+    - only if that count is above 0 does a second job run ``_reencode``
+      over the declined rows: in abort mode they are appended to the same
+      dir, or the job raises the first failing row's error; in route mode
+      they are materialized once, the good ones appended to the main dir
+      and the classified ones written to <dlq_dir>/data/<batch_id>/ (a
+      batch with none removes that dir, left by an earlier attempt);
+    - task failures abort the whole write (the R8 barrier); ONE commit
+      marker under ``main_dir`` is created atomically AFTER every write
+      succeeded (R7 transaction commit), so a batch commits both sinks or
+      neither;
     - a replayed batch (crash between marker and checkpoint ack) sees its
       marker and skips — effectively-exactly-once downstream; a replay of
       an uncommitted batch overwrites its partial data dirs;
     - Structured Streaming acks the checkpoint only after this returns
       (R9 post-commit offset ack).
     """
+    if (dlq_dir is not None) != plan.route:
+        raise ValueError("a dead-letter dir goes with an on_error='route' plan, and only then")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = committed_marker(marker_dir, batch_id)
+        marker = committed_marker(main_dir, batch_id)
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
-        for df, target_dir in outputs(batch_df):
-            # no dictionaries: keys, values and offsets are unique per
-            # record, so parquet would build each dictionary only to drop it
-            df.write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(
-                os.path.join(target_dir, "data", str(batch_id))
-            )
+        declined = Observation()
+        counted = batch_df.observe(declined, F.count_if(F.col(_SPAN) < 0).alias("n"))
+        _write_parquet(plan.accepted(counted), main_dir, batch_id, "overwrite")
+        if declined.get["n"]:
+            slow = plan.declined(batch_df)
+            if dlq_dir is None:
+                _write_parquet(slow, main_dir, batch_id, "append")
+            else:
+                slow = slow.localCheckpoint(eager=True)  # the split reads it twice
+                good = slow.filter(F.col("error").isNull()).drop("error")
+                _write_parquet(good, main_dir, batch_id, "append")
+                _write_parquet(slow.filter(F.col("error").isNotNull()), dlq_dir, batch_id,
+                               "overwrite")
+        elif dlq_dir is not None:
+            # a replay whose first attempt routed rows that now pass (a
+            # schema registered in between): its dead letters must not commit
+            shutil.rmtree(os.path.join(dlq_dir, "data", str(batch_id)), ignore_errors=True)
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
@@ -377,29 +467,6 @@ def _committing_writer(marker_dir: str, outputs):
         os.rename(tmp, marker)  # atomic commit point
 
     return write
-
-
-def batch_writer(target_dir: str):
-    """foreachBatch body of the strict pipeline: each batch's records land
-    under ``target_dir`` behind its commit marker."""
-    return _committing_writer(target_dir, lambda batch_df: [(batch_df, target_dir)])
-
-
-def dlq_batch_writer(main_dir: str, dlq_dir: str):
-    """foreachBatch body for the DLQ split: good rows (error IS NULL,
-    error column dropped) land under the main topic dir, routed rows
-    (with their error class) under the dead-letter dir, and ONE commit
-    marker under the main dir — created only after BOTH writes — covers
-    the pair, so the main/DLQ split is batch-atomic: a crash between the
-    writes replays the whole batch into both sinks idempotently."""
-
-    def split(batch_df: DataFrame):
-        batch_df = batch_df.localCheckpoint(eager=True)  # split reads it twice
-        good = batch_df.filter(F.col("error").isNull()).drop("error")
-        bad = batch_df.filter(F.col("error").isNotNull())
-        return [(good, main_dir), (bad, dlq_dir)]
-
-    return _committing_writer(main_dir, split)
 
 
 def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: int) -> None:
@@ -440,18 +507,17 @@ def replicate_stream_dlq(
 ) -> None:
     """The R1–R9 streaming pipeline in dead-letter mode: same source,
     registry propagation and checkpoint mechanics as ``replicate_stream``,
-    but records flow through ``replicate_transform(on_error="route")`` and
-    the two-sink ``dlq_batch_writer``. ``corrupt`` optionally maps the
-    envelope DataFrame before the transform (test harnesses inject
-    deterministic corruption there)."""
+    but bad records are routed (``on_error="route"``) and ``batch_writer``
+    commits the main and dead-letter sinks under one marker. ``corrupt``
+    optionally maps the envelope DataFrame before the transform (test
+    harnesses inject deterministic corruption there)."""
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
     if corrupt is not None:
         env = corrupt(env)
-    out = plan_replication(
-        env, source_registry, target_registry, target_topic, value_schema,
-        on_error="route",
+    plan = ReplicationPlan.from_registries(
+        spark, source_registry, target_registry, target_topic, value_schema, on_error="route"
     )
-    _drain(out, dlq_batch_writer(main_dir, dlq_dir), checkpoint_dir, timeout_sec)
+    _drain(plan.walk(env), batch_writer(plan, main_dir, dlq_dir), checkpoint_dir, timeout_sec)
 
 
 def read_committed(
@@ -465,7 +531,7 @@ def read_committed(
     consumers rely on, application.yml:10). Data is read from
     ``target_dir`` with ``schema``; markers from ``marker_dir``, which
     defaults to ``target_dir``. A dead-letter sink shares the main sink's
-    markers (``dlq_batch_writer``), so it reads as
+    markers (``batch_writer``), so it reads as
     ``read_committed(spark, dlq_dir, marker_dir=main_dir,
     schema=DLQ_ENVELOPE)``."""
     commits = os.path.join(marker_dir or target_dir, "commits")
@@ -542,11 +608,11 @@ def replicate_stream(
         listener.terminated.clear()
         spark.streams.addListener(listener)
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
-    out = plan_replication(
-        env, source_registry, target_registry, target_topic, value_schema
+    plan = ReplicationPlan.from_registries(
+        spark, source_registry, target_registry, target_topic, value_schema
     )
     try:
-        _drain(out, batch_writer(target_dir), checkpoint_dir, timeout_sec)
+        _drain(plan.walk(env), batch_writer(plan, target_dir), checkpoint_dir, timeout_sec)
     finally:
         if listener is not None:
             # listener events ride an async bus that delivers them in

@@ -268,7 +268,8 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's semantics on a bad record is abort-the-batch
     (ReplicationApplication.java:71 NPE → transaction abort; mirrored by
     ``on_error="abort"`` + pytest test_missing_id_aborts_batch); this
-    query is the DLQ production mode of the same Arrow pass.
+    query is the DLQ production mode of the same transform: the JVM walker
+    and rewrite, plus the declined rows' ``_reencode`` job.
     Scale shape: corruption + routing are per-row map work; the
     accounting is one 3-group aggregate.
     """
@@ -317,9 +318,11 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dead-letter R1–R9 pipeline END TO END in streaming mode: the
     envelope stream is corrupted deterministically in-plan (``_corrupt``,
-    the replication_dlq_routing classes), replicated in route mode, and
-    committed through the two-sink batch-atomic ``dlq_batch_writer`` (one marker covers the
-    main write AND the dead-letter write). The query then reads BOTH
+    the replication_dlq_routing classes), replicated in route mode (the
+    JVM walker and rewrite, plus the declined rows' ``_reencode`` job), and
+    committed through the two-sink batch-atomic ``batch_writer(plan,
+    main_dir, dlq_dir)`` (one marker covers the main write AND the
+    dead-letter write). The query then reads BOTH
     committed sinks back and emits per-disposition accounting with the
     good rows' ids verified through the consumer decode.
 

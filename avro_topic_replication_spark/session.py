@@ -42,6 +42,19 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    16g, or three quarters of the host's ``MemAvailable`` if that is less
+    (a 16g heap on a 15 GiB host could outgrow the host). 16g where
+    ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, kib * 3 // 4 // 1024)}m"
+
+
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's dynamic confs to an existing session (idempotent).
 
@@ -114,11 +127,12 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        # Sized for local[32]/128GiB; a cluster deploy overrides via
-        # spark-submit. Dims (region/nation/customer/supplier/part) should
-        # broadcast; facts sort-merge — the 10MB default threshold does the
-        # right thing at every SF, AQE corrects at runtime.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Fitted to the host (default_driver_memory); a cluster deploy
+        # overrides via spark-submit. Dims (region/nation/customer/supplier/
+        # part) should broadcast; facts sort-merge — the 10MB default
+        # threshold does the right thing at every SF, AQE corrects at runtime.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")

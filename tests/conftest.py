@@ -38,6 +38,7 @@ QUICK_MODULES = frozenset((
     "test_scaling_tool",
     "test_r12_optimizations",
     "test_r13_optimizations",
+    "test_session",
 ))
 
 

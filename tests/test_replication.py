@@ -15,15 +15,16 @@ from __future__ import annotations
 
 import math
 import os
+import random
 import re
 import uuid
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import given, settings
+from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from avro_topic_replication_spark.functions import avro_codec
 from avro_topic_replication_spark.operators import replication as R
@@ -67,6 +68,28 @@ def test_codec_full_roundtrip():
 def test_codec_union_null_and_default():
     out = avro_codec.encode({"id": "1"}, R.FOO_SCHEMA)  # name omitted → default null
     assert avro_codec.decode(out, R.FOO_SCHEMA) == {"id": "1", "name": None}
+
+
+_PRIMITIVE_NAMES = ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
+
+
+def test_parse_schema_returns_primitive_names_without_json(monkeypatch):
+    """A bare primitive name is its own parsed schema, returned without a
+    JSON parse (``decode`` parses its schema on every datum: every key
+    decode used to raise and catch a ``JSONDecodeError``); a JSON string
+    literal, a JSON schema and a named-type reference parse as before."""
+    for name in _PRIMITIVE_NAMES:
+        assert avro_codec.parse_schema(f'"{name}"') == name
+    assert avro_codec.parse_schema('{"type": "string"}') == {"type": "string"}
+    assert avro_codec.parse_schema("com.foo.Named") == "com.foo.Named"
+
+    def no_json(text):
+        raise AssertionError(f"json.loads({text!r})")
+
+    monkeypatch.setattr(avro_codec.json, "loads", no_json)
+    for name in _PRIMITIVE_NAMES:
+        assert avro_codec.parse_schema(name) == name
+    assert avro_codec.decode(avro_codec.encode("k", "string"), "string") == "k"
 
 
 def test_confluent_framing():
@@ -129,7 +152,7 @@ def test_truncated_frame_no_longer_decodes_shortened():
 
 
 # ---------------------------------------------------------------------------
-# header-rewrite kernel vs the full decode → re-encode path (no Spark)
+# JVM walker + expression rewrite vs the full decode → re-encode path
 # ---------------------------------------------------------------------------
 ARRAY_SCHEMA = {
     "type": "record",
@@ -145,34 +168,78 @@ _MAPPING = {1: 11, 2: 12, 3: 13}
 _KEY_ID = 10
 
 
-def _outcomes(raw, snapshot=_SNAPSHOT, mapping=_MAPPING):
-    """(key, value, error) of one framed value — or the exception's type
-    and message — from the kernel and from the full path, in both modes."""
+def _examples(strategy, n: int) -> list:
+    """``n`` examples drawn by hypothesis (fewer if it runs out of distinct
+    ones), so that a test checks them all in one Spark job; a failing
+    assertion names the bytes that failed."""
+    drawn = []
 
-    def run(fn):
-        try:
-            return fn()
-        except Exception as e:  # abort mode: the error is the outcome
-            return type(e), str(e)
+    @given(strategy)
+    @settings(max_examples=n, deadline=None, database=None, phases=[Phase.generate])
+    def draw(example):
+        drawn.append(example)
 
-    out = {}
-    for route in (False, True):
-        kernel = R._replication_kernel(snapshot, mapping, _KEY_ID, route)
-        out[route] = (
-            run(lambda: tuple(col[0].as_py() for col in kernel(pa.array([raw], pa.binary())))),
-            run(lambda: R._reencode(raw, snapshot, mapping, _KEY_ID, route)),
-        )
-    return out
+    draw()
+    return drawn
 
 
-def _walk_one(schema, frame: bytes):
-    """The ``id`` span (frame offsets) the columnar walker finds in one
-    framed value, or None where it declines the payload."""
-    data = np.frombuffer(frame, np.uint8)
-    ok, id_start, id_end = avro_codec.compile_walker(schema)(
-        data, np.array([5]), np.array([len(frame)])
-    )
-    return (int(id_start[0]), int(id_end[0])) if ok[0] else None
+def _envelope(spark, raws: list, partition=None):
+    """The framed values ``raws`` as a source envelope DataFrame read from
+    one parquet file (a real scan, so the walk and the rewrite run as
+    generated code): ``offset`` is the row's index, ``partition`` 0 or the
+    given per-row numbers."""
+    path = os.path.join(SCRATCH, "repltest", uuid.uuid4().hex[:12], "env.parquet")
+    os.makedirs(os.path.dirname(path))
+    n = len(raws)
+    pq.write_table(pa.table({
+        "key": pa.nulls(n, pa.binary()),
+        "value": pa.array(raws, pa.binary()),
+        "topic": pa.array(["t"] * n),
+        "partition": pa.array(partition or [0] * n, pa.int32()),
+        "offset": pa.array(range(n), pa.int64()),
+        "timestamp": pa.nulls(n, pa.timestamp("us", tz="UTC")),
+    }), path)
+    return spark.read.schema(R.KAFKA_ENVELOPE).parquet(path)
+
+
+def _plan(spark, snapshot=_SNAPSHOT, mapping=_MAPPING, on_error="abort"):
+    return R.ReplicationPlan(spark, snapshot, "t", _KEY_ID, mapping, on_error)
+
+
+def _spans(spark, raws: list, snapshot=_SNAPSHOT) -> list:
+    """The ``id`` span (value offsets, length prefix included) the JVM
+    walker finds in each framed value, or None where it declines it."""
+    plan = _plan(spark, snapshot, {sid: sid for sid in snapshot})
+    spans = dict(plan.walk(_envelope(spark, raws)).select("offset", "_span").collect())
+    return [None if spans[i] < 0 else (spans[i] >> 32, spans[i] & 0xFFFFFFFF)
+            for i in range(len(raws))]
+
+
+def _run(fn):
+    try:
+        return fn()
+    except Exception as e:  # abort mode: the error is the outcome
+        return type(e), str(e)
+
+
+def _check_kernel(spark, raws: list, snapshot=_SNAPSHOT, mapping=_MAPPING) -> dict:
+    """The kernel's outcome for each framed value equals the full path's
+    (per-row ``_reencode``) in both on_error modes; returns index → (key,
+    value, None) of the values the walker vouched for. Those take the JVM
+    rewrite, run here as one Spark job, and the full path must give
+    exactly its key and value with no error in both modes. Every other
+    value takes ``_reencode`` itself (the declined rows' job runs it
+    unchanged; the Spark tests below cover that job)."""
+    plan = _plan(spark, snapshot, mapping)
+    fast = {
+        r["offset"]: (bytes(r["key"]), bytes(r["value"]), None)
+        for r in plan.accepted(plan.walk(_envelope(spark, raws))).collect()
+    }
+    for i, rewrite in fast.items():
+        for route in (False, True):
+            full = _run(lambda: R._reencode(raws[i], snapshot, mapping, _KEY_ID, route))
+            assert rewrite == full, (raws[i], route)
+    return fast
 
 
 def _mutations(frame: bytes, id_start: int, id_end: int):
@@ -199,27 +266,32 @@ _FOO_DATUM = st.fixed_dictionaries(
         "name": st.one_of(st.none(), st.text(max_size=20)),
     }
 )
+_FOO_RECORD = st.tuples(_FOO_DATUM, st.one_of(st.none(), st.text(max_size=8)))
 
 
-@given(_FOO_DATUM, st.one_of(st.none(), st.text(max_size=8)))
-@settings(max_examples=60, deadline=None)
-def test_kernel_matches_full_path_property(datum, tag):
+def _foo_frame(datum: dict, tag) -> tuple[int, bytes]:
+    """(schema id, frame) of a Foo record: v2 when it has a ``tag``."""
+    if tag is None:
+        return 1, avro_codec.serialize_confluent(datum, R.FOO_SCHEMA, 1)
+    return 2, avro_codec.serialize_confluent({**datum, "tag": tag}, R.FOO_SCHEMA_V2, 2)
+
+
+def test_kernel_matches_full_path_property(spark):
     """The header rewrite gives the full path's (key, value, error) byte for
-    byte in both on_error modes, on valid Foo v1/v2 frames (multi-byte
-    UTF-8, null names, 2-byte id lengths) and on damaged copies of them.
-    A record with a ``tag`` is a v2 record."""
-    sid, schema = (1, R.FOO_SCHEMA) if tag is None else (2, R.FOO_SCHEMA_V2)
-    if tag is not None:
-        datum = {**datum, "tag": tag}
-    frame = avro_codec.serialize_confluent(datum, schema, sid)
-    # the valid frame really takes the fast path, and finds the id
-    id_start, id_end = _walk_one(schema, frame)
-    assert frame[id_start:id_end] == avro_codec.encode(datum["id"], "string")
-    for raw in [frame, *_mutations(frame, id_start, id_end)]:
-        for route, (kernel, full) in _outcomes(raw).items():
-            assert kernel == full, (raw, route)
-    key, value, error = _outcomes(frame)[True][0]
-    assert error is None and value == avro_codec.frame(_MAPPING[sid], frame[5:])
+    byte in both on_error modes, on 60 drawn valid Foo v1/v2 frames
+    (multi-byte UTF-8, null names, 2-byte id lengths) and on damaged
+    copies of them. Every valid frame takes the fast path: the walker
+    finds its id, and the value is the frame under the target id."""
+    records = _examples(_FOO_RECORD, 60)
+    frames = [_foo_frame(datum, tag) for datum, tag in records]
+    raws = [frame for _, frame in frames]
+    for (datum, _), frame, span in zip(records, list(raws), _spans(spark, raws)):
+        assert span is not None, frame
+        assert frame[span[0]:span[1]] == avro_codec.encode(datum["id"], "string")
+        raws.extend(_mutations(frame, *span))
+    fast = _check_kernel(spark, raws)
+    for i, (sid, frame) in enumerate(frames):
+        assert fast[i][1] == avro_codec.frame(_MAPPING[sid], frame[5:]), frame
 
 
 WALKABLE_SCHEMA = {
@@ -255,22 +327,20 @@ WALKABLE_SCHEMA = {
          "by": b"\x01" * 70, "e": "B", "fx": b"zzz", "u": {"x": True}},
     ],
 )
-def test_kernel_matches_full_path_on_every_walkable_type(datum):
+def test_kernel_matches_full_path_on_every_walkable_type(spark, datum):
     """Every type the walker covers, on valid frames and on every
     truncation, one extra byte, and each byte replaced by each of a few
     values (varint continuation and sign bits, boolean 2, UTF-8 lead
     bytes): the kernel's outcome equals the full path's in both modes."""
     snapshot, mapping = {5: WALKABLE_SCHEMA}, {5: 15}
     frame = avro_codec.serialize_confluent(datum, WALKABLE_SCHEMA, 5)
-    # the fast path, but for a NaN float, which the walker declines
-    assert (_walk_one(WALKABLE_SCHEMA, frame) is None) == math.isnan(datum["f"])
     damaged = [frame[:k] for k in range(len(frame))] + [frame + b"\x01"]
     for at in range(5, len(frame)):
         for b in (0x00, 0x01, 0x02, 0x7F, 0x80, 0xC3, 0xFF):
             damaged.append(frame[:at] + bytes([b]) + frame[at + 1:])
-    for raw in [frame, *damaged]:
-        for route, (kernel, full) in _outcomes(raw, snapshot, mapping).items():
-            assert kernel == full, (raw, route)
+    fast = _check_kernel(spark, [frame, *damaged], snapshot, mapping)
+    # the fast path, but for a NaN float, which the walker declines
+    assert (0 not in fast) == math.isnan(datum["f"])
 
 
 def _walkable_payload(**raw: bytes) -> bytes:
@@ -310,17 +380,14 @@ def _walkable_payload(**raw: bytes) -> bytes:
          "float_quiet_nan", "float_signaling_nan", "double_quiet_nan",
          "double_signaling_nan"],
 )
-def test_walker_declines_what_the_full_path_would_not_give_back(raw):
+def test_walker_declines_what_the_full_path_would_not_give_back(spark, raw):
     """Each check of the walker, on its own: a payload one field away
     from a walkable one is declined, and the kernel still gives the full
     path's outcome for it in both modes. The walker is conservative on
     NaN: it declines every NaN float or double."""
     snapshot, mapping = {5: WALKABLE_SCHEMA}, {5: 15}
-    assert _walk_one(WALKABLE_SCHEMA, avro_codec.frame(5, _walkable_payload())) is not None
-    frame = avro_codec.frame(5, _walkable_payload(**raw))
-    assert _walk_one(WALKABLE_SCHEMA, frame) is None
-    for kernel, full in _outcomes(frame, snapshot, mapping).values():
-        assert kernel == full
+    raws = [avro_codec.frame(5, _walkable_payload()), avro_codec.frame(5, _walkable_payload(**raw))]
+    assert set(_check_kernel(spark, raws, snapshot, mapping)) == {0}
 
 
 def _reference_varint(b: bytes):
@@ -339,22 +406,41 @@ def _reference_varint(b: bytes):
     return (value, size) if value < 2**64 and out.getvalue() == b[:size] else None
 
 
-@given(st.one_of(
+_VARINT_BYTES = st.one_of(
     st.binary(min_size=1, max_size=12),
     st.integers(0, 2**64 - 1).map(lambda n: avro_codec.encode(n >> 1 ^ -(n & 1), "long")),
     st.lists(st.sampled_from([0x80, 0xFF, 0x81]), min_size=9, max_size=11).map(bytes).flatmap(
         lambda head: st.sampled_from([head + bytes([t]) for t in (0, 1, 2, 0x7F)])),
-))
-@settings(max_examples=300, deadline=None)
-def test_columnar_varint_reads_exactly_the_shortest_encodings(b):
+)
+
+
+def test_jvm_varint_reads_exactly_the_shortest_encodings(spark):
     """The walker's varint reader accepts a varint exactly where the
     scalar codec reads a value below 2**64 that it would write back with
-    the same bytes, and then agrees on the value and the size."""
-    value, nxt, ok = avro_codec._varint(np.frombuffer(b, np.uint8), np.array([0]))
-    want = _reference_varint(b)
-    assert bool(ok[0]) == (want is not None), b
-    if want is not None:
-        assert (int(value[0]), int(nxt[0])) == want
+    the same bytes, and then agrees on its size and, as a string length,
+    on its value; on 300 drawn byte strings. Each is read twice: as a
+    ``long`` field after an empty id (the payload must end with it), and
+    as the id's own length prefix, followed by as many bytes as it says
+    (up to 64; a larger length runs past the end)."""
+    as_long = {5: {"type": "record", "name": "L",
+                   "fields": [{"name": "id", "type": "string"}, {"name": "n", "type": "long"}]}}
+    as_length = {5: {"type": "record", "name": "S", "fields": [{"name": "id", "type": "string"}]}}
+    cases = [(b, _reference_varint(b)) for b in _examples(_VARINT_BYTES, 300)]
+    longs, lengths, want = [], [], []
+    for b, ref in cases:
+        if ref is None:
+            longs.append(avro_codec.frame(5, b"\x00" + b))
+            lengths.append(avro_codec.frame(5, b))
+            want.append((None, None))
+            continue
+        value, size = ref
+        n = value >> 1 ^ -(value & 1)  # zigzag
+        longs.append(avro_codec.frame(5, b"\x00" + b[:size]))
+        lengths.append(avro_codec.frame(5, b[:size] + b"a" * min(max(n, 0), 64)))
+        want.append(((5, 6), (5, 5 + size + n) if 0 <= n <= 64 else None))
+    got = zip(_spans(spark, longs, as_long), _spans(spark, lengths, as_length))
+    for (b, _), g, w in zip(cases, got, want):
+        assert g == w, b
 
 
 def test_walker_covers_only_what_reencodes_exactly():
@@ -383,76 +469,148 @@ def test_walker_covers_only_what_reencodes_exactly():
         assert avro_codec.compile_walker(schema) is None, schema
 
 
-def test_kernel_array_schema_takes_full_path():
+def _first_error(rows: list, route: bool):
+    """Per-row ``_reencode`` of each value: its (key, value, error) rows
+    or, in abort mode, the first failing row's exception type and message."""
+    out = []
+    for raw in rows:
+        try:
+            out.append(R._reencode(raw, _SNAPSHOT, _MAPPING, _KEY_ID, route))
+        except Exception as e:
+            return type(e), str(e)
+    return out
+
+
+def _replicated(spark, env, route: bool):
+    """``replicate_transform``'s (key, value, error) rows of ``env`` in
+    offset order, by partition, or, when its job fails, the Spark error's
+    text."""
+    try:
+        rows = R.replicate_transform(env, _SNAPSHOT, "t", _KEY_ID, _MAPPING,
+                                     "route" if route else "abort").collect()
+    except Exception as e:
+        return str(e)
+    out = {}
+    for r in sorted(rows, key=lambda r: r["offset"]):
+        out.setdefault(r["partition"], []).append((
+            r["key"] and bytes(r["key"]), r["value"] and bytes(r["value"]),
+            r["error"] if route else None))
+    return out
+
+
+def _agrees(got, want) -> bool:
+    """A Spark run over one batch matches the full path's outcome: the
+    same rows, or a failed job whose error is the full path's first
+    failing row's."""
+    if isinstance(want, tuple):
+        return isinstance(got, str) and f"{want[0].__name__}: {want[1]}" in got
+    return isinstance(got, dict) and list(got.values()) == [want]
+
+
+def test_kernel_array_schema_takes_full_path(spark):
     """A schema the walker does not cover gets no walker, and its records
-    still replicate correctly through the full path."""
+    still replicate correctly through the full path, in both modes."""
     assert avro_codec.compile_walker(ARRAY_SCHEMA) is None
     datum = {"id": "x7", "tags": ["a", "é"]}
     raw = avro_codec.serialize_confluent(datum, ARRAY_SCHEMA, 3)
-    outcomes = _outcomes(raw)
-    for kernel, full in outcomes.values():
-        assert kernel == full
-    key, value, error = outcomes[True][0]
+    env = _envelope(spark, [raw])
+    assert _check_kernel(spark, [raw]) == {}
+    for route in (False, True):
+        assert _replicated(spark, env, route) == {0: _first_error([raw], route)}
+    (key, value, error), = _replicated(spark, env, True)[0]
     assert error is None
     assert avro_codec.deserialize_confluent(key, {_KEY_ID: "string"}) == (_KEY_ID, "x7")
     assert avro_codec.deserialize_confluent(value, {13: ARRAY_SCHEMA}) == (13, datum)
 
 
-def _kernel_rows(values: pa.Array, route: bool):
-    """The kernel's (key, value, error) rows for a batch of framed values
-    or, when it raises, the exception's type and message."""
+def _fallback_outcome(plan, raws: list, lo: int = 0):
+    """The declined rows' function (``plan._fallback``) over ``raws[lo:]``
+    as an Arrow slice with offset ``lo``, run in the driver: its (key,
+    value, error) rows, error None in abort mode, or the exception it
+    raises as (type, message)."""
+    batch = pa.record_batch({
+        "value": pa.array(raws, pa.binary()),
+        "partition": pa.array([0] * len(raws), pa.int32()),
+        "offset": pa.array(range(len(raws)), pa.int64()),
+        "timestamp": pa.nulls(len(raws), pa.timestamp("us", tz="UTC")),
+    }).slice(lo)
     try:
-        columns = R._replication_kernel(_SNAPSHOT, _MAPPING, _KEY_ID, route)(values)
+        (out,) = plan._fallback(iter([batch]))
     except Exception as e:
         return type(e), str(e)
-    return list(zip(*(c.to_pylist() for c in columns)))
+    assert out.column("offset").to_pylist() == list(range(lo, len(raws)))
+    errors = out.column("error").to_pylist() if plan.route else [None] * out.num_rows
+    return list(zip(out.column("key").to_pylist(), out.column("value").to_pylist(), errors))
 
 
-def _full_path_rows(raws: list, route: bool):
-    """Per-row ``_reencode`` of each value: its (key, value, error) rows
-    or, in abort mode, the first failing row's exception type and message."""
-    rows = []
-    for raw in raws:
-        try:
-            rows.append(R._reencode(raw, _SNAPSHOT, _MAPPING, _KEY_ID, route))
-        except Exception as e:
-            return type(e), str(e)
-    return rows
+def test_kernel_matches_full_path_on_mixed_batches(spark):
+    """25 drawn batches mixing Foo v1/v2 frames, their damaged copies,
+    nulls, unknown ids and records of a schema the walker does not cover,
+    each in a shuffled order, through ``replicate_transform`` (the JVM
+    rewrite ∪ the declined rows' ``_reencode`` job): in route mode every
+    batch gets per-row ``_reencode``'s (key, value, error) rows, in one
+    job; in abort mode a batch fails with its first failing row's
+    exception type and message; batches with no failing row replicate
+    whole in abort mode, as in route mode.
 
+    Every batch, whole and as an Arrow slice with a non-zero offset, also
+    goes through the declined rows' function in the driver in both modes:
+    over all its rows and over the rows the walker declines (what the
+    second job receives) it gives per-row ``_reencode``'s rows or raises
+    the first failing row's error, and that error is the whole batch's,
+    since every row the walker vouches for replicates in abort mode."""
+    examples = _examples(st.tuples(st.lists(_FOO_RECORD, min_size=1, max_size=4),
+                                   st.integers(0, 2**32).map(random.Random)), 25)
+    frames = [[_foo_frame(*record)[1] for record in records] for records, _ in examples]
+    spans = iter(_spans(spark, [f for batch in frames for f in batch]))
+    batches, cleans = [], []
+    for batch_frames, (_, rnd) in zip(frames, examples):
+        clean = [avro_codec.serialize_confluent({"id": "x7", "tags": ["a", "é"]}, ARRAY_SCHEMA, 3)]
+        raws = [None, None,
+                avro_codec.serialize_confluent({"id": "u", "name": None}, R.FOO_SCHEMA, 999)]
+        for frame in batch_frames:
+            clean.append(frame)
+            raws.extend(_mutations(frame, *next(spans)))
+        raws.extend(clean * 2)
+        rnd.shuffle(raws)
+        rnd.shuffle(clean)
+        batches.append(raws)
+        cleans.append(clean)
 
-@given(
-    st.lists(st.tuples(_FOO_DATUM, st.one_of(st.none(), st.text(max_size=8))),
-             min_size=1, max_size=4),
-    st.randoms(use_true_random=False),
-)
-@settings(max_examples=25, deadline=None)
-def test_kernel_matches_full_path_on_mixed_batches(datums, rnd):
-    """One batch mixing Foo v1/v2 frames, their damaged copies, nulls,
-    unknown ids and records of a schema the walker does not cover, in a
-    shuffled order: the kernel's (key, value, error) columns equal per-row
-    ``_reencode`` in both modes, on the whole array and on a slice with a
-    non-zero offset; in abort mode it raises the first failing row's
-    error. Where no row fails, abort mode replicates the whole batch."""
-    clean = [avro_codec.serialize_confluent({"id": "x7", "tags": ["a", "é"]}, ARRAY_SCHEMA, 3)]
-    raws = [None, None, avro_codec.serialize_confluent({"id": "u", "name": None}, R.FOO_SCHEMA, 999)]
-    for datum, tag in datums:
-        sid, schema = (1, R.FOO_SCHEMA) if tag is None else (2, R.FOO_SCHEMA_V2)
-        frame = avro_codec.serialize_confluent(
-            datum if tag is None else {**datum, "tag": tag}, schema, sid
-        )
-        clean.append(frame)
-        raws.extend(_mutations(frame, *_walk_one(schema, frame)))
-    raws.extend(clean * 2)
-    rnd.shuffle(raws)
-    rnd.shuffle(clean)
-    values = pa.array(raws, pa.binary())
-    lo = rnd.randrange(1, len(raws))
-    hi = rnd.randrange(lo, len(raws) + 1)
-    for arr, rows in ((values, raws), (values.slice(lo, hi - lo), raws[lo:hi]),
-                      (pa.array(clean, pa.binary()), clean)):
-        for route in (False, True):
-            assert _kernel_rows(arr, route) == _full_path_rows(rows, route), (route, arr.offset)
-    assert _kernel_rows(pa.array(clean, pa.binary()), False) == _full_path_rows(clean, True)
+    def envelope(groups):
+        return _envelope(spark, [r for g in groups for r in g],
+                         [k for k, g in enumerate(groups) for _ in g])
+
+    env = envelope(batches)
+    routed = _replicated(spark, env, True)
+    for k, raws in enumerate(batches):
+        assert routed[k] == _first_error(raws, True), k
+    # a failed Spark job costs ~1 s (its Python worker is not reused), so
+    # abort mode fails the first few batches end to end; the driver-side
+    # checks below cover every batch in abort mode
+    for k, raws in enumerate(batches[:4]):
+        failed = _replicated(spark, env.filter(F.col("partition") == k), False)
+        assert _agrees(failed, _first_error(raws, False)), k
+    _check_kernel(spark, [r for raws in batches for r in raws])
+    env = envelope(cleans)
+    assert _replicated(spark, env, False) == _replicated(spark, env, True) == {
+        k: _first_error(clean, True) for k, clean in enumerate(cleans)}
+
+    walked = iter(_spans(spark, [r for raws in batches for r in raws]))
+    plans = {route: _plan(spark, on_error="route" if route else "abort")
+             for route in (False, True)}
+    for k, (raws, (_, rnd)) in enumerate(zip(batches, examples)):
+        vouched = [next(walked) is not None for _ in raws]
+        lo = rnd.randrange(1, len(raws))
+        for route, plan in plans.items():
+            for start in (0, lo):
+                rows = raws[start:]
+                declined = [r for r, v in zip(rows, vouched[start:]) if not v]
+                want = _first_error(rows, route)
+                assert _fallback_outcome(plan, raws, start) == want, (k, route, start)
+                assert _fallback_outcome(plan, declined) == _first_error(declined, route), k
+                if isinstance(want, tuple):
+                    assert _first_error(declined, route) == want, (k, start)
 
 
 def _utf8_cases() -> list[bytes]:
@@ -485,31 +643,17 @@ def _is_utf8(b: bytes) -> bool:
     return True
 
 
-def test_arrow_utf8_check_agrees_with_python():
-    """The kernel checks UTF-8 by casting the non-ASCII string spans of a
-    batch to ``pa.string()``: that cast must accept exactly what
-    ``bytes.decode("utf-8")`` accepts, span by span (a sequence split
-    across two spans is invalid in each). The walker, on one batch of all
-    the cases, vouches for exactly the payloads whose string decodes."""
+def test_jvm_utf8_check_agrees_with_python(spark):
+    """The walker's UTF-8 check accepts exactly what ``bytes.decode("utf-8")``
+    accepts: on one batch of every 1- and 2-byte sequence and the 3- and
+    4-byte edges, each the whole id of a payload, it vouches for exactly
+    the payloads whose id decodes."""
     cases = _utf8_cases()
-    valid = [c for c in cases if _is_utf8(c)]
-    invalid = [c for c in cases if not _is_utf8(c)]
-    assert len(valid) > 18000 and len(invalid) > 45000
-    pa.array(valid, pa.binary()).cast(pa.string())  # every valid span at once
-    for c in invalid:
-        with pytest.raises(pa.ArrowInvalid):
-            pa.array([c], pa.binary()).cast(pa.string())
-    with pytest.raises(pa.ArrowInvalid):
-        pa.array(["é".encode()[:1], "é".encode()[1:]], pa.binary()).cast(pa.string())
-
-    schema = {"type": "record", "name": "S", "fields": [{"name": "id", "type": "string"}]}
-    walk = avro_codec.compile_walker(schema)
-    for batch in (valid, cases):  # the cast passes; the cast raises
-        payloads = [avro_codec.encode(len(c), "long") + c for c in batch]
-        data = np.frombuffer(b"".join(payloads), np.uint8)
-        end = np.cumsum([len(p) for p in payloads])
-        ok, _, _ = walk(data, end - [len(p) for p in payloads], end)
-        assert ok.tolist() == [_is_utf8(c) for c in batch]
+    assert sum(map(_is_utf8, cases)) > 18000 and sum(not _is_utf8(c) for c in cases) > 45000
+    schema = {5: {"type": "record", "name": "S", "fields": [{"name": "id", "type": "string"}]}}
+    frames = [avro_codec.frame(5, avro_codec.encode(len(c), "long") + c) for c in cases]
+    accepted = [span is not None for span in _spans(spark, frames, schema)]
+    assert accepted == [_is_utf8(c) for c in cases]
 
 
 # ---------------------------------------------------------------------------
@@ -663,10 +807,11 @@ def test_idempotent_replay_of_committed_batch(spark, dirs):
         spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA
     )
     env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(dirs["src"])
-    out = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
-    writer = R.batch_writer(dirs["tgt"])
-    writer(out, 0)
-    writer(out, 0)  # replay
+    plan = R.ReplicationPlan.from_registries(
+        spark, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
+    writer = R.batch_writer(plan, dirs["tgt"])
+    writer(plan.walk(env), 0)
+    writer(plan.walk(env), 0)  # replay
     assert R.read_committed(spark, dirs["tgt"]).count() == 10
 
 
@@ -726,7 +871,8 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
     must agree byte for byte: every record's key and value from "route"
     equal those from "abort", and no record carries an error class. Both
     carry the source envelope's partition, offset and timestamp through
-    exactly, values and types (distinct microsecond timestamps)."""
+    exactly, values and types (distinct microsecond timestamps). With no
+    row declined, neither plan holds a Python stage."""
     import datetime as dt
 
     src_reg, tgt_reg = _fresh_registries()
@@ -756,6 +902,8 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
     envelope = ("partition", "offset", "timestamp")
     for out in (strict, routed):
         assert [out.schema[c] for c in envelope] == [R.KAFKA_ENVELOPE[c] for c in envelope]
+        plans = out._jdf.queryExecution().toString()
+        assert not [n for n in _PYTHON_NODES if n in plans], plans
     for off, r in got.items():
         for c in envelope:
             assert r[c] == want[off][c] == source[off][c], (off, c)
@@ -763,6 +911,98 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
         assert bytes(r["key"]) == bytes(want[off]["key"])
         assert bytes(r["value"]) == bytes(want[off]["value"])
         assert (r["topic"], r["partition"]) == (want[off]["topic"], want[off]["partition"])
+
+
+def _sql_executions(spark, after: int) -> list:
+    """(physical plan text, job count) of each SQL execution after
+    execution id ``after`` in the session's status store, once the
+    listener bus has delivered every event so far. The store lists
+    executions by id, so only the new ones cross py4j."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in reversed(range(xs.size())):
+        x = xs.apply(i)
+        if x.executionId() <= after:
+            break
+        out.append((x.physicalPlanDescription(), x.jobs().size()))
+    return out
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return xs.apply(xs.size() - 1).executionId() if xs.size() else -1
+
+
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+
+
+def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
+    """The fast path's regression guard. A clean Foo v1/v2 drain runs one
+    Spark job per micro-batch in both modes, and no executed plan holds a
+    Python node (route mode no longer materializes the batch), and route
+    mode drops dead letters an earlier attempt left for the batch. With
+    one truncated record the declined rows' second job runs: route mode
+    still commits, the record in the dead-letter sink; abort mode raises
+    the record's error and commits nothing."""
+    import datetime as dt
+
+    src_reg, tgt_reg = _fresh_registries()
+    v1 = src_reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    v2 = src_reg.register("source-topic-a-value", R.FOO_SCHEMA_V2)
+    rows = [(None,
+             avro_codec.serialize_confluent({"id": str(i), "name": None}, R.FOO_SCHEMA, v1)
+             if i % 2 else avro_codec.serialize_confluent(
+                 {"id": str(i), "name": f"n{i}", "tag": "t"}, R.FOO_SCHEMA_V2, v2),
+             "source-topic-a", 0, i, dt.datetime(2024, 1, 1)) for i in range(40)]
+    clean, corrupt = dirs["src"] + "-clean", dirs["src"] + "-corrupt"
+    spark.createDataFrame(rows, R.KAFKA_ENVELOPE).coalesce(1).write.parquet(clean)
+    rows[7] = rows[7][:1] + (rows[7][1][:-2],) + rows[7][2:]
+    spark.createDataFrame(rows, R.KAFKA_ENVELOPE).coalesce(1).write.parquet(corrupt)
+
+    def drain(source, mode):
+        """(plans, jobs, micro-batches) of one drain of ``source`` into a
+        fresh sink, in ``mode``."""
+        run = os.path.join(dirs["tgt"], f"{os.path.basename(source)}-{mode}")
+        before = _last_execution_id(spark)
+        lst = R.ReplicationProgressListener()
+        spark.streams.addListener(lst)
+        try:
+            if mode == "route":
+                R.replicate_stream_dlq(spark, source, run, run + "-dlq", src_reg, tgt_reg,
+                                       "target-topic-b", None, run + "-ckpt")
+            else:
+                R.replicate_stream(spark, source, run, src_reg, tgt_reg, "target-topic-b",
+                                   None, run + "-ckpt", timeout_sec=60)
+        finally:
+            lst.terminated.wait(10)
+            spark.streams.removeListener(lst)
+            new = _sql_executions(spark, after=before)
+        return [p for p, _ in new], sum(j for _, j in new), len(lst.batches)
+
+    # dead letters of an earlier, uncommitted attempt at the clean batch
+    stale = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-route-dlq", "data", "0")
+    os.makedirs(stale)
+    pq.write_table(pa.table({"offset": pa.array([3], pa.int64())}), os.path.join(stale, "a.parquet"))
+    for mode in ("abort", "route"):
+        plans, jobs, batches = drain(clean, mode)
+        assert batches == 1 and jobs == batches, mode
+        assert not [n for p in plans for n in _PYTHON_NODES if n in p], mode
+        run = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-{mode}")
+        assert R.read_committed(spark, run).count() == 40
+    assert not os.path.exists(stale)
+
+    plans, jobs, _ = drain(corrupt, "route")
+    assert jobs > 1 and any("MapInArrow" in p for p in plans)
+    run = os.path.join(dirs["tgt"], f"{os.path.basename(corrupt)}-route")
+    assert R.read_committed(spark, run).count() == 39
+    routed = R.read_committed(spark, run + "-dlq", marker_dir=run, schema=R.DLQ_ENVELOPE)
+    assert [(r["offset"], r["error"]) for r in routed.collect()] == [(7, "decode_error")]
+    with pytest.raises(Exception, match="EOFError: truncated payload"):
+        drain(corrupt, "abort")
+    run = os.path.join(dirs["tgt"], f"{os.path.basename(corrupt)}-abort")
+    assert R.read_committed(spark, run).count() == 0
 
 
 def test_multi_record_replication_preserves_all(spark, dirs):
