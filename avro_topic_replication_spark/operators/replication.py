@@ -32,12 +32,17 @@ Spark mapping implemented here:
 | R7 | executeInTransaction (:66-78)      | foreachBatch: write the accepted |
 |    |                                    | rows, then the declined rows' job|
 |    |                                    | if any (parquet without          |
-|    |                                    | dictionaries), then atomically   |
+|    |                                    | dictionaries; on a get_spark     |
+|    |                                    | local JVM through the fork-free  |
+|    |                                    | local FS, jvm/GraftLocalFile-    |
+|    |                                    | System.java), then atomically    |
 | R8 | future.get barrier → abort (:80-94)| create the commit marker; any    |
 |    |                                    | task failure fails the batch     |
 |    |                                    | before the marker exists         |
-| R9 | ack after commit (:99-100)         | checkpoint advances only after   |
-|    |                                    | foreachBatch returns             |
+| R9 | ack after commit (:99-100)         | checkpoint (offset WAL, commit   |
+|    |                                    | log: FileContext atomic renames, |
+|    |                                    | the same fork-free FS) advances  |
+|    |                                    | only after foreachBatch returns  |
 
 Crash-window semantics (honest, mirroring README.adoc:22-25): a crash
 after data-write but before marker leaves an uncommitted batch dir that
@@ -47,19 +52,14 @@ once for committed readers, exactly the reference's contract.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import struct
-import subprocess
-import tempfile
 import threading
-import zipfile
 from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
-import pyspark
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
@@ -75,7 +75,7 @@ from pyspark.sql.types import (
 
 from ..functions import avro_codec
 from ..sources.registry import MockSchemaRegistry
-from ..streaming.replay import SCRATCH
+from ..session import graft_jar, jar_on_class_path
 
 # A2 envelope (FIXTURES.md): the fixed schema of Spark's Kafka source.
 KAFKA_ENVELOPE = StructType(
@@ -168,53 +168,18 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
         return None, None, "unknown_schema" if isinstance(e, KeyError) else "decode_error"
 
 
-_WALKER_SOURCE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                              "jvm", "GraftWalk.java")
 _SPAN = "_span"  # the walked envelope's column: the id span, or -1 where declined
 
 
-def _walker_jar() -> str:
-    """The JVM walker's jar, compiled by ``javac`` against Spark's jars on
-    first use into the scratch dir, named by the source's sha256 and
-    moved into place whole (tmp dir + rename)."""
-    with open(_WALKER_SOURCE, "rb") as f:
-        digest = hashlib.sha256(f.read()).hexdigest()[:16]
-    jar = os.path.join(SCRATCH, "jvm", f"GraftWalk-{digest}.jar")
-    if os.path.exists(jar):
-        return jar
-    javac = shutil.which("javac")
-    if javac is None:
-        raise RuntimeError(
-            "the replication fast path compiles jvm/GraftWalk.java with javac, "
-            "which is not on PATH: install a JDK (17 or later)"
-        )
-    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
-    os.makedirs(os.path.dirname(jar), exist_ok=True)
-    with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
-        built = subprocess.run(
-            [javac, "--release", "17", "-cp", os.path.join(spark_home, "jars", "*"),
-             "-d", tmp, _WALKER_SOURCE],
-            capture_output=True, text=True,
-        )
-        if built.returncode:
-            raise RuntimeError(f"javac failed on {_WALKER_SOURCE}:\n{built.stderr}")
-        with zipfile.ZipFile(os.path.join(tmp, "walker.jar"), "w") as z:
-            for root, _, files in os.walk(tmp):
-                for name in files:
-                    if name.endswith(".class"):
-                        path = os.path.join(root, name)
-                        z.write(path, os.path.relpath(path, tmp))
-        os.rename(os.path.join(tmp, "walker.jar"), jar)
-    return jar
-
-
 def _ensure_walker(spark: SparkSession) -> None:
-    """Add the walker's jar to ``spark`` and register it as the SQL
-    function ``graft_walk`` (once per session object, like
-    ``ensure_runtime_conf``)."""
+    """Register the JVM walker (``graft_jar``) as the SQL function
+    ``graft_walk``, once per session object like ``ensure_runtime_conf``.
+    A JVM ``get_spark`` launched has the jar on its class path; any other
+    gets it by ``ADD JAR``."""
     if getattr(spark, "_graft_walk_registered", False):
         return
-    spark.sql(f"ADD JAR '{_walker_jar()}'")
+    if not jar_on_class_path():
+        spark.sql(f"ADD JAR '{graft_jar()}'")
     spark.udf.registerJavaFunction("graft_walk", "sparkgraft.GraftWalk", LongType())
     spark._graft_walk_registered = True
 
@@ -243,15 +208,35 @@ class ReplicationPlan:
         route = on_error == "route"
         self.route = route
         self.schema = DLQ_ENVELOPE if route else KAFKA_ENVELOPE
-        self.target_topic = target_topic
-        self.key_frame = avro_codec.frame(key_schema_id, b"")
-        program, self.targets = [], {}
+        program, targets = [], {}
         for sid, schema in snapshot.items():
             ops = avro_codec.compile_walker(schema) if sid in mapping else None
             if ops is not None:
                 program.append(struct.pack(">ii", sid, len(ops)) + ops)
-                self.targets[struct.pack(">I", sid)] = struct.pack(">I", mapping[sid])
-        self.program = b"".join(program)
+                targets[struct.pack(">I", sid)] = struct.pack(">I", mapping[sid])
+        # Built once as SQL text: every Column method is a few py4j round
+        # trips, so per-batch Column building made each micro-batch pay
+        # hundreds of them; a selectExpr/where is one call.
+        self._walk_sql = ["value", "`partition`", "`offset`", "`timestamp`",
+                          f"graft_walk(value, X'{b''.join(program).hex()}') AS {_SPAN}"]
+        start = f"CAST(shiftright({_SPAN}, 32) AS INT)"
+        end = f"CAST({_SPAN} & {0xFFFFFFFF} AS INT)"
+        target = ("CASE substring(value, 2, 4) " + " ".join(
+            f"WHEN X'{source.hex()}' THEN X'{dest.hex()}'" for source, dest in targets.items()
+        ) + " END") if targets else "CAST(NULL AS BINARY)"
+        key_frame = avro_codec.frame(key_schema_id, b"")
+        self._accepted_sql = [
+            f"concat(X'{key_frame.hex()}', substring(value, {start} + 1, {end} - {start}))"
+            " AS key",
+            f"concat(X'{avro_codec.MAGIC.hex()}', {target}, substring(value, 6, {2**31 - 1}))"
+            " AS value",
+            # the topic as UTF-8 bytes: no quoting or escaping rules apply
+            f"CAST(X'{target_topic.encode().hex()}' AS STRING) AS topic",
+            "`partition`",
+            "`offset`",
+            "`timestamp`",
+        ]
+        self._declined_count = F.expr(f"count_if({_SPAN} < 0) AS n")
         names = self.schema.fieldNames()
 
         def fallback(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -297,31 +282,17 @@ class ReplicationPlan:
 
     def walk(self, env: DataFrame) -> DataFrame:
         """The envelope columns the output keeps, plus the walker's span."""
-        span = F.call_udf("graft_walk", F.col("value"), F.lit(self.program))
-        return env.select("value", "partition", "offset", "timestamp", span.alias(_SPAN))
+        return env.selectExpr(*self._walk_sql)
 
     def accepted(self, walked: DataFrame) -> DataFrame:
         """The target envelope (``KAFKA_ENVELOPE``) of the rows the walker
         vouches for, built in the JVM."""
-        span, value = F.col(_SPAN), F.col("value")
-        start = F.shiftright(span, 32).cast("int")
-        end = span.bitwiseAND(0xFFFFFFFF).cast("int")
-        target = F.lit(None).cast("binary")
-        for source, dest in self.targets.items():
-            target = F.when(value.substr(2, 4) == F.lit(source), F.lit(dest)).otherwise(target)
-        return walked.filter(span >= 0).select(
-            F.concat(F.lit(self.key_frame), value.substr(start + 1, end - start)).alias("key"),
-            F.concat(F.lit(avro_codec.MAGIC), target, value.substr(6, 2**31 - 1)).alias("value"),
-            F.lit(self.target_topic).alias("topic"),
-            "partition",
-            "offset",
-            "timestamp",
-        )
+        return walked.where(f"{_SPAN} >= 0").selectExpr(*self._accepted_sql)
 
     def declined(self, walked: DataFrame) -> DataFrame:
         """The full path's output (``self.schema``) for every row the
         walker declines."""
-        return walked.filter(F.col(_SPAN) < 0).drop(_SPAN).mapInArrow(
+        return walked.where(f"{_SPAN} < 0").drop(_SPAN).mapInArrow(
             self._fallback, schema=self.schema)
 
     def transform(self, env: DataFrame) -> DataFrame:
@@ -332,8 +303,8 @@ class ReplicationPlan:
         walked = self.walk(env)
         fast = self.accepted(walked)
         if self.route:
-            fast = fast.withColumn("error", F.lit(None).cast("string"))
-        if not walked.filter(F.col(_SPAN) < 0).count():
+            fast = fast.selectExpr("*", "CAST(NULL AS STRING) AS error")
+        if not walked.where(f"{_SPAN} < 0").count():
             return fast
         return fast.unionByName(self.declined(walked))
 
@@ -444,7 +415,7 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
         declined = Observation()
-        counted = batch_df.observe(declined, F.count_if(F.col(_SPAN) < 0).alias("n"))
+        counted = batch_df.observe(declined, plan._declined_count)
         _write_parquet(plan.accepted(counted), main_dir, batch_id, "overwrite")
         if declined.get["n"]:
             slow = plan.declined(batch_df)
@@ -452,10 +423,9 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
                 _write_parquet(slow, main_dir, batch_id, "append")
             else:
                 slow = slow.localCheckpoint(eager=True)  # the split reads it twice
-                good = slow.filter(F.col("error").isNull()).drop("error")
+                good = slow.where("error IS NULL").drop("error")
                 _write_parquet(good, main_dir, batch_id, "append")
-                _write_parquet(slow.filter(F.col("error").isNotNull()), dlq_dir, batch_id,
-                               "overwrite")
+                _write_parquet(slow.where("error IS NOT NULL"), dlq_dir, batch_id, "overwrite")
         elif dlq_dir is not None:
             # a replay whose first attempt routed rows that now pass (a
             # schema registered in between): its dead letters must not commit

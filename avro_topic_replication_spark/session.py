@@ -9,9 +9,30 @@ machine-independent.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Run-scoped scratch space (checkpoints, staged inputs, the compiled jar),
+# under the repo root and git-ignored.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+_JVM_SOURCES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+
+# jvm/GraftLocalFileSystem.java: Hadoop's local FS without its forks, for
+# both of Hadoop's APIs (FileSystem, and FileContext, which Structured
+# Streaming's checkpoint uses)
+LOCAL_FS_CONF = {
+    "spark.hadoop.fs.file.impl": "sparkgraft.GraftLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.GraftLocalFileSystem$Fs",
+}
 
 # Dynamic (runtime-settable) confs the engine relies on. Applied both when we
 # create the session ourselves and defensively on sessions handed to us by a
@@ -53,6 +74,75 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration, ValueError, IndexError):
         return "16g"
     return f"{min(16 * 1024, kib * 3 // 4 // 1024)}m"
+
+
+def graft_jar() -> str:
+    """The engine's Java classes (``jvm/*.java``: the replication walker and
+    the local file system) in one jar, compiled by ``javac`` against
+    Spark's jars on first use into the scratch dir, named by the sources'
+    sha256 and moved into place whole (tmp dir + rename). Raises
+    ``RuntimeError`` when ``javac`` is missing or fails."""
+    sources = sorted(glob.glob(os.path.join(_JVM_SOURCES, "*.java")))
+    digest = hashlib.sha256()
+    for src in sources:
+        with open(src, "rb") as f:
+            digest.update(os.path.basename(src).encode() + b"\0" + f.read())
+    jar = os.path.join(SCRATCH, "jvm", f"graft-{digest.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            "the engine compiles its Java classes (jvm/*.java) with javac, "
+            "which is not on PATH: install a JDK (17 or later)"
+        )
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    os.makedirs(os.path.dirname(jar), exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+        built = subprocess.run(
+            [javac, "--release", "17", "-cp", os.path.join(spark_home, "jars", "*"),
+             "-d", tmp, *sources],
+            capture_output=True, text=True,
+        )
+        if built.returncode:
+            raise RuntimeError(f"javac failed on {_JVM_SOURCES}:\n{built.stderr}")
+        with zipfile.ZipFile(os.path.join(tmp, "graft.jar"), "w") as z:
+            for root, _, files in os.walk(tmp):
+                for name in files:
+                    if name.endswith(".class"):
+                        path = os.path.join(root, name)
+                        z.write(path, os.path.relpath(path, tmp))
+        os.rename(os.path.join(tmp, "graft.jar"), jar)
+    return jar
+
+
+def jar_on_class_path() -> bool:
+    """Whether the running JVM was launched by ``get_spark`` with
+    ``graft_jar()`` on its class path (``get_spark`` marks its py4j
+    gateway, which lives as long as the JVM)."""
+    gateway = SparkContext._gateway
+    # vars(): py4j's gateway answers any other attribute name with a JVM package
+    return gateway is not None and "_graft_jar" in vars(gateway)
+
+
+def local_fs_conf(master: str) -> dict:
+    """``get_spark``'s file-system confs for a ``local`` master: when it is
+    about to launch the JVM, ``graft_jar()`` on the driver class path plus
+    ``LOCAL_FS_CONF``; when a JVM it launched that way runs already,
+    ``LOCAL_FS_CONF`` alone. Empty, so that the session keeps Hadoop's own
+    local FS, for any other master, for a JVM started otherwise (its class
+    path is fixed) and when the jar cannot be built."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    if jar_on_class_path():
+        return dict(LOCAL_FS_CONF)
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}
+    try:
+        jar = graft_jar()
+    except (RuntimeError, OSError):
+        return {}
+    return {"spark.driver.extraClassPath": jar, **LOCAL_FS_CONF}
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
@@ -138,8 +228,11 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
     )
-    for k, v in RUNTIME_CONF.items():
+    fs_conf = local_fs_conf(master)
+    for k, v in {**RUNTIME_CONF, **fs_conf}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.driver.extraClassPath" in fs_conf:
+        SparkContext._gateway._graft_jar = fs_conf["spark.driver.extraClassPath"]
     spark.sparkContext.setLogLevel("ERROR")
     return ensure_runtime_conf(spark)

@@ -23,9 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import ensure_runtime_conf
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
+from ..session import SCRATCH, ensure_runtime_conf
 
 
 def scratch_tag(sf_dir: str, tables: "tuple[str, ...]") -> str:

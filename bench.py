@@ -239,6 +239,23 @@ def _control_factors(prev: "dict | None", timings: "dict[str, float]",
     return out
 
 
+def _host_fingerprint(meminfo: str = "/proc/meminfo") -> dict:
+    """The host a run was timed on, kept with each history entry so that
+    timings from different hosts are never compared unawares: its CPUs,
+    the cores Spark runs on (``local[N]``) and its memory (None where
+    ``meminfo`` cannot be read)."""
+    from avro_topic_replication_spark.session import default_parallelism
+
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+        mem_total_mb = kib // 1024
+    except (OSError, StopIteration, ValueError, IndexError):
+        mem_total_mb = None
+    return {"cpus": os.cpu_count(), "spark_cpus": default_parallelism(),
+            "mem_total_mb": mem_total_mb}
+
+
 def _record_history(script_dir: str, sf: "float | None",
                     timings: "dict[str, float]",
                     control_factor: "float | dict | None" = None,
@@ -264,6 +281,7 @@ def _record_history(script_dir: str, sf: "float | None",
                            if isinstance(control_factor, dict)
                            else control_factor),
         "queries": timings,
+        "host": _host_fingerprint(),
     }
     if isinstance(control_factor, dict):
         run["control_factors"] = control_factor

@@ -39,6 +39,7 @@ QUICK_MODULES = frozenset((
     "test_r12_optimizations",
     "test_r13_optimizations",
     "test_session",
+    "test_local_fs",
 ))
 
 

@@ -399,3 +399,16 @@ def test_query_path_classification_markers(bench, spark):
 
     # live streaming queries classify py regardless of the batch plan
     assert bench._query_path(base, ("live",)) == "py"
+
+
+def test_history_records_the_host_fingerprint(bench, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    bench._record_history(str(tmp_path), 0.1, {"a": 1.0})
+    (run,) = json.load(open(tmp_path / "BENCH_HISTORY.json"))["runs"]
+    assert run["host"]["cpus"] == os.cpu_count()
+    assert run["host"]["spark_cpus"] == 3
+    assert run["host"]["mem_total_mb"] > 0
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16456012 kB\nMemAvailable:   9000000 kB\n")
+    assert bench._host_fingerprint(str(meminfo))["mem_total_mb"] == 16070
+    assert bench._host_fingerprint(str(tmp_path / "missing"))["mem_total_mb"] is None
