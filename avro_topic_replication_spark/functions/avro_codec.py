@@ -438,12 +438,3 @@ def resolve(datum, writer_schema, reader_schema):
                 return datum
         raise ValueError(f"datum {datum!r} matches no reader union branch")
     return datum  # identical primitive (type promotions out of scope)
-
-
-def deserialize_confluent_evolved(data: bytes, schemas_by_id: dict, reader_schema):
-    """deserialize_confluent + schema resolution: decode with the
-    per-record WRITER schema (from the registry snapshot), then project
-    onto the consumer's READER schema — how an evolved consumer keeps
-    reading a mixed-version topic without a restart."""
-    sid, datum = deserialize_confluent(data, schemas_by_id)
-    return sid, resolve(datum, schemas_by_id[sid], reader_schema)

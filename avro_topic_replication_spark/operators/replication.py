@@ -29,20 +29,23 @@ Spark mapping implemented here:
 |    | (application.yml:15-16,README:27)  | 0x00 + the target id (CASE on the|
 |    |                                    | source id) + the payload as is   |
 |    |                                    | (fallback: full re-encode)       |
-| R7 | executeInTransaction (:66-78)      | foreachBatch: write the accepted |
-|    |                                    | rows, then the declined rows' job|
-|    |                                    | if any (parquet without          |
-|    |                                    | dictionaries; on a get_spark     |
-|    |                                    | local JVM through the fork-free  |
-|    |                                    | local FS, jvm/GraftLocalFile-    |
-|    |                                    | System.java), then atomically    |
-| R8 | future.get barrier → abort (:80-94)| create the commit marker; any    |
-|    |                                    | task failure fails the batch     |
-|    |                                    | before the marker exists         |
+| R7 | executeInTransaction (:66-78)      | replicate_stream's foreachBatch: |
+|    |                                    | write the accepted rows, then the|
+|    |                                    | declined rows' job if any (with a|
+|    |                                    | dlq_dir, route mode: bad records |
+|    |                                    | to the dead-letter sink; parquet |
+|    |                                    | without dictionaries; a get_spark|
+|    |                                    | JVM writes through the fork-free |
+|    |                                    | jvm/GraftLocalFileSystem.java),  |
+| R8 | future.get barrier → abort (:80-94)| then atomically create one commit|
+|    |                                    | marker; any task failure fails   |
+|    |                                    | the batch before it exists       |
 | R9 | ack after commit (:99-100)         | checkpoint (offset WAL, commit   |
 |    |                                    | log: FileContext atomic renames, |
 |    |                                    | the same fork-free FS) advances  |
-|    |                                    | only after foreachBatch returns  |
+|    |                                    | only after foreachBatch returns; |
+|    |                                    | the returned query's             |
+|    |                                    | recentProgress logs each batch   |
 
 Crash-window semantics (honest, mirroring README.adoc:22-25): a crash
 after data-write but before marker leaves an uncommitted batch dir that
@@ -55,14 +58,13 @@ from __future__ import annotations
 import os
 import shutil
 import struct
-import threading
 from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -76,6 +78,7 @@ from pyspark.sql.types import (
 from ..functions import avro_codec
 from ..sources.registry import MockSchemaRegistry
 from ..session import graft_jar, jar_on_class_path
+from ..streaming.replay import drain
 
 # A2 envelope (FIXTURES.md): the fixed schema of Spark's Kafka source.
 KAFKA_ENVELOPE = StructType(
@@ -144,8 +147,8 @@ DLQ_ENVELOPE = StructType(KAFKA_ENVELOPE.fields + [StructField("error", StringTy
 def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: bool):
     """The full path for one framed value: decode, extract ``id``, encode
     the key and re-encode the value; returns ``(key, value, error)``. It is
-    the one place that classifies a bad record (see
-    ``replicate_transform``) or, in abort mode, raises for it."""
+    the one place that classifies a bad record (see ``ReplicationPlan``)
+    or, in abort mode, raises for it."""
     try:
         src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
         rid = record.get("id") if isinstance(record, dict) else None
@@ -185,7 +188,16 @@ def _ensure_walker(spark: SparkSession) -> None:
 
 
 class ReplicationPlan:
-    """The plan-time half of R3–R6 for one registry snapshot.
+    """The plan-time half of R3–R6 for one registry snapshot: for each
+    source envelope row, extract ``id`` from the Confluent-framed value and
+    emit the target envelope with key = Avro-string(id) framed for the
+    target registry and value = the record under ITS OWN schema's
+    target-registry id (``id_mapping``: source schema id → target schema
+    id). Per-record schema dispatch mirrors the GenericRecord serde of the
+    reference — a topic carrying several schema versions replicates each
+    record under the matching propagated schema, exactly like
+    KafkaAvroSerializer. The (partition, offset, timestamp) columns pass
+    through untouched for downstream dedup/audit.
 
     ``walk`` adds the JVM walker's verdict to each envelope row: the span of
     its ``id`` within the value, or -1 where the walker declines it (null,
@@ -196,7 +208,25 @@ class ReplicationPlan:
     payload as is; exactly the bytes the full path would encode, and no
     Python worker runs. ``declined`` runs ``_reencode`` over the other rows
     only (one ``mapInArrow``), so both modes give the full path's output
-    for every input, and abort mode raises the first failing row's error.
+    for every input.
+
+    ``on_error`` picks what a bad record does:
+
+    - ``"abort"`` (the reference's semantics): the record raises, failing
+      the whole batch before any commit — the NPE→transaction-abort of
+      ReplicationApplication.java:71 (§3.1 step 6). A record without
+      ``id`` raises ``ValueError``; an unknown schema id or a malformed
+      frame raises the codec's own error; a batch raises its first failing
+      row's error.
+    - ``"route"`` (the dead-letter production mode): the envelope passes
+      through with NULL key/value and an ``error`` class, good records
+      replicate normally, and the output has the ``DLQ_ENVELOPE`` schema.
+      Classes, in the order they are caught: ``unknown_schema`` (frame
+      carries a schema id absent from the plan-time snapshot — KeyError),
+      ``missing_id`` (decoded record lacks the re-key field),
+      ``decode_error`` (any other failure: malformed frame or payload).
+      The main/DLQ split is a downstream ``filter`` each (both
+      partition-local, no extra shuffle).
     """
 
     def __init__(self, spark: SparkSession, schemas_by_id: dict, target_topic: str,
@@ -309,51 +339,6 @@ class ReplicationPlan:
         return fast.unionByName(self.declined(walked))
 
 
-def replicate_transform(
-    env: DataFrame,
-    schemas_by_id: dict,
-    target_topic: str,
-    key_schema_id: int,
-    id_mapping: dict,
-    on_error: str = "abort",
-) -> DataFrame:
-    """The record transform of the pipeline: for each source envelope row,
-    extract ``id`` from the Confluent-framed value and emit the target
-    envelope with key = Avro-string(id) framed for the target registry and
-    value = the record under ITS OWN schema's target-registry id
-    (``id_mapping``: source schema id → target schema id). Per-record
-    schema dispatch mirrors the GenericRecord serde of the reference — a
-    topic carrying several schema versions replicates each record under
-    the matching propagated schema, exactly like KafkaAvroSerializer.
-
-    The value is re-encoded under its writer schema, so a payload that
-    re-encodes to itself needs only a new frame: the header rewrite of
-    ``ReplicationPlan``, with the full decode → re-encode as the fallback
-    for every record the rewrite cannot vouch for. The (partition, offset,
-    timestamp) columns pass through untouched for downstream dedup/audit.
-
-    ``on_error`` picks what a bad record does:
-
-    - ``"abort"`` (the reference's semantics): the record raises, failing
-      the whole batch before any commit — the NPE→transaction-abort of
-      ReplicationApplication.java:71 (§3.1 step 6). A record without
-      ``id`` raises ``ValueError``; an unknown schema id or a malformed
-      frame raises the codec's own error.
-    - ``"route"`` (the dead-letter production mode): the envelope passes
-      through with NULL key/value and an ``error`` class, good records
-      replicate normally, and the output has the ``DLQ_ENVELOPE`` schema.
-      Classes, in the order they are caught: ``unknown_schema`` (frame
-      carries a schema id absent from the plan-time snapshot — KeyError),
-      ``missing_id`` (decoded record lacks the re-key field),
-      ``decode_error`` (any other failure: malformed frame or payload).
-      The main/DLQ split is a downstream ``filter`` each (both
-      partition-local, no extra shuffle).
-    """
-    return ReplicationPlan(
-        env.sparkSession, schemas_by_id, target_topic, key_schema_id, id_mapping, on_error
-    ).transform(env)
-
-
 def plan_replication(
     env: DataFrame,
     source_registry: MockSchemaRegistry,
@@ -363,7 +348,7 @@ def plan_replication(
     on_error: str = "abort",
 ) -> DataFrame:
     """``ReplicationPlan.from_registries`` (the registry propagation) +
-    ``replicate_transform`` over a static ``env``."""
+    ``ReplicationPlan.transform`` over a static ``env``."""
     return ReplicationPlan.from_registries(
         env.sparkSession, source_registry, target_registry, target_topic, value_schema,
         on_error,
@@ -439,55 +424,44 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
     return write
 
 
-def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: int) -> None:
-    """Run a replication stream once to the end of its source: every
-    available offset, each micro-batch through ``writer``, offsets acked
-    in ``checkpoint_dir`` after the writer returns (availableNow). Raises
-    ``TimeoutError`` after stopping a stream that has not drained within
-    ``timeout_sec``; its checkpoint lets a rerun resume."""
-    q = (
-        out.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        drained = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not drained:
-        raise TimeoutError(
-            f"replication stream did not drain within {timeout_sec} s "
-            f"(checkpoint {checkpoint_dir})"
-        )
-
-
-def replicate_stream_dlq(
+def replicate_stream(
     spark: SparkSession,
     source_dir: str,
-    main_dir: str,
-    dlq_dir: str,
+    target_dir: str,
     source_registry: MockSchemaRegistry,
     target_registry: MockSchemaRegistry,
     target_topic: str,
     value_schema,
     checkpoint_dir: str,
-    corrupt=None,
     timeout_sec: int = 120,
-) -> None:
-    """The R1–R9 streaming pipeline in dead-letter mode: same source,
-    registry propagation and checkpoint mechanics as ``replicate_stream``,
-    but bad records are routed (``on_error="route"``) and ``batch_writer``
-    commits the main and dead-letter sinks under one marker. ``corrupt``
-    optionally maps the envelope DataFrame before the transform (test
-    harnesses inject deterministic corruption there)."""
+    dlq_dir: str | None = None,
+) -> StreamingQuery:
+    """The full R1–R9 streaming pipeline over a file-backed topic
+    simulation (envelope parquet dir standing in for the Kafka source —
+    swap the first line for format("kafka") + kafka_source_options on a
+    real cluster; everything downstream is identical), run once to the
+    end of its source (availableNow), each micro-batch through
+    ``batch_writer``.
+
+    Without ``dlq_dir`` a bad record aborts its batch (``on_error=
+    "abort"``); with it, bad records are routed (``on_error="route"``) to
+    ``dlq_dir`` and one marker under ``target_dir`` commits both sinks.
+    Raises ``TimeoutError`` after stopping a stream that has not drained
+    within ``timeout_sec``; its checkpoint lets a rerun resume.
+
+    Returns the finished query. Its ``recentProgress`` holds one entry per
+    micro-batch (the reference's per-batch log lines,
+    ReplicationApplication.java:64,101, as structured metrics): batch id,
+    ``numInputRows`` and the phase durations ``durationMs`` (addBatch,
+    walCommit, commitOffsets, latestOffset, queryPlanning, getBatch,
+    triggerExecution — whichever the batch ran)."""
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
-    if corrupt is not None:
-        env = corrupt(env)
     plan = ReplicationPlan.from_registries(
-        spark, source_registry, target_registry, target_topic, value_schema, on_error="route"
+        spark, source_registry, target_registry, target_topic, value_schema,
+        on_error="abort" if dlq_dir is None else "route",
     )
-    _drain(plan.walk(env), batch_writer(plan, main_dir, dlq_dir), checkpoint_dir, timeout_sec)
+    writer = plan.walk(env).writeStream.foreachBatch(batch_writer(plan, target_dir, dlq_dir))
+    return drain(writer, checkpoint_dir, timeout_sec)
 
 
 def read_committed(
@@ -518,79 +492,6 @@ def read_committed(
     if not dirs:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*dirs)
-
-
-class ReplicationProgressListener(StreamingQueryListener):
-    """Per-batch observability, the reference's logging as structured
-    metrics (ReplicationApplication.java:64 "Received batch of {} records",
-    :73-75 per-record send, :101 post-commit ack log). Spark's listener
-    bus delivers one progress event per micro-batch; we keep batch id,
-    input rows, throughput and the phase durations (``durationMs``:
-    addBatch, walCommit, commitOffsets, latestOffset, queryPlanning,
-    getBatch, triggerExecution — whichever the batch ran) — what an
-    operator dashboards at 100 TB."""
-
-    def __init__(self) -> None:
-        self.batches: list[dict] = []
-        self.terminated = threading.Event()
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API names)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.batches.append(
-            {
-                "batchId": p.batchId,
-                "numInputRows": p.numInputRows,
-                "processedRowsPerSecond": p.processedRowsPerSecond,
-                "durationMs": dict(p.durationMs),
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        self.terminated.set()
-
-    def total_rows(self) -> int:
-        return int(sum(b["numInputRows"] for b in self.batches))
-
-
-def replicate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    source_registry: MockSchemaRegistry,
-    target_registry: MockSchemaRegistry,
-    target_topic: str,
-    value_schema,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    listener: ReplicationProgressListener | None = None,
-) -> None:
-    """The full R1–R9 streaming pipeline over a file-backed topic
-    simulation (envelope parquet dir standing in for the Kafka source —
-    swap the first line for format("kafka") + kafka_source_options on a
-    real cluster; everything downstream is identical)."""
-    if listener is not None:
-        listener.terminated.clear()
-        spark.streams.addListener(listener)
-    env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
-    plan = ReplicationPlan.from_registries(
-        spark, source_registry, target_registry, target_topic, value_schema
-    )
-    try:
-        _drain(plan.walk(env), batch_writer(plan, target_dir), checkpoint_dir, timeout_sec)
-    finally:
-        if listener is not None:
-            # listener events ride an async bus that delivers them in
-            # order, so once the termination event has arrived every
-            # progress event of this run has too (a stable-count poll
-            # could detach before a late first event)
-            listener.terminated.wait(10)
-            spark.streams.removeListener(listener)
 
 
 # ---------------------------------------------------------------------------

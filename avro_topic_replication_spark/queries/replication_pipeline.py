@@ -32,7 +32,7 @@ def _nation_records(spark: SparkSession, sf_dir: str) -> list[dict]:
 
 def _staged_source(spark: SparkSession, sf_dir: str, registry: MockSchemaRegistry) -> str:
     """Deterministic source-topic fixture, written once per sf and reused
-    (content depends only on nation + FOO_SCHEMA; a fresh registry scope
+    (content depends only on nation + FOO_SCHEMA; a fresh registry
     always assigns the same first schema id, so the frames are stable)."""
     sf_tag = scratch_tag(sf_dir, ("nation",))
     src_dir = os.path.join(SCRATCH, "replq", sf_tag, "source-topic-a")
@@ -70,6 +70,18 @@ def _corrupt(env: DataFrame) -> DataFrame:
     )
 
 
+def _staged_corrupt_source(spark: SparkSession, sf_dir: str, registry: MockSchemaRegistry) -> str:
+    """``_staged_source``'s topic with ``_corrupt`` applied, written once
+    next to it (``source-topic-a-corrupt``) and reused."""
+    src_dir = _staged_source(spark, sf_dir, registry)
+    bad_dir = src_dir + "-corrupt"
+    if not os.path.exists(os.path.join(bad_dir, "_SUCCESS")):
+        _corrupt(spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(bad_dir)
+    return bad_dir
+
+
 @query(
     "replication_batch_roundtrip",
     oracle="""
@@ -85,18 +97,12 @@ def replication_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Confluent-framed Avro source envelope → replicate transform (decode,
     extract id, re-key, re-encode under the target registry) → consumer
     decode. Output key/fields must hash-match SELECT ... FROM nation."""
-    scope = uuid.uuid4().hex[:8]
-    src_reg = MockSchemaRegistry.get_scope(f"src-{scope}")
-    tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
-    try:
-        src_dir = _staged_source(spark, sf_dir, src_reg)
-        env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir)
-        out = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
-        decoded = R.decode_envelope(out, tgt_reg.snapshot(), R.FOO_SCHEMA)
-        return decoded.select("kafka_key", "id", "name")
-    finally:
-        MockSchemaRegistry.drop_scope(f"src-{scope}")
-        MockSchemaRegistry.drop_scope(f"tgt-{scope}")
+    src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
+    src_dir = _staged_source(spark, sf_dir, src_reg)
+    env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir)
+    out = R.plan_replication(env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
+    decoded = R.decode_envelope(out, tgt_reg.snapshot(), R.FOO_SCHEMA)
+    return decoded.select("kafka_key", "id", "name")
 
 
 @query("replication_stream_live", oracle=None, tags=("replication", "avro", "live"))
@@ -106,26 +112,20 @@ def replication_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker sink with checkpointing → read-committed consumer decode.
     Rows-only (sink layout is engine-defined); the pytest golden test
     asserts the key==value.id contract on this exact path."""
-    scope = uuid.uuid4().hex[:8]
-    src_reg = MockSchemaRegistry.get_scope(f"src-{scope}")
-    tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
-    try:
-        sf_tag = scratch_tag(sf_dir, ("nation",))
-        base = os.path.join(SCRATCH, "replq-live", sf_tag, scope)
-        src_dir = _staged_source(spark, sf_dir, src_reg)
-        tgt_dir = os.path.join(base, "target-topic-b")
-        ckpt = os.path.join(base, "ckpt")
-        R.replicate_stream(
-            spark, src_dir, tgt_dir, src_reg, tgt_reg,
-            "target-topic-b", R.FOO_SCHEMA, ckpt,
-        )
-        out_env = R.read_committed(spark, tgt_dir)
-        return R.decode_envelope(out_env, tgt_reg.snapshot(), R.FOO_SCHEMA).select(
-            "kafka_key", "id", "name", "topic", "offset"
-        )
-    finally:
-        MockSchemaRegistry.drop_scope(f"src-{scope}")
-        MockSchemaRegistry.drop_scope(f"tgt-{scope}")
+    src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
+    sf_tag = scratch_tag(sf_dir, ("nation",))
+    base = os.path.join(SCRATCH, "replq-live", sf_tag, uuid.uuid4().hex[:8])
+    src_dir = _staged_source(spark, sf_dir, src_reg)
+    tgt_dir = os.path.join(base, "target-topic-b")
+    ckpt = os.path.join(base, "ckpt")
+    R.replicate_stream(
+        spark, src_dir, tgt_dir, src_reg, tgt_reg,
+        "target-topic-b", R.FOO_SCHEMA, ckpt,
+    )
+    out_env = R.read_committed(spark, tgt_dir)
+    return R.decode_envelope(out_env, tgt_reg.snapshot(), R.FOO_SCHEMA).select(
+        "kafka_key", "id", "name", "topic", "offset"
+    )
 
 
 @query(
@@ -149,26 +149,20 @@ def replication_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     target topic must hash-match ``SELECT ... FROM nation`` exactly —
     every record exactly once, key == value.id (mirrors
     reference ReplicationApplicationTest.java:118-124)."""
-    scope = uuid.uuid4().hex[:8]
-    src_reg = MockSchemaRegistry.get_scope(f"src-{scope}")
-    tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
-    try:
-        sf_tag = scratch_tag(sf_dir, ("nation",))
-        base = os.path.join(SCRATCH, "replq-rt", sf_tag, scope)
-        src_dir = _staged_source(spark, sf_dir, src_reg)
-        tgt_dir = os.path.join(base, "target-topic-b")
-        ckpt = os.path.join(base, "ckpt")
-        R.replicate_stream(
-            spark, src_dir, tgt_dir, src_reg, tgt_reg,
-            "target-topic-b", R.FOO_SCHEMA, ckpt,
-        )
-        out_env = R.read_committed(spark, tgt_dir)
-        return R.decode_envelope(out_env, tgt_reg.snapshot(), R.FOO_SCHEMA).select(
-            "kafka_key", "id", "name"
-        )
-    finally:
-        MockSchemaRegistry.drop_scope(f"src-{scope}")
-        MockSchemaRegistry.drop_scope(f"tgt-{scope}")
+    src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
+    sf_tag = scratch_tag(sf_dir, ("nation",))
+    base = os.path.join(SCRATCH, "replq-rt", sf_tag, uuid.uuid4().hex[:8])
+    src_dir = _staged_source(spark, sf_dir, src_reg)
+    tgt_dir = os.path.join(base, "target-topic-b")
+    ckpt = os.path.join(base, "ckpt")
+    R.replicate_stream(
+        spark, src_dir, tgt_dir, src_reg, tgt_reg,
+        "target-topic-b", R.FOO_SCHEMA, ckpt,
+    )
+    out_env = R.read_committed(spark, tgt_dir)
+    return R.decode_envelope(out_env, tgt_reg.snapshot(), R.FOO_SCHEMA).select(
+        "kafka_key", "id", "name"
+    )
 
 
 @query(
@@ -196,40 +190,36 @@ def replication_evolved_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions import avro_codec
 
-    scope = uuid.uuid4().hex[:8]
-    reg = MockSchemaRegistry.get_scope(f"evo-{scope}")
-    try:
-        sid1 = reg.register("source-topic-a-value", R.FOO_SCHEMA)
-        sid2 = reg.register("source-topic-a-value", R.FOO_SCHEMA_V2)
-        rows = []
-        for i, r in enumerate(
-            load_table(spark, sf_dir, "nation").orderBy("n_nationkey").collect()
-        ):  # 25 dimension rows: fixture production, not a data collect
-            if r["n_nationkey"] % 2 == 0:
-                payload = avro_codec.serialize_confluent(
-                    {"id": str(r["n_nationkey"]), "name": r["n_name"]},
-                    R.FOO_SCHEMA,
-                    sid1,
-                )
-            else:
-                payload = avro_codec.serialize_confluent(
-                    {
-                        "id": str(r["n_nationkey"]),
-                        "name": r["n_name"],
-                        "tag": f"r{r['n_regionkey']}",
-                    },
-                    R.FOO_SCHEMA_V2,
-                    sid2,
-                )
-            rows.append(
-                (None, payload, "source-topic-a", 0, i, dt.datetime(2024, 1, 1))
+    reg = MockSchemaRegistry()
+    sid1 = reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    sid2 = reg.register("source-topic-a-value", R.FOO_SCHEMA_V2)
+    rows = []
+    for i, r in enumerate(
+        load_table(spark, sf_dir, "nation").orderBy("n_nationkey").collect()
+    ):  # 25 dimension rows: fixture production, not a data collect
+        if r["n_nationkey"] % 2 == 0:
+            payload = avro_codec.serialize_confluent(
+                {"id": str(r["n_nationkey"]), "name": r["n_name"]},
+                R.FOO_SCHEMA,
+                sid1,
             )
-        env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
-        return R.decode_envelope(env, reg.snapshot(), R.FOO_SCHEMA_V2).select(
-            "id", "name", "tag"
+        else:
+            payload = avro_codec.serialize_confluent(
+                {
+                    "id": str(r["n_nationkey"]),
+                    "name": r["n_name"],
+                    "tag": f"r{r['n_regionkey']}",
+                },
+                R.FOO_SCHEMA_V2,
+                sid2,
+            )
+        rows.append(
+            (None, payload, "source-topic-a", 0, i, dt.datetime(2024, 1, 1))
         )
-    finally:
-        MockSchemaRegistry.drop_scope(f"evo-{scope}")
+    env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+    return R.decode_envelope(env, reg.snapshot(), R.FOO_SCHEMA_V2).select(
+        "id", "name", "tag"
+    )
 
 
 @query(
@@ -273,41 +263,35 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: corruption + routing are per-row map work; the
     accounting is one 3-group aggregate.
     """
-    scope = uuid.uuid4().hex[:8]
-    src_reg = MockSchemaRegistry.get_scope(f"src-{scope}")
-    tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
-    try:
-        src_dir = _staged_source(spark, sf_dir, src_reg)
-        env = _corrupt(spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir))
-        out = R.plan_replication(
-            env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA, on_error="route"
-        )
-        good = R.decode_envelope(
-            out.filter(F.col("error").isNull()).drop("error"),
-            tgt_reg.snapshot(),
-            R.FOO_SCHEMA,
-        ).select(F.col("offset"), F.col("id"))
-        acc_bad = (
-            out.filter(F.col("error").isNotNull())
-            .groupBy(F.col("error").alias("disposition"))
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.min("offset").cast("bigint").alias("min_offset"),
-                F.max("offset").cast("bigint").alias("max_offset"),
-                F.lit(None).cast("bigint").alias("n_distinct_ids"),
-            )
-        )
-        acc_good = good.agg(
-            F.lit("ok").alias("disposition"),
+    src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
+    src_dir = _staged_source(spark, sf_dir, src_reg)
+    env = _corrupt(spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir))
+    out = R.plan_replication(
+        env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA, on_error="route"
+    )
+    good = R.decode_envelope(
+        out.filter(F.col("error").isNull()).drop("error"),
+        tgt_reg.snapshot(),
+        R.FOO_SCHEMA,
+    ).select(F.col("offset"), F.col("id"))
+    acc_bad = (
+        out.filter(F.col("error").isNotNull())
+        .groupBy(F.col("error").alias("disposition"))
+        .agg(
             F.count("*").cast("bigint").alias("n"),
             F.min("offset").cast("bigint").alias("min_offset"),
             F.max("offset").cast("bigint").alias("max_offset"),
-            F.countDistinct("id").cast("bigint").alias("n_distinct_ids"),
+            F.lit(None).cast("bigint").alias("n_distinct_ids"),
         )
-        return acc_bad.unionAll(acc_good)
-    finally:
-        MockSchemaRegistry.drop_scope(f"src-{scope}")
-        MockSchemaRegistry.drop_scope(f"tgt-{scope}")
+    )
+    acc_good = good.agg(
+        F.lit("ok").alias("disposition"),
+        F.count("*").cast("bigint").alias("n"),
+        F.min("offset").cast("bigint").alias("min_offset"),
+        F.max("offset").cast("bigint").alias("max_offset"),
+        F.countDistinct("id").cast("bigint").alias("n_distinct_ids"),
+    )
+    return acc_bad.unionAll(acc_good)
 
 
 @query(
@@ -317,12 +301,13 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dead-letter R1–R9 pipeline END TO END in streaming mode: the
-    envelope stream is corrupted deterministically in-plan (``_corrupt``,
-    the replication_dlq_routing classes), replicated in route mode (the
-    JVM walker and rewrite, plus the declined rows' ``_reencode`` job), and
-    committed through the two-sink batch-atomic ``batch_writer(plan,
-    main_dir, dlq_dir)`` (one marker covers the main write AND the
-    dead-letter write). The query then reads BOTH
+    source topic corrupted deterministically (``_staged_corrupt_source``,
+    the replication_dlq_routing classes) is replicated in route mode
+    (``replicate_stream`` with a ``dlq_dir``: the JVM walker and rewrite,
+    plus the declined rows' ``_reencode`` job), and committed through the
+    two-sink batch-atomic ``batch_writer(plan, main_dir, dlq_dir)`` (one
+    marker covers the main write AND the dead-letter write). The query
+    then reads BOTH
     committed sinks back and emits per-disposition accounting with the
     good rows' ids verified through the consumer decode.
 
@@ -330,38 +315,32 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``replication_dlq_routing`` hash-verifies the identical routing
     against the nation oracle, and pytest covers the class taxonomy.
     """
-    scope = uuid.uuid4().hex[:8]
-    src_reg = MockSchemaRegistry.get_scope(f"src-{scope}")
-    tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
-    try:
-        sf_tag = scratch_tag(sf_dir, ("nation",))
-        base = os.path.join(SCRATCH, "replq-dlq", sf_tag, scope)
-        src_dir = _staged_source(spark, sf_dir, src_reg)
-        main_dir = os.path.join(base, "target-topic-b")
-        dlq_dir = os.path.join(base, "target-topic-b-dlq")
-        ckpt = os.path.join(base, "ckpt")
-        R.replicate_stream_dlq(
-            spark, src_dir, main_dir, dlq_dir, src_reg, tgt_reg,
-            "target-topic-b", R.FOO_SCHEMA, ckpt, corrupt=_corrupt,
-        )
-        good = R.decode_envelope(
-            R.read_committed(spark, main_dir), tgt_reg.snapshot(), R.FOO_SCHEMA
-        )
-        bad = R.read_committed(
-            spark, dlq_dir, marker_dir=main_dir, schema=R.DLQ_ENVELOPE
-        )
-        acc_bad = bad.groupBy(F.col("error").alias("disposition")).agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.min("offset").cast("bigint").alias("min_offset"),
-            F.countDistinct("offset").cast("bigint").alias("n_distinct"),
-        )
-        acc_good = good.agg(
-            F.lit("ok").alias("disposition"),
-            F.count("*").cast("bigint").alias("n"),
-            F.min("offset").cast("bigint").alias("min_offset"),
-            F.countDistinct("id").cast("bigint").alias("n_distinct"),
-        )
-        return acc_bad.unionAll(acc_good)
-    finally:
-        MockSchemaRegistry.drop_scope(f"src-{scope}")
-        MockSchemaRegistry.drop_scope(f"tgt-{scope}")
+    src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
+    sf_tag = scratch_tag(sf_dir, ("nation",))
+    base = os.path.join(SCRATCH, "replq-dlq", sf_tag, uuid.uuid4().hex[:8])
+    src_dir = _staged_corrupt_source(spark, sf_dir, src_reg)
+    main_dir = os.path.join(base, "target-topic-b")
+    ckpt = os.path.join(base, "ckpt")
+    dlq_dir = os.path.join(base, "target-topic-b-dlq")
+    R.replicate_stream(
+        spark, src_dir, main_dir, src_reg, tgt_reg,
+        "target-topic-b", R.FOO_SCHEMA, ckpt, dlq_dir=dlq_dir,
+    )
+    good = R.decode_envelope(
+        R.read_committed(spark, main_dir), tgt_reg.snapshot(), R.FOO_SCHEMA
+    )
+    bad = R.read_committed(
+        spark, dlq_dir, marker_dir=main_dir, schema=R.DLQ_ENVELOPE
+    )
+    acc_bad = bad.groupBy(F.col("error").alias("disposition")).agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.min("offset").cast("bigint").alias("min_offset"),
+        F.countDistinct("offset").cast("bigint").alias("n_distinct"),
+    )
+    acc_good = good.agg(
+        F.lit("ok").alias("disposition"),
+        F.count("*").cast("bigint").alias("n"),
+        F.min("offset").cast("bigint").alias("min_offset"),
+        F.countDistinct("id").cast("bigint").alias("n_distinct"),
+    )
+    return acc_bad.unionAll(acc_good)

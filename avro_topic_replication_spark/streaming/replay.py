@@ -22,6 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..session import SCRATCH, ensure_runtime_conf
 
@@ -309,35 +310,39 @@ def run_to_memory(
     1.49→2.77 s because 2 partitions serialize the per-key Python work.
     Overridable via ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``; a real
     deployment sizes this to cluster cores × key cardinality instead.
-    The session conf is restored after start so batch queries in the
-    same session are unaffected."""
+    The session conf is restored once the stream has finished, so batch
+    queries in the same session are unaffected."""
     if state_partitions is None:
         state_partitions = int(
             os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
         )
     spark = sdf.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(SCRATCH, "ckpt", name)
     # effective-value fetch (never None) so the restore is unconditional
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        writer = sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
+        drain(writer, os.path.join(SCRATCH, "ckpt", name), timeout_sec)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(name)
+
+
+def drain(writer: DataStreamWriter, checkpoint_dir: str, timeout_sec: float) -> StreamingQuery:
+    """Start ``writer`` on ``checkpoint_dir`` with an availableNow trigger,
+    wait until it has processed every offset available at start, stop it
+    and return the finished query (``recentProgress`` holds one entry per
+    micro-batch). A stream still running after ``timeout_sec`` is stopped
+    and raises ``TimeoutError``: its sink would hold only part of the
+    result, and its checkpoint lets a rerun resume."""
+    q = writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True).start()
     try:
         finished = q.awaitTermination(timeout_sec)
     finally:
         q.stop()
-    if not finished:  # the memory table would hold a partial result
+    if not finished:
         raise TimeoutError(
-            f"stream {name} did not finish within {timeout_sec} s (checkpoint {ckpt})"
+            f"stream did not finish within {timeout_sec} s (checkpoint {checkpoint_dir})"
         )
-    return spark.table(name)
+    return q

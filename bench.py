@@ -127,8 +127,10 @@ def _isolated_parent(names: "list[str]") -> int:
 
 def _load_prev_run(script_dir: str, sf: "float | None") -> "dict | None":
     """The same-sf per-query baseline to drift against: the PER-QUERY
-    MEDIAN over the last (up to) 5 BENCH_HISTORY.json runs, else the
-    prior round's BENCH_FULL.json (seeds the history the first time).
+    MEDIAN over the last (up to) 5 BENCH_HISTORY.json runs timed on this
+    host (``_host_fingerprint``), else None. Timings from another host
+    (other cores or memory, or an entry that predates the fingerprint)
+    are never a baseline: they would flag the host, not the code.
 
     A single-run baseline ping-pongs: sub-2s min-of-3 timings still swing
     ~2x across runs on identical code (r12 measured 69 flags against the
@@ -139,24 +141,18 @@ def _load_prev_run(script_dir: str, sf: "float | None") -> "dict | None":
     hist_path = os.path.join(script_dir, "BENCH_HISTORY.json")
     try:
         runs = json.load(open(hist_path)).get("runs", [])
-        recent = [r["queries"] for r in runs
-                  if r.get("sf") == sf and r.get("queries")][-5:]
-        if recent:
-            names = set().union(*recent)
-            return {
-                n: round(statistics.median(
-                    [q[n] for q in recent if n in q]), 4)
-                for n in names
-            }
     except Exception:
-        pass
-    try:
-        prior = json.load(open(os.path.join(script_dir, "BENCH_FULL.json")))
-        if prior.get("sf") == sf:
-            return prior.get("queries")
-    except Exception:
-        pass
-    return None
+        return None
+    host = _host_fingerprint()
+    recent = [r["queries"] for r in runs
+              if r.get("sf") == sf and r.get("host") == host and r.get("queries")][-5:]
+    if not recent:
+        return None
+    names = set().union(*recent)
+    return {
+        n: round(statistics.median([q[n] for q in recent if n in q]), 4)
+        for n in names
+    }
 
 
 def _control_factor(prev: "dict | None",
@@ -476,9 +472,8 @@ def main() -> int:
     from avro_topic_replication_spark.session import get_spark
 
     script_dir = os.path.dirname(os.path.abspath(__file__))
-    # Previous same-sf run must be read BEFORE BENCH_FULL.json is replaced
-    # (it seeds the history on the first drift-tracked round) — and before
-    # the retry pass, which uses it to re-measure in-suite drift in place.
+    # The drift baseline is read before the retry pass, which uses it to
+    # re-measure in-suite drift in place.
     prev_run = _load_prev_run(script_dir, sf)
 
     spark = get_spark(app_name="bench")

@@ -1,6 +1,6 @@
 """Unit tests for bench.py's cross-round drift tracking (r10-r12):
-history persistence, median-of-history baseline resolution (then the
-prior BENCH_FULL.json as the seeding fallback), the size-tiered flag
+history persistence, median-of-history baseline resolution over the
+same host's runs only, the size-tiered flag
 rule, per-path-cohort control factors, and the isolated-to-isolated
 verdict baseline. Spark-free except the final plan-marker classification
 test (which pins the physical node names `_query_path` greps for, so a
@@ -33,18 +33,29 @@ def no_recheck(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_NO_RECHECK", "1")
 
 
-def test_prev_run_prefers_history_then_bench_full(bench, tmp_path, no_recheck):
+def test_prev_run_reads_only_same_host_history(bench, tmp_path, no_recheck, monkeypatch):
+    """The drift baseline comes from this host's same-sf history runs only:
+    not from BENCH_FULL.json (it carries no host), not from a run timed on
+    other cores or memory, not from an entry that predates the host
+    fingerprint."""
     d = str(tmp_path)
     assert bench._load_prev_run(d, 0.1) is None
-    json.dump(
-        {"sf": 0.1, "queries": {"a": 1.0}},
-        open(os.path.join(d, "BENCH_FULL.json"), "w"),
-    )
-    assert bench._load_prev_run(d, 0.1) == {"a": 1.0}
-    # a different sf must not seed
-    assert bench._load_prev_run(d, 0.01) is None
+    json.dump({"sf": 0.1, "queries": {"a": 1.0}}, open(os.path.join(d, "BENCH_FULL.json"), "w"))
+    assert bench._load_prev_run(d, 0.1) is None
+    here = bench._host_fingerprint()
+    other = {**here, "spark_cpus": here["spark_cpus"] + 28, "mem_total_mb": 131072}
+    json.dump({"runs": [
+        {"sf": 0.1, "queries": {"a": 5.0}},  # recorded before the fingerprint
+        {"sf": 0.1, "queries": {"a": 6.0}, "host": other},
+    ]}, open(os.path.join(d, "BENCH_HISTORY.json"), "w"))
+    assert bench._load_prev_run(d, 0.1) is None
     bench._record_history(d, 0.1, {"a": 2.0})
     assert bench._load_prev_run(d, 0.1) == {"a": 2.0}
+    # a different sf must not seed
+    assert bench._load_prev_run(d, 0.01) is None
+    # the host is the Spark core count too, not only the machine
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(here["spark_cpus"] + 1))
+    assert bench._load_prev_run(d, 0.1) is None
 
 
 def test_prev_run_is_median_of_recent_history(bench, tmp_path):

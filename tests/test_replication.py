@@ -482,12 +482,11 @@ def _first_error(rows: list, route: bool):
 
 
 def _replicated(spark, env, route: bool):
-    """``replicate_transform``'s (key, value, error) rows of ``env`` in
-    offset order, by partition, or, when its job fails, the Spark error's
-    text."""
+    """``ReplicationPlan.transform``'s (key, value, error) rows of ``env``
+    in offset order, by partition, or, when its job fails, the Spark
+    error's text."""
     try:
-        rows = R.replicate_transform(env, _SNAPSHOT, "t", _KEY_ID, _MAPPING,
-                                     "route" if route else "abort").collect()
+        rows = _plan(spark, on_error="route" if route else "abort").transform(env).collect()
     except Exception as e:
         return str(e)
     out = {}
@@ -546,7 +545,7 @@ def _fallback_outcome(plan, raws: list, lo: int = 0):
 def test_kernel_matches_full_path_on_mixed_batches(spark):
     """25 drawn batches mixing Foo v1/v2 frames, their damaged copies,
     nulls, unknown ids and records of a schema the walker does not cover,
-    each in a shuffled order, through ``replicate_transform`` (the JVM
+    each in a shuffled order, through ``ReplicationPlan.transform`` (the JVM
     rewrite ∪ the declined rows' ``_reencode`` job): in route mode every
     batch gets per-row ``_reencode``'s (key, value, error) rows, in one
     job; in abort mode a batch fails with its first failing row's
@@ -963,23 +962,15 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
 
     def drain(source, mode):
         """(plans, jobs, micro-batches) of one drain of ``source`` into a
-        fresh sink, in ``mode``."""
+        fresh sink, in ``mode``; the micro-batches are the returned query's
+        progress entries."""
         run = os.path.join(dirs["tgt"], f"{os.path.basename(source)}-{mode}")
         before = _last_execution_id(spark)
-        lst = R.ReplicationProgressListener()
-        spark.streams.addListener(lst)
-        try:
-            if mode == "route":
-                R.replicate_stream_dlq(spark, source, run, run + "-dlq", src_reg, tgt_reg,
-                                       "target-topic-b", None, run + "-ckpt")
-            else:
-                R.replicate_stream(spark, source, run, src_reg, tgt_reg, "target-topic-b",
-                                   None, run + "-ckpt", timeout_sec=60)
-        finally:
-            lst.terminated.wait(10)
-            spark.streams.removeListener(lst)
-            new = _sql_executions(spark, after=before)
-        return [p for p, _ in new], sum(j for _, j in new), len(lst.batches)
+        q = R.replicate_stream(spark, source, run, src_reg, tgt_reg, "target-topic-b", None,
+                               run + "-ckpt", timeout_sec=60,
+                               dlq_dir=run + "-dlq" if mode == "route" else None)
+        new = _sql_executions(spark, after=before)
+        return [p for p, _ in new], sum(j for _, j in new), len(q.recentProgress)
 
     # dead letters of an earlier, uncommitted attempt at the clean batch
     stale = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-route-dlq", "data", "0")
@@ -1082,24 +1073,45 @@ def test_multi_schema_topic_replication(spark, dirs):
             assert record["name"] == f"n{record['id']}"
 
 
-def test_progress_listener_observes_batches(spark, dirs):
-    """Observability parity (ReplicationApplication.java:64,101): the
-    listener sees every micro-batch with its row count — the structured
-    replacement for the reference's per-batch log lines."""
+def _progress(q) -> list:
+    """(batch id, input rows, phase names) of each progress entry of ``q``."""
+    return [(p.batchId, p.numInputRows, set(p.durationMs)) for p in q.recentProgress]
+
+
+def test_returned_query_reports_every_batch(spark, dirs):
+    """Observability parity (ReplicationApplication.java:64,101): the query
+    ``replicate_stream`` returns holds one progress entry per micro-batch
+    in both modes, its input rows summing to the source rows and its phase
+    durations including ``addBatch`` (the foreachBatch write) — the
+    structured replacement for the reference's per-batch log lines. A rerun
+    on the same checkpoint reports only the batch it ran. (Spark counts the
+    rows each job of a batch reads, so a batch whose declined rows take the
+    second job reports its input twice; these sources are clean.)"""
     src_reg, tgt_reg = _fresh_registries()
     records = [{"id": str(uuid.uuid4()), "name": f"r{i}"} for i in range(7)]
     R.write_envelope_fixture(
         spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA
     )
-    lst = R.ReplicationProgressListener()
-    R.replicate_stream(
-        spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
-        "target-topic-b", R.FOO_SCHEMA, dirs["ckpt"], listener=lst,
-    )
-    assert lst.total_rows() == 7
-    assert all(b["processedRowsPerSecond"] >= 0 for b in lst.batches)
-    # per-batch phase durations ride along (addBatch = the foreachBatch write)
-    assert all("addBatch" in b["durationMs"] for b in lst.batches)
+    env = spark.read.parquet(dirs["src"])
+    env.limit(3).withColumn("offset", F.col("offset") + 7).write.parquet(dirs["src"] + "-more")
+    args = (src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA, dirs["ckpt"])
+    q = R.replicate_stream(spark, dirs["src"], dirs["tgt"], *args)
+    assert not q.isActive
+    ((batch, rows, phases),) = _progress(q)
+    assert (batch, rows) == (0, 7) and "addBatch" in phases
+    for f in os.listdir(dirs["src"] + "-more"):  # new files on the source
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(dirs["src"] + "-more", f), os.path.join(dirs["src"], "more-" + f))
+    q = R.replicate_stream(spark, dirs["src"], dirs["tgt"], *args)
+    ((batch, rows, phases),) = _progress(q)
+    assert (batch, rows) == (1, 3) and "addBatch" in phases
+    assert R.read_committed(spark, dirs["tgt"]).count() == 10
+
+    q = R.replicate_stream(spark, dirs["src"], dirs["tgt"] + "-route", *args[:-1],
+                           dirs["ckpt"] + "-route", dlq_dir=dirs["tgt"] + "-dlq")
+    ((batch, rows, phases),) = _progress(q)
+    assert (batch, rows) == (0, 10) and "addBatch" in phases
+    assert R.read_committed(spark, dirs["tgt"] + "-route").count() == 10
 
 
 FOO_V2 = {
@@ -1141,21 +1153,6 @@ def test_schema_resolution_incompatible_raises():
     with _pytest.raises(ValueError, match="not read-compatible"):
         C.resolve(C.decode(C.encode({"id": "9"}, R.FOO_SCHEMA), R.FOO_SCHEMA),
                   R.FOO_SCHEMA, bad_reader)
-
-
-def test_confluent_deserialize_with_evolution():
-    """Mixed-version topic: records framed under two schema ids, one
-    consumer on the v2 reader — every record arrives v2-shaped."""
-    from avro_topic_replication_spark.functions import avro_codec as C
-
-    schemas = {1: R.FOO_SCHEMA, 2: FOO_V2}
-    msgs = [
-        C.serialize_confluent({"id": "a", "name": None}, R.FOO_SCHEMA, 1),
-        C.serialize_confluent({"id": "b", "name": "n", "tag": "t"}, FOO_V2, 2),
-    ]
-    out = [C.deserialize_confluent_evolved(m, schemas, FOO_V2) for m in msgs]
-    assert out[0] == (1, {"id": "a", "name": None, "tag": "untagged"})
-    assert out[1] == (2, {"id": "b", "name": "n", "tag": "t"})
 
 
 def test_decode_envelope_rejects_non_string_reader_fields():

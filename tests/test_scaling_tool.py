@@ -55,6 +55,11 @@ def test_family_classification(tool):
 
 
 def test_latest_per_sf_reads_history(tool, tmp_path, monkeypatch):
+    """The latest run per sf, among the newest run's host's runs only:
+    runs from another host, or from before runs carried one, never mix
+    into its differences."""
+    big = {"cpus": 32, "spark_cpus": 32, "mem_total_mb": 131072}
+    small = {"cpus": 4, "spark_cpus": 4, "mem_total_mb": 15360}
     hist = {"runs": [
         {"sf": 0.1, "queries": {"q": 1.0}},
         {"sf": 0.01, "queries": {"q": 0.5}},
@@ -65,6 +70,20 @@ def test_latest_per_sf_reads_history(tool, tmp_path, monkeypatch):
     assert tool._latest_per_sf([0.1, 0.01]) == [{"q": 2.0}, {"q": 0.5}]
     with pytest.raises(SystemExit):
         tool._latest_per_sf([0.001])
+    hist["runs"] += [
+        {"sf": 0.01, "queries": {"q": 0.3}, "host": big},
+        {"sf": 0.1, "queries": {"q": 3.0}, "host": big},
+        {"sf": 0.1, "queries": {"q": 4.0}, "host": small},
+    ]
+    json.dump(hist, open(tmp_path / "BENCH_HISTORY.json", "w"))
+    with pytest.raises(SystemExit, match="newest run's host"):
+        tool._latest_per_sf([0.1, 0.01])
+    hist["runs"].append({"sf": 0.01, "queries": {"q": 0.6}, "host": small})
+    json.dump(hist, open(tmp_path / "BENCH_HISTORY.json", "w"))
+    assert tool._latest_per_sf([0.1, 0.01]) == [{"q": 4.0}, {"q": 0.6}]
+    hist["runs"].append({"sf": 0.1, "queries": {"q": 5.0}, "host": big})
+    json.dump(hist, open(tmp_path / "BENCH_HISTORY.json", "w"))
+    assert tool._latest_per_sf([0.1, 0.01]) == [{"q": 5.0}, {"q": 0.3}]
 
 
 def test_main_gates_on_super_linear(tool, tmp_path, monkeypatch, capsys):

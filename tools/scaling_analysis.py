@@ -26,7 +26,8 @@ Usage:  python tools/scaling_analysis.py            # table + counts
                                                     # ratios only)
 
 Run `SPARK_GRAFT_SF_DIR=/root/testdata/sfX python bench.py` once per sf
-first — each run appends to BENCH_HISTORY.json under its own sf key.
+first — each run appends to BENCH_HISTORY.json under its own sf key, with
+its host; only runs from the newest run's host are compared.
 """
 from __future__ import annotations
 
@@ -46,12 +47,17 @@ ALL_TABLES = SCALING | FLATISH | {"region", "nation"}
 
 
 def _latest_per_sf(sfs: "list[float]") -> "list[dict[str, float]]":
+    """The latest run at each sf, among runs timed on the host of the
+    newest run (its ``host`` fingerprint; entries without one form their
+    own host): differences across hosts would measure the hosts."""
     runs = json.load(open(os.path.join(REPO, "BENCH_HISTORY.json")))["runs"]
+    host = runs[-1].get("host") if runs else None
     out = []
     for sf in sfs:
-        matching = [r["queries"] for r in runs if r.get("sf") == sf]
+        matching = [r["queries"] for r in runs if r.get("sf") == sf and r.get("host") == host]
         if not matching:
-            sys.exit(f"no BENCH_HISTORY run at sf={sf}; run bench.py there first")
+            sys.exit(f"no BENCH_HISTORY run at sf={sf} on the newest run's host; "
+                     "run bench.py there first")
         out.append(matching[-1])
     return out
 
