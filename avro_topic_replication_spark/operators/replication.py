@@ -23,28 +23,33 @@ Spark mapping implemented here:
 |    |                                    | declines (a second job)          |
 | R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte span  |
 | R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
-|    |                                    | (Catalyst concat/substring; the  |
-|    |                                    | Avro string of id, serde parity) |
+|    |                                    | (jvm/GraftSink.java, one copy per|
+|    |                                    | row; the Avro string of id, serde|
+|    |                                    | parity)                          |
 | R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
-|    | (application.yml:15-16,README:27)  | 0x00 + the target id (CASE on the|
-|    |                                    | source id) + the payload as is   |
+|    | (application.yml:15-16,README:27)  | the payload with its schema id   |
+|    |                                    | swapped for the target's         |
 |    |                                    | (fallback: full re-encode)       |
 | R7 | executeInTransaction (:66-78)      | replicate_stream's foreachBatch: |
-|    |                                    | write the accepted rows, then the|
-|    |                                    | declined rows' job if any (with a|
-|    |                                    | dlq_dir, route mode: bad records |
-|    |                                    | to the dead-letter sink; parquet |
-|    |                                    | without dictionaries; a get_spark|
-|    |                                    | JVM writes through the fork-free |
-|    |                                    | jvm/GraftLocalFileSystem.java),  |
+|    |                                    | one JVM job over the batch, each |
+|    |                                    | task rewriting and writing its   |
+|    |                                    | rows as one parquet file (no     |
+|    |                                    | dictionaries, no key/value stats,|
+|    |                                    | UTC microsecond timestamps) and  |
+|    |                                    | spilling the declined ones; then |
+|    |                                    | the declined rows' job if any    |
+|    |                                    | (with a dlq_dir, route mode: bad |
+|    |                                    | records to the dead-letter sink),|
 | R8 | future.get barrier → abort (:80-94)| then atomically create one commit|
-|    |                                    | marker; any task failure fails   |
-|    |                                    | the batch before it exists       |
+|    |                                    | marker, the only commit point;   |
+|    |                                    | any task failure fails the batch |
+|    |                                    | before it exists                 |
 | R9 | ack after commit (:99-100)         | checkpoint (offset WAL, commit   |
 |    |                                    | log: FileContext atomic renames, |
-|    |                                    | the same fork-free FS) advances  |
-|    |                                    | only after foreachBatch returns; |
-|    |                                    | the returned query's             |
+|    |                                    | in a get_spark JVM through the   |
+|    |                                    | fork-free GraftLocalFileSystem)  |
+|    |                                    | advances only after foreachBatch |
+|    |                                    | returns; the returned query's    |
 |    |                                    | recentProgress logs each batch   |
 
 Crash-window semantics (honest, mirroring README.adoc:22-25): a crash
@@ -62,8 +67,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
@@ -173,17 +177,24 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
 
 _SPAN = "_span"  # the walked envelope's column: the id span, or -1 where declined
 
+# The source envelope columns the full path reads: the walked rows it
+# receives, and the declined rows the sink spills (jvm/GraftSink.java).
+_DECLINED_ENVELOPE = StructType([KAFKA_ENVELOPE["value"]] + KAFKA_ENVELOPE.fields[3:])
+
 
 def _ensure_walker(spark: SparkSession) -> None:
-    """Register the JVM walker (``graft_jar``) as the SQL function
-    ``graft_walk``, once per session object like ``ensure_runtime_conf``.
-    A JVM ``get_spark`` launched has the jar on its class path; any other
-    gets it by ``ADD JAR``."""
+    """Register the JVM walker and rewrite (``graft_jar``) as the SQL
+    functions ``graft_walk``, ``graft_key`` and ``graft_value``, once per
+    session object like ``ensure_runtime_conf``. A JVM ``get_spark``
+    launched has the jar on its class path; any other gets it by
+    ``ADD JAR``."""
     if getattr(spark, "_graft_walk_registered", False):
         return
     if not jar_on_class_path():
         spark.sql(f"ADD JAR '{graft_jar()}'")
     spark.udf.registerJavaFunction("graft_walk", "sparkgraft.GraftWalk", LongType())
+    spark.udf.registerJavaFunction("graft_key", "sparkgraft.GraftSink$Key", BinaryType())
+    spark.udf.registerJavaFunction("graft_value", "sparkgraft.GraftSink$Value", BinaryType())
     spark._graft_walk_registered = True
 
 
@@ -202,13 +213,15 @@ class ReplicationPlan:
     ``walk`` adds the JVM walker's verdict to each envelope row: the span of
     its ``id`` within the value, or -1 where the walker declines it (null,
     bad frame, unknown id, a schema it does not cover, a payload that would
-    not re-encode to itself). ``accepted`` rewrites the rows it vouches for
-    with Catalyst expressions alone: key = the key frame + the id span;
-    value = ``0x00`` + the target id (a ``CASE`` on the source id) + the
-    payload as is; exactly the bytes the full path would encode, and no
-    Python worker runs. ``declined`` runs ``_reencode`` over the other rows
-    only (one ``mapInArrow``), so both modes give the full path's output
-    for every input.
+    not re-encode to itself). The rows it vouches for take the JVM rewrite
+    (``jvm/GraftSink.java``): key = the key frame + the id span; value =
+    the payload with its schema id swapped for the target's; exactly the
+    bytes the full path would encode, and no Python worker runs. The
+    streaming sink (``batch_writer``) runs it in its task loop, the static
+    ``transform`` as the SQL functions ``graft_key``/``graft_value``.
+    ``_full`` runs ``_reencode`` over the declined rows only (one
+    ``mapInArrow``), so both modes give the full path's output for every
+    input.
 
     ``on_error`` picks what a bad record does:
 
@@ -238,35 +251,27 @@ class ReplicationPlan:
         route = on_error == "route"
         self.route = route
         self.schema = DLQ_ENVELOPE if route else KAFKA_ENVELOPE
-        program, targets = [], {}
+        program, targets = [], b""
         for sid, schema in snapshot.items():
             ops = avro_codec.compile_walker(schema) if sid in mapping else None
             if ops is not None:
                 program.append(struct.pack(">ii", sid, len(ops)) + ops)
-                targets[struct.pack(">I", sid)] = struct.pack(">I", mapping[sid])
+                targets += struct.pack(">II", sid, mapping[sid])
+        # the JVM rewrite's arguments: the key frame, the (source, target)
+        # schema id pairs, the target topic
+        self._rewrite = (avro_codec.frame(key_schema_id, b""), targets, target_topic)
         # Built once as SQL text: every Column method is a few py4j round
         # trips, so per-batch Column building made each micro-batch pay
         # hundreds of them; a selectExpr/where is one call.
         self._walk_sql = ["value", "`partition`", "`offset`", "`timestamp`",
                           f"graft_walk(value, X'{b''.join(program).hex()}') AS {_SPAN}"]
-        start = f"CAST(shiftright({_SPAN}, 32) AS INT)"
-        end = f"CAST({_SPAN} & {0xFFFFFFFF} AS INT)"
-        target = ("CASE substring(value, 2, 4) " + " ".join(
-            f"WHEN X'{source.hex()}' THEN X'{dest.hex()}'" for source, dest in targets.items()
-        ) + " END") if targets else "CAST(NULL AS BINARY)"
-        key_frame = avro_codec.frame(key_schema_id, b"")
-        self._accepted_sql = [
-            f"concat(X'{key_frame.hex()}', substring(value, {start} + 1, {end} - {start}))"
-            " AS key",
-            f"concat(X'{avro_codec.MAGIC.hex()}', {target}, substring(value, 6, {2**31 - 1}))"
-            " AS value",
+        self._rewrite_sql = [
+            f"graft_key(value, {_SPAN}, X'{self._rewrite[0].hex()}') AS key",
+            f"graft_value(value, X'{targets.hex()}') AS value",
             # the topic as UTF-8 bytes: no quoting or escaping rules apply
             f"CAST(X'{target_topic.encode().hex()}' AS STRING) AS topic",
-            "`partition`",
-            "`offset`",
-            "`timestamp`",
-        ]
-        self._declined_count = F.expr(f"count_if({_SPAN} < 0) AS n")
+            "`partition`", "`offset`", "`timestamp`",
+        ] + (["CAST(NULL AS STRING) AS error"] if route else [])
         names = self.schema.fieldNames()
 
         def fallback(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -314,29 +319,23 @@ class ReplicationPlan:
         """The envelope columns the output keeps, plus the walker's span."""
         return env.selectExpr(*self._walk_sql)
 
-    def accepted(self, walked: DataFrame) -> DataFrame:
-        """The target envelope (``KAFKA_ENVELOPE``) of the rows the walker
-        vouches for, built in the JVM."""
-        return walked.where(f"{_SPAN} >= 0").selectExpr(*self._accepted_sql)
-
-    def declined(self, walked: DataFrame) -> DataFrame:
-        """The full path's output (``self.schema``) for every row the
-        walker declines."""
-        return walked.where(f"{_SPAN} < 0").drop(_SPAN).mapInArrow(
-            self._fallback, schema=self.schema)
+    def _full(self, env: DataFrame) -> DataFrame:
+        """The full path's output (``self.schema``) for every row of
+        ``env``, a ``_DECLINED_ENVELOPE``."""
+        return env.mapInArrow(self._fallback, schema=self.schema)
 
     def transform(self, env: DataFrame) -> DataFrame:
-        """Both halves over a static ``env``, as one DataFrame. A JVM-only
-        job counts the declined rows first (one parallel pass; ``isEmpty``
-        would scan partitions in waves): a Python stage costs its fixed
-        price even over 0 rows, so a clean ``env`` gets the rewrite alone."""
+        """The whole output over a static ``env``, as one DataFrame. A
+        JVM-only job counts the declined rows first (one parallel pass;
+        ``isEmpty`` would scan partitions in waves): a Python stage costs
+        its fixed price even over 0 rows, so a clean ``env`` gets the
+        rewrite alone."""
         walked = self.walk(env)
-        fast = self.accepted(walked)
-        if self.route:
-            fast = fast.selectExpr("*", "CAST(NULL AS STRING) AS error")
-        if not walked.where(f"{_SPAN} < 0").count():
+        fast = walked.where(f"{_SPAN} >= 0").selectExpr(*self._rewrite_sql)
+        declined = walked.where(f"{_SPAN} < 0")
+        if not declined.count():
             return fast
-        return fast.unionByName(self.declined(walked))
+        return fast.unionByName(self._full(declined.drop(_SPAN)))
 
 
 def plan_replication(
@@ -362,35 +361,51 @@ def committed_marker(target_dir: str, batch_id: int) -> str:
     return os.path.join(target_dir, "commits", str(batch_id))
 
 
-def _write_parquet(df: DataFrame, target_dir: str, batch_id: int, mode: str) -> None:
-    # no dictionaries: keys, values and offsets are unique per record, so
-    # parquet would build each dictionary only to drop it
-    df.write.mode(mode).option("parquet.enable.dictionary", "false").parquet(
-        os.path.join(target_dir, "data", str(batch_id))
-    )
+_DECLINED = ".declined"  # a batch dir's spill of the rows the walker declines
+
+
+def _graft_sink(spark: SparkSession):
+    """``jvm/GraftSink.java``'s class, for calls from this thread. py4j
+    finds classes through the calling JVM thread's context class loader:
+    in a JVM that has the jar by ``ADD JAR`` only, that is the session's
+    jar class loader on the thread that ran ``ADD JAR`` alone, so any other
+    thread (a stream started from another Python thread) is given it."""
+    jvm = spark._jvm
+    if not jar_on_class_path():
+        jvm.java.lang.Thread.currentThread().setContextClassLoader(
+            spark._jsparkSession.sharedState().jarClassLoader())
+    return jvm.sparkgraft.GraftSink
 
 
 def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = None):
     """foreachBatch body over ``plan.walk`` batches: write-then-commit-
     marker, idempotent on replay. ``dlq_dir`` is given in route mode only.
 
-    - the rows the walker vouches for land in <main_dir>/data/<batch_id>/
-      (overwrite), in one job that also counts the declined rows;
-    - only if that count is above 0 does a second job run ``_reencode``
-      over the declined rows: in abort mode they are appended to the same
-      dir, or the job raises the first failing row's error; in route mode
-      they are materialized once, the good ones appended to the main dir
-      and the classified ones written to <dlq_dir>/data/<batch_id>/ (a
-      batch with none removes that dir, left by an earlier attempt);
+    - <main_dir>/data/<batch_id>/ is cleared, then one job
+      (``jvm/GraftSink.java``) runs over the batch itself: each task
+      rewrites the rows the walker vouches for into its part file and
+      spills the declined ones to the dir's hidden ``.declined`` dir;
+    - only if it spilled any does a second job run ``_reencode`` over the
+      spill alone (the batch is not read again): in abort mode the output
+      goes through the same writer into the same dir, or the job raises
+      the first failing row's error; in route mode it is materialized
+      once, the good rows written like abort mode's and the classified
+      ones (Spark's writer) to <dlq_dir>/data/<batch_id>/ (a batch with
+      none removes that dir, left by an earlier attempt);
     - task failures abort the whole write (the R8 barrier); ONE commit
       marker under ``main_dir`` is created atomically AFTER every write
       succeeded (R7 transaction commit), so a batch commits both sinks or
-      neither;
+      neither; no other commit protocol runs (each part file is renamed
+      into place by its task);
     - a replayed batch (crash between marker and checkpoint ack) sees its
       marker and skips — effectively-exactly-once downstream; a replay of
-      an uncommitted batch overwrites its partial data dirs;
+      an uncommitted batch replaces its partial data dirs;
     - Structured Streaming acks the checkpoint only after this returns
       (R9 post-commit offset ack).
+
+    Files and markers are written through the local file system (java.nio
+    in the tasks, ``os`` here); a cluster deployment moves both to its
+    shared file system together.
     """
     if (dlq_dir is not None) != plan.route:
         raise ValueError("a dead-letter dir goes with an on_error='route' plan, and only then")
@@ -399,22 +414,27 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
         marker = committed_marker(main_dir, batch_id)
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
-        declined = Observation()
-        counted = batch_df.observe(declined, plan._declined_count)
-        _write_parquet(plan.accepted(counted), main_dir, batch_id, "overwrite")
-        if declined.get["n"]:
-            slow = plan.declined(batch_df)
-            if dlq_dir is None:
-                _write_parquet(slow, main_dir, batch_id, "append")
-            else:
+        data = os.path.join(main_dir, "data", str(batch_id))
+        shutil.rmtree(data, ignore_errors=True)
+        os.makedirs(data)
+        spark = batch_df.sparkSession
+        sink = _graft_sink(spark)
+        dead = None if dlq_dir is None else os.path.join(dlq_dir, "data", str(batch_id))
+        spill = os.path.join(data, _DECLINED)
+        if sink.write(batch_df._jdf, data, spill, *plan._rewrite):
+            slow = plan._full(spark.read.schema(_DECLINED_ENVELOPE).parquet(spill))
+            if dead is not None:
                 slow = slow.localCheckpoint(eager=True)  # the split reads it twice
-                good = slow.where("error IS NULL").drop("error")
-                _write_parquet(good, main_dir, batch_id, "append")
-                _write_parquet(slow.where("error IS NOT NULL"), dlq_dir, batch_id, "overwrite")
-        elif dlq_dir is not None:
+                # no dictionaries: offsets are unique per record
+                slow.where("error IS NOT NULL").write.mode("overwrite").option(
+                    "parquet.enable.dictionary", "false").parquet(dead)
+                slow = slow.where("error IS NULL").drop("error")
+            sink.append(slow._jdf, data, "full")
+            shutil.rmtree(spill)
+        elif dead is not None:
             # a replay whose first attempt routed rows that now pass (a
             # schema registered in between): its dead letters must not commit
-            shutil.rmtree(os.path.join(dlq_dir, "data", str(batch_id)), ignore_errors=True)
+            shutil.rmtree(dead, ignore_errors=True)
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:

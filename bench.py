@@ -310,13 +310,19 @@ def _write_isolated(script_dir: str, sf: "float | None",
     replaced whole only under ``clobber_other_sf`` (explicit --isolated
     re-baselining at a new scale factor); the recheck-seeding path
     passes False so it can never destroy another sf's baselines.
-    Returns the written dict, or None if the write was refused."""
+    A prior file timed on another host, or on no recorded host, is no
+    baseline here (``_drift_check`` ignores it), so it is replaced whole
+    on either path. Returns the written dict, or None if the write was
+    refused."""
     path = os.path.join(script_dir, "BENCH_ISOLATED.json")
+    host = _host_fingerprint()
     prior = None
     try:
         prior = json.load(open(path))
     except Exception:
         pass
+    if prior is not None and prior.get("host") != host:
+        prior = None
     if prior is not None and prior.get("sf") == sf:
         ran = set(timings) | set(failures)
         timings = {**{k: v for k, v in prior.get("queries", {}).items()
@@ -330,6 +336,7 @@ def _write_isolated(script_dir: str, sf: "float | None",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "sf": sf,
+        "host": host,
         "n_queries": len(timings),
         "failures": failures,
         "queries": timings,
@@ -351,8 +358,8 @@ def _drift_check(prev: "dict | None", timings: "dict[str, float]",
     noise-dominated and never flagged.
 
     Verdicts compare ISOLATED-to-ISOLATED (this recheck vs the query's
-    prior BENCH_ISOLATED.json entry) — fresh-JVM numbers sit well above
-    warm-suite numbers by protocol (PLANS.md), so comparing the recheck
+    prior BENCH_ISOLATED.json entry, timed on this host) — fresh-JVM
+    numbers sit well above warm-suite numbers by protocol (PLANS.md), so comparing the recheck
     against the in-suite prev would call every recheck "real". The
     caller must terminate the suite JVM before invoking this (a resident
     bench heap next to the recheck children inflated a 6.7s isolated
@@ -404,7 +411,9 @@ def _drift_check(prev: "dict | None", timings: "dict[str, float]",
     iso_prior: dict = {}
     try:
         iso = json.load(open(os.path.join(script_dir, "BENCH_ISOLATED.json")))
-        if iso.get("sf") == sf:
+        # a baseline only from this host: another host's timings would
+        # judge the host, not the query
+        if iso.get("sf") == sf and iso.get("host") == _host_fingerprint():
             iso_prior = iso.get("queries", {})
     except Exception:
         pass

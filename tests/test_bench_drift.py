@@ -1,7 +1,7 @@
 """Unit tests for bench.py's cross-round drift tracking (r10-r12):
 history persistence, median-of-history baseline resolution over the
 same host's runs only, the size-tiered flag
-rule, per-path-cohort control factors, and the isolated-to-isolated
+rule, per-path-cohort control factors, and the same-host isolated-to-isolated
 verdict baseline. Spark-free except the final plan-marker classification
 test (which pins the physical node names `_query_path` greps for, so a
 Spark upgrade renaming them fails loudly here instead of silently
@@ -122,7 +122,7 @@ def test_tier_keys_on_baseline_not_noisy_run(bench, tmp_path, no_recheck):
 def test_drift_verdict_uses_isolated_baseline(bench, tmp_path, monkeypatch):
     d = str(tmp_path)
     json.dump(
-        {"sf": 0.1, "queries": {"q": 8.0}},
+        {"sf": 0.1, "queries": {"q": 8.0}, "host": bench._host_fingerprint()},
         open(os.path.join(d, "BENCH_ISOLATED.json"), "w"),
     )
     monkeypatch.delenv("SPARK_GRAFT_BENCH_NO_RECHECK", raising=False)
@@ -277,8 +277,9 @@ def test_no_baseline_recheck_seeds_the_baseline(bench, tmp_path, monkeypatch):
     protocol-valid min-of-3 — it must be persisted into
     BENCH_ISOLATED.json so the next flag on that query concludes."""
     d = str(tmp_path)
+    host = bench._host_fingerprint()
     json.dump(
-        {"sf": 0.1, "queries": {"other": 5.0}, "failures": {"q": "old"}},
+        {"sf": 0.1, "queries": {"other": 5.0}, "failures": {"q": "old"}, "host": host},
         open(os.path.join(d, "BENCH_ISOLATED.json"), "w"),
     )
     monkeypatch.delenv("SPARK_GRAFT_BENCH_NO_RECHECK", raising=False)
@@ -295,12 +296,47 @@ def test_no_baseline_recheck_seeds_the_baseline(bench, tmp_path, monkeypatch):
     assert f2["verdict"] == "isolated-stable"
     # a different-sf baseline file is never clobbered
     json.dump(
-        {"sf": 0.01, "queries": {"w": 1.0}},
+        {"sf": 0.01, "queries": {"w": 1.0}, "host": host},
         open(os.path.join(d, "BENCH_ISOLATED.json"), "w"),
     )
     bench._drift_check({"q": 2.0}, {"q": 4.0}, d, 0.1)
     iso = json.load(open(os.path.join(d, "BENCH_ISOLATED.json")))
-    assert iso == {"sf": 0.01, "queries": {"w": 1.0}}
+    assert iso == {"sf": 0.01, "queries": {"w": 1.0}, "host": host}
+
+
+@pytest.mark.parametrize("host", [None, {"cpus": 32, "spark_cpus": 32, "mem_total_mb": 131072}],
+                         ids=["no_host", "other_host"])
+def test_isolated_baseline_from_another_host_is_no_baseline(bench, tmp_path, monkeypatch, host):
+    """BENCH_ISOLATED.json judges a recheck only when it was timed on this
+    host: a file from another host, or one that records none, gives no
+    baseline, and the recheck's seeding replaces it (of either sf) instead
+    of merging into it."""
+    d = str(tmp_path)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_NO_RECHECK", raising=False)
+    monkeypatch.setattr(bench, "_isolated_min3", lambda n, deadline=None: (6.0, None))
+    for sf in (0.1, 0.01):
+        foreign = {"sf": sf, "queries": {"q": 2.0, "other": 5.0}, "failures": {"f": "x"}}
+        if host is not None:
+            foreign["host"] = host
+        json.dump(foreign, open(os.path.join(d, "BENCH_ISOLATED.json"), "w"))
+        rep = bench._drift_check({"q": 2.0}, {"q": 4.0}, d, 0.1)
+        (f,) = rep["flagged"]
+        # 6.0 > 2.0 * 1.5 would read "real" against the foreign baseline
+        assert f["verdict"] == "no-isolated-baseline" and "isolated_prev" not in f
+        iso = json.load(open(os.path.join(d, "BENCH_ISOLATED.json")))
+        assert iso["queries"] == {"q": 6.0} and iso["failures"] == {}
+        assert (iso["sf"], iso["host"]) == (0.1, bench._host_fingerprint())
+
+
+def test_write_isolated_records_the_host(bench, tmp_path):
+    """Every BENCH_ISOLATED.json write carries the host it was timed on,
+    and merges only into a same-host file of the same sf."""
+    d = str(tmp_path)
+    out = bench._write_isolated(d, 0.1, {"a": 1.0}, {}, clobber_other_sf=False)
+    assert out["host"] == bench._host_fingerprint()
+    out = bench._write_isolated(d, 0.1, {"b": 2.0}, {}, clobber_other_sf=False)
+    assert out["queries"] == {"a": 1.0, "b": 2.0}
+    assert json.load(open(os.path.join(d, "BENCH_ISOLATED.json"))) == out
 
 
 def test_count_cap_regressions_get_explicit_disposition(bench, tmp_path, monkeypatch):

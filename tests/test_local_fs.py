@@ -179,7 +179,9 @@ def test_link_status_matches_hadoops_local_fs(spark, tmp_path):
 def test_get_spark_on_a_running_jvm_keeps_hadoops_local_fs(tmp_path):
     """A JVM someone else launched (a plain SparkSession, spark-submit) does not
     have the jar on its class path: ``get_spark`` must not register the
-    class there, or every write would raise ClassNotFoundException."""
+    class there, or every write would raise ClassNotFoundException. The
+    replication fast path and its streaming sink load the jar by ADD JAR
+    instead, and the sink works from any Python thread."""
     script = textwrap.dedent(f"""
         import os
         from pyspark.sql import SparkSession
@@ -208,6 +210,15 @@ def test_get_spark_on_a_running_jvm_keeps_hadoops_local_fs(tmp_path):
         env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(os.path.join(base, "env"))
         out = R.plan_replication(env, src, tgt, "topic-b").collect()
         assert [(r.topic, r.value is not None) for r in out] == [("topic-b", True)]
+        # and the streaming sink (jvm/GraftSink.java), from a thread other
+        # than the one that ran ADD JAR
+        import threading
+        main = os.path.join(base, "main")
+        t = threading.Thread(target=R.replicate_stream, args=(
+            spark, os.path.join(base, "env"), main, src, tgt, "topic-b", None, main + "-ckpt"))
+        t.start()
+        t.join()
+        assert [r.topic for r in R.read_committed(spark, main).collect()] == ["topic-b"]
         print("OK")
     """)
     env = dict(os.environ, PYTHONPATH=ROOT)

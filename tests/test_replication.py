@@ -222,19 +222,37 @@ def _run(fn):
         return type(e), str(e)
 
 
+def _sink_rewrite(spark, plan, env) -> tuple[dict, dict]:
+    """One job of the replica sink's task loop (``jvm/GraftSink.java``)
+    over ``plan.walk(env)`` into a fresh dir: offset → (key, value) of the
+    rows it rewrote into its part files, and offset → value of the rows it
+    spilled for the full path."""
+    data = os.path.join(SCRATCH, "repltest", uuid.uuid4().hex[:12], "data")
+    os.makedirs(data)
+    spill = os.path.join(data, R._DECLINED)
+    n = R._graft_sink(spark).write(plan.walk(env)._jdf, data, spill, *plan._rewrite)
+    out = pq.read_table(data)  # pyarrow skips the hidden spill dir
+    fast = dict(zip(out.column("offset").to_pylist(),
+                    zip(out.column("key").to_pylist(), out.column("value").to_pylist())))
+    spilled = pq.read_table(spill) if n else pa.table({"offset": [], "value": []})
+    assert spilled.num_rows == n
+    return fast, dict(zip(spilled.column("offset").to_pylist(),
+                          spilled.column("value").to_pylist()))
+
+
 def _check_kernel(spark, raws: list, snapshot=_SNAPSHOT, mapping=_MAPPING) -> dict:
     """The kernel's outcome for each framed value equals the full path's
     (per-row ``_reencode``) in both on_error modes; returns index → (key,
     value, None) of the values the walker vouched for. Those take the JVM
-    rewrite, run here as one Spark job, and the full path must give
-    exactly its key and value with no error in both modes. Every other
-    value takes ``_reencode`` itself (the declined rows' job runs it
-    unchanged; the Spark tests below cover that job)."""
+    rewrite, run here as one job of the sink's task loop, and the full
+    path must give exactly its key and value with no error in both modes.
+    The sink spills every other value unchanged, and the declined rows'
+    job runs ``_reencode`` on it (the Spark tests below cover that job)."""
     plan = _plan(spark, snapshot, mapping)
-    fast = {
-        r["offset"]: (bytes(r["key"]), bytes(r["value"]), None)
-        for r in plan.accepted(plan.walk(_envelope(spark, raws))).collect()
-    }
+    fast, spilled = _sink_rewrite(spark, plan, _envelope(spark, raws))
+    assert sorted([*fast, *spilled]) == list(range(len(raws)))
+    assert all(raws[i] == raw for i, raw in spilled.items())
+    fast = {i: (key, value, None) for i, (key, value) in fast.items()}
     for i, rewrite in fast.items():
         for route in (False, True):
             full = _run(lambda: R._reencode(raws[i], snapshot, mapping, _KEY_ID, route))
@@ -814,6 +832,35 @@ def test_idempotent_replay_of_committed_batch(spark, dirs):
     assert R.read_committed(spark, dirs["tgt"]).count() == 10
 
 
+def test_replay_replaces_an_uncommitted_attempt(spark, dirs):
+    """A batch whose first attempt died after writing part files, a task's
+    temp file and a spill, but before its marker, is replaced on replay,
+    not appended to; once committed, a replay (even over other rows)
+    leaves its files as they are."""
+    src_reg, tgt_reg = _fresh_registries()
+    records = [{"id": str(i), "name": f"n{i}"} for i in range(10)]
+    R.write_envelope_fixture(spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA)
+    env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(dirs["src"])
+    plan = R.ReplicationPlan.from_registries(
+        spark, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
+    writer = R.batch_writer(plan, dirs["tgt"])
+    data = os.path.join(dirs["tgt"], "data", "0")
+    os.makedirs(os.path.join(data, R._DECLINED))
+    stray = pa.table({"offset": pa.array([99], pa.int64())})
+    for name in ("part-5.parquet", ".part-0.17.tmp", os.path.join(R._DECLINED, "part-0.parquet")):
+        pq.write_table(stray, os.path.join(data, name))
+    writer(plan.walk(env), 0)
+    assert os.listdir(data) == ["part-0.parquet"]
+    got = R.read_committed(spark, dirs["tgt"]).collect()
+    assert sorted(r["offset"] for r in got) == list(range(10))
+
+    stat = os.stat(os.path.join(data, "part-0.parquet"))
+    writer(plan.walk(env.limit(3)), 0)  # a committed batch is skipped
+    assert os.listdir(data) == ["part-0.parquet"]
+    assert os.stat(os.path.join(data, "part-0.parquet")).st_mtime_ns == stat.st_mtime_ns
+    assert R.read_committed(spark, dirs["tgt"]).count() == 10
+
+
 def test_dlq_transform_routes_all_three_error_classes(spark):
     """on_error="route": unknown_schema / decode_error / missing_id
     classification plus byte-correct passthrough of good records — on
@@ -912,11 +959,11 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
         assert (r["topic"], r["partition"]) == (want[off]["topic"], want[off]["partition"])
 
 
-def _sql_executions(spark, after: int) -> list:
-    """(physical plan text, job count) of each SQL execution after
-    execution id ``after`` in the session's status store, once the
-    listener bus has delivered every event so far. The store lists
-    executions by id, so only the new ones cross py4j."""
+def _sql_plans(spark, after: int) -> list:
+    """The physical plan text of each SQL execution after execution id
+    ``after`` in the session's status store, once the listener bus has
+    delivered every event so far. The store lists executions by id, so
+    only the new ones cross py4j."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     xs = spark._jsparkSession.sharedState().statusStore().executionsList()
     out = []
@@ -924,7 +971,7 @@ def _sql_executions(spark, after: int) -> list:
         x = xs.apply(i)
         if x.executionId() <= after:
             break
-        out.append((x.physicalPlanDescription(), x.jobs().size()))
+        out.append(x.physicalPlanDescription())
     return out
 
 
@@ -932,6 +979,15 @@ def _last_execution_id(spark) -> int:
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     xs = spark._jsparkSession.sharedState().statusStore().executionsList()
     return xs.apply(xs.size() - 1).executionId() if xs.size() else -1
+
+
+def _query_jobs(spark, q) -> int:
+    """The Spark jobs the streaming query ``q`` ran: its micro-batches run
+    on the query's thread, whose job group is the query's run id, so this
+    counts every job of every batch (the sink's RDD job and the declined
+    rows' jobs alike), whether or not a SQL execution wraps it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
 
 
 _PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
@@ -969,8 +1025,7 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
         q = R.replicate_stream(spark, source, run, src_reg, tgt_reg, "target-topic-b", None,
                                run + "-ckpt", timeout_sec=60,
                                dlq_dir=run + "-dlq" if mode == "route" else None)
-        new = _sql_executions(spark, after=before)
-        return [p for p, _ in new], sum(j for _, j in new), len(q.recentProgress)
+        return _sql_plans(spark, after=before), _query_jobs(spark, q), len(q.recentProgress)
 
     # dead letters of an earlier, uncommitted attempt at the clean batch
     stale = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-route-dlq", "data", "0")
@@ -979,13 +1034,13 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
     for mode in ("abort", "route"):
         plans, jobs, batches = drain(clean, mode)
         assert batches == 1 and jobs == batches, mode
-        assert not [n for p in plans for n in _PYTHON_NODES if n in p], mode
+        assert plans and not [n for p in plans for n in _PYTHON_NODES if n in p], mode
         run = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-{mode}")
         assert R.read_committed(spark, run).count() == 40
     assert not os.path.exists(stale)
 
-    plans, jobs, _ = drain(corrupt, "route")
-    assert jobs > 1 and any("MapInArrow" in p for p in plans)
+    plans, jobs, batches = drain(corrupt, "route")
+    assert batches == 1 and jobs > 1 and any("MapInArrow" in p for p in plans)
     run = os.path.join(dirs["tgt"], f"{os.path.basename(corrupt)}-route")
     assert R.read_committed(spark, run).count() == 39
     routed = R.read_committed(spark, run + "-dlq", marker_dir=run, schema=R.DLQ_ENVELOPE)
@@ -1084,9 +1139,7 @@ def test_returned_query_reports_every_batch(spark, dirs):
     in both modes, its input rows summing to the source rows and its phase
     durations including ``addBatch`` (the foreachBatch write) — the
     structured replacement for the reference's per-batch log lines. A rerun
-    on the same checkpoint reports only the batch it ran. (Spark counts the
-    rows each job of a batch reads, so a batch whose declined rows take the
-    second job reports its input twice; these sources are clean.)"""
+    on the same checkpoint reports only the batch it ran."""
     src_reg, tgt_reg = _fresh_registries()
     records = [{"id": str(uuid.uuid4()), "name": f"r{i}"} for i in range(7)]
     R.write_envelope_fixture(
@@ -1112,6 +1165,113 @@ def test_returned_query_reports_every_batch(spark, dirs):
     ((batch, rows, phases),) = _progress(q)
     assert (batch, rows) == (0, 10) and "addBatch" in phases
     assert R.read_committed(spark, dirs["tgt"] + "-route").count() == 10
+
+
+def _envelope_rows(values: list, nulls: bool = True) -> list:
+    """Source envelope rows of the framed ``values``: offset = index,
+    distinct microsecond timestamps, and (with ``nulls``) a NULL partition
+    and a NULL timestamp on some rows."""
+    import datetime as dt
+
+    return [(None, v, "source-topic-a", None if nulls and i % 4 == 1 else i % 3, i,
+             None if nulls and i % 5 == 2 else
+             dt.datetime(2024, 3, 31, 1, 59, i % 60, 1000 * i + 7))
+            for i, v in enumerate(values)]
+
+
+def _non_minimal(frame: bytes) -> bytes:
+    """A Foo frame whose id length is the non-shortest varint ``82 00``
+    (ids under 64 bytes): the walker declines it, the full path
+    re-encodes it."""
+    assert frame[5] < 0x80
+    return frame[:5] + bytes([frame[5] | 0x80, 0]) + frame[6:]
+
+
+def test_fallback_batch_reports_its_source_rows_once(spark, dirs):
+    """A micro-batch whose declined rows take the second job reports its
+    source rows once in the returned query's progress: that job reads only
+    the sink's spill of the declined rows, never the batch again. Route
+    mode: 7 records, one truncated (dead-lettered). Abort mode, where a
+    truncated record fails the batch and leaves no progress entry: 7
+    records, one the walker declines and the full path replicates."""
+    src_reg, tgt_reg = _fresh_registries()
+    sid = src_reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    frames = [avro_codec.serialize_confluent({"id": str(i), "name": None}, R.FOO_SCHEMA, sid)
+              for i in range(7)]
+    for mode, bad in (("route", frames[3][:-1]), ("abort", _non_minimal(frames[3]))):
+        source = f"{dirs['src']}-{mode}"
+        values = frames[:3] + [bad] + frames[4:]
+        spark.createDataFrame(_envelope_rows(values), R.KAFKA_ENVELOPE).coalesce(1) \
+            .write.parquet(source)
+        main = f"{dirs['tgt']}-{mode}"
+        q = R.replicate_stream(spark, source, main, src_reg, tgt_reg, "target-topic-b", None,
+                               dirs["ckpt"] + mode, timeout_sec=60,
+                               dlq_dir=main + "-dlq" if mode == "route" else None)
+        assert [(p.batchId, p.numInputRows) for p in q.recentProgress] == [(0, 7)], mode
+        assert _query_jobs(spark, q) > 1, mode
+        assert R.read_committed(spark, main).count() == (6 if mode == "route" else 7)
+
+
+def test_replica_format_in_both_modes(spark, dirs):
+    """The committed replica's format, for a clean batch and a batch whose
+    declined rows take the full path, in both modes: ``read_committed``
+    gives the source's partition, offset and microsecond timestamp, NULLs
+    kept; every committed file has the one physical schema (required
+    key/value/topic, timestamp as INT64 microseconds UTC), no dictionary,
+    no statistics on key/value/topic and statistics on partition/offset;
+    and pyarrow reads a fallback batch's dir whole, as perfbench's
+    verifier does."""
+    src_reg, tgt_reg = _fresh_registries()
+    sid = src_reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    frames = [avro_codec.serialize_confluent({"id": str(i), "name": None if i % 2 else "n"},
+                                             R.FOO_SCHEMA, sid) for i in range(24)]
+    clean = frames[:12]
+    fallback = [_non_minimal(f) if i % 3 == 0 else f for i, f in enumerate(frames[12:])]
+    schemas = set()
+    for mode in ("abort", "route"):
+        more = fallback + ([frames[0][:-1]] if mode == "route" else [])
+        rows = _envelope_rows(clean + more)
+        source, staged = f"{dirs['src']}-{mode}", f"{dirs['src']}-{mode}-more"
+        spark.createDataFrame(rows[:12], R.KAFKA_ENVELOPE).coalesce(1).write.parquet(source)
+        spark.createDataFrame(rows[12:], R.KAFKA_ENVELOPE).coalesce(1).write.parquet(staged)
+        main, dlq = f"{dirs['tgt']}-{mode}", f"{dirs['tgt']}-{mode}-dlq"
+        args = (src_reg, tgt_reg, "target-topic-b", None, dirs["ckpt"] + mode)
+        kw = {"dlq_dir": dlq} if mode == "route" else {}
+        R.replicate_stream(spark, source, main, *args, **kw)
+        for f in os.listdir(staged):  # the fallback batch: new files on the source
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(staged, f), os.path.join(source, "more-" + f))
+        R.replicate_stream(spark, source, main, *args, **kw)
+
+        got = {r["offset"]: r for r in R.read_committed(spark, main).collect()}
+        routed = {len(rows) - 1} if mode == "route" else set()
+        assert set(got) == set(range(len(rows))) - routed, mode
+        for _, _, _, partition, offset, ts in rows:
+            if offset not in routed:
+                assert (got[offset]["partition"], got[offset]["timestamp"]) == (partition, ts)
+        fallback_dir = os.path.join(main, "data", "1")
+        assert any(f.startswith("full-") for f in os.listdir(fallback_dir)), mode
+        assert pq.read_table(fallback_dir).num_rows == len(rows) - 12 - len(routed)
+        assert dictionary_encoded_chunks(main) == []
+        for batch in ("0", "1"):
+            batch_dir = os.path.join(main, "data", batch)
+            assert not [f for f in os.listdir(batch_dir) if not f.endswith(".parquet")]
+            for f in os.listdir(batch_dir):
+                meta = pq.ParquetFile(os.path.join(batch_dir, f)).metadata
+                schemas.add(str(meta.schema).split("\n", 1)[1])  # past the object's address
+                for g in range(meta.num_row_groups):
+                    stats = {meta.row_group(g).column(c).path_in_schema:
+                             meta.row_group(g).column(c).is_stats_set
+                             for c in range(meta.num_columns)}
+                    assert stats["key"] is stats["value"] is stats["topic"] is False, f
+                    assert stats["partition"] is stats["offset"] is True, f
+    (schema,) = schemas
+    for column in ("required binary field_id=-1 key;", "required binary field_id=-1 value;",
+                   "required binary field_id=-1 topic (String);",
+                   "optional int32 field_id=-1 partition;", "optional int64 field_id=-1 offset;",
+                   "optional int64 field_id=-1 timestamp (Timestamp(isAdjustedToUTC=true, "
+                   "timeUnit=microseconds,"):
+        assert column in schema, schema
 
 
 FOO_V2 = {
