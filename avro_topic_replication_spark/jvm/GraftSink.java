@@ -46,7 +46,8 @@ import org.apache.spark.util.LongAccumulator;
  * {@code <spill>/part-<partition>.parquet} for the full path, and counts
  * them. {@link #append} writes the full path's output rows through
  * the same writer, so every file of a batch has the one physical schema
- * {@link #TARGET}.
+ * {@link #TARGET}, and routes the rows it classified to the dead-letter
+ * sink as {@link #DEAD} files.
  *
  * <p>Each file is written under a hidden task-attempt name and renamed into
  * place when its task succeeds, so a retried attempt replaces it. There is
@@ -76,6 +77,20 @@ public final class GraftSink {
       .optional(INT32).named("partition")
       .optional(INT64).named("offset")
       .optional(INT64).as(micros()).named("timestamp")
+      .named("spark_schema");
+
+  /**
+   * A dead letter: the target envelope with the error class, and no key or
+   * value (the full path could not build them).
+   */
+  static final MessageType DEAD = Types.buildMessage()
+      .optional(BINARY).named("key")
+      .optional(BINARY).named("value")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("topic")
+      .optional(INT32).named("partition")
+      .optional(INT64).named("offset")
+      .optional(INT64).as(micros()).named("timestamp")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("error")
       .named("spark_schema");
 
   /** A declined row's source envelope, spilled for the full path. */
@@ -158,23 +173,36 @@ public final class GraftSink {
   }
 
   /**
-   * Writes target envelope rows (the declined rows' full-path output) under
-   * {@code dir} as {@code <name>-<partition>.parquet}, in one job.
+   * Writes the full path's output rows under {@code dir} as
+   * {@code full-<partition>.parquet}, in one job. With a {@code dead} dir
+   * (route mode: the rows carry an {@code error} column), a row with an
+   * error class goes to {@code <dead>/full-<partition>.parquet} instead.
    */
-  public static void append(Dataset<Row> rows, String dir, String name) {
+  public static void append(Dataset<Row> rows, String dir, String dead) {
     StructType schema = rows.schema();
-    int[] from = ordinals(schema, TARGET.getFields().stream().map(f -> f.getName())
-        .toArray(String[]::new));
+    int[] from = ordinals(schema, names(TARGET));
+    int[] fromDead = dead == null ? null : ordinals(schema, names(DEAD));
+    int error = dead == null ? -1 : schema.fieldIndex("error");
     rows.queryExecution().toRdd().toJavaRDD().foreachPartition(
         (VoidFunction<Iterator<InternalRow>>) it -> {
-          String part = name + "-" + TaskContext.getPartitionId();
-          try (File out = new File(Paths.get(dir), part, new Columns(TARGET, from, schema))) {
+          String part = "full-" + TaskContext.getPartitionId();
+          try (File out = new File(Paths.get(dir), part, new Columns(TARGET, from, schema));
+              File routed = dead == null ? null
+                  : new File(Paths.get(dead), part, new Columns(DEAD, fromDead, schema))) {
             while (it.hasNext()) {
-              out.write(it.next());
+              InternalRow row = it.next();
+              (error < 0 || row.isNullAt(error) ? out : routed).write(row);
             }
             out.commit();
+            if (routed != null) {
+              routed.commit();
+            }
           }
         });
+  }
+
+  static String[] names(MessageType type) {
+    return type.getFields().stream().map(f -> f.getName()).toArray(String[]::new);
   }
 
   static int[] ordinals(StructType schema, String... names) {

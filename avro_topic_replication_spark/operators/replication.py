@@ -37,9 +37,11 @@ Spark mapping implemented here:
 |    |                                    | dictionaries, no key/value stats,|
 |    |                                    | UTC microsecond timestamps) and  |
 |    |                                    | spilling the declined ones; then |
-|    |                                    | the declined rows' job if any    |
-|    |                                    | (with a dlq_dir, route mode: bad |
-|    |                                    | records to the dead-letter sink),|
+|    |                                    | the declined rows' job if any,   |
+|    |                                    | through the same writer (with a  |
+|    |                                    | dlq_dir, route mode: each task   |
+|    |                                    | routes the classified rows to the|
+|    |                                    | dead-letter sink by their error),|
 | R8 | future.get barrier → abort (:80-94)| then atomically create one commit|
 |    |                                    | marker, the only commit point;   |
 |    |                                    | any task failure fails the batch |
@@ -238,8 +240,9 @@ class ReplicationPlan:
       carries a schema id absent from the plan-time snapshot — KeyError),
       ``missing_id`` (decoded record lacks the re-key field),
       ``decode_error`` (any other failure: malformed frame or payload).
-      The main/DLQ split is a downstream ``filter`` each (both
-      partition-local, no extra shuffle).
+      The streaming sink splits main and dead-letter rows by ``error`` in
+      its one task loop; a static consumer filters on it (partition-local,
+      no extra shuffle).
     """
 
     def __init__(self, spark: SparkSession, schemas_by_id: dict, target_topic: str,
@@ -385,18 +388,18 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
       (``jvm/GraftSink.java``) runs over the batch itself: each task
       rewrites the rows the walker vouches for into its part file and
       spills the declined ones to the dir's hidden ``.declined`` dir;
+    - in route mode <dlq_dir>/data/<batch_id>/ is cleared too;
     - only if it spilled any does a second job run ``_reencode`` over the
-      spill alone (the batch is not read again): in abort mode the output
-      goes through the same writer into the same dir, or the job raises
-      the first failing row's error; in route mode it is materialized
-      once, the good rows written like abort mode's and the classified
-      ones (Spark's writer) to <dlq_dir>/data/<batch_id>/ (a batch with
-      none removes that dir, left by an earlier attempt);
+      spill alone (the batch is not read again) and write its output
+      through the same writer into the same dir; in abort mode the job
+      raises the first failing row's error instead, in route mode each
+      task routes the rows with an error class to the dead-letter dir
+      (same writer, the target envelope plus ``error``);
     - task failures abort the whole write (the R8 barrier); ONE commit
       marker under ``main_dir`` is created atomically AFTER every write
       succeeded (R7 transaction commit), so a batch commits both sinks or
-      neither; no other commit protocol runs (each part file is renamed
-      into place by its task);
+      neither; no other commit protocol runs (each file of either sink is
+      renamed into place by its task);
     - a replayed batch (crash between marker and checkpoint ack) sees its
       marker and skips — effectively-exactly-once downstream; a replay of
       an uncommitted batch replaces its partial data dirs;
@@ -415,26 +418,18 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
         data = os.path.join(main_dir, "data", str(batch_id))
-        shutil.rmtree(data, ignore_errors=True)
+        dead = None if dlq_dir is None else os.path.join(dlq_dir, "data", str(batch_id))
+        for d in (data, dead):  # an uncommitted attempt's files must not commit
+            if d is not None:
+                shutil.rmtree(d, ignore_errors=True)
         os.makedirs(data)
         spark = batch_df.sparkSession
         sink = _graft_sink(spark)
-        dead = None if dlq_dir is None else os.path.join(dlq_dir, "data", str(batch_id))
         spill = os.path.join(data, _DECLINED)
         if sink.write(batch_df._jdf, data, spill, *plan._rewrite):
             slow = plan._full(spark.read.schema(_DECLINED_ENVELOPE).parquet(spill))
-            if dead is not None:
-                slow = slow.localCheckpoint(eager=True)  # the split reads it twice
-                # no dictionaries: offsets are unique per record
-                slow.where("error IS NOT NULL").write.mode("overwrite").option(
-                    "parquet.enable.dictionary", "false").parquet(dead)
-                slow = slow.where("error IS NULL").drop("error")
-            sink.append(slow._jdf, data, "full")
+            sink.append(slow._jdf, data, dead)
             shutil.rmtree(spill)
-        elif dead is not None:
-            # a replay whose first attempt routed rows that now pass (a
-            # schema registered in between): its dead letters must not commit
-            shutil.rmtree(dead, ignore_errors=True)
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
