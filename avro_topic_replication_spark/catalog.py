@@ -150,6 +150,19 @@ def table_row_groups(path: str) -> "int | None":
     return n
 
 
+def events_ts(df: DataFrame) -> DataFrame:
+    """``df`` (events, batch or streaming) with its ns-long ``ts`` rebuilt
+    as TIMESTAMP_NTZ, unchanged when ``ts`` is no long: ns-long -> µs -> NTZ
+    anchored at the epoch; timestampadd on an NTZ literal is
+    timezone-independent, matching DuckDB's truncating read."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn(
+        "ts",
+        F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
+    )
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -178,13 +191,8 @@ def load_table(
     ensure_runtime_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(table_schema(spark, path)).parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # ns-long -> µs -> NTZ anchored at the epoch; timestampadd on an NTZ
-        # literal is timezone-independent, matching DuckDB's truncating read.
-        df = df.withColumn(
-            "ts",
-            F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
-        )
+    if name == "events":
+        df = events_ts(df)
     if rebalance_on is not None:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         rgs = table_row_groups(path)

@@ -28,26 +28,27 @@ import org.apache.parquet.schema.Types;
 import org.apache.spark.TaskContext;
 import org.apache.spark.api.java.function.VoidFunction;
 import org.apache.spark.sql.Row;
-import org.apache.spark.sql.api.java.UDF2;
-import org.apache.spark.sql.api.java.UDF3;
+import org.apache.spark.sql.RowFactory;
+import org.apache.spark.sql.api.java.UDF4;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow;
 import org.apache.spark.sql.classic.Dataset;
+import org.apache.spark.sql.execution.SQLExecution;
 import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructType;
-import org.apache.spark.util.LongAccumulator;
+import scala.Option;
 
 /**
  * The replica sink's task loop: one Spark job per micro-batch over the
- * walked batch's own RDD ({@code graft_walk}'s {@code _span} column next to
- * the source envelope). Each task rewrites the rows the walker vouches for
- * and writes them as {@code <dir>/part-<partition>.parquet}; it spills the
- * rows the walker declines, as source envelopes, to
- * {@code <spill>/part-<partition>.parquet} for the full path, and counts
- * them. {@link #append} writes the full path's output rows through
- * the same writer, so every file of a batch has the one physical schema
- * {@link #TARGET}, and routes the rows it classified to the dead-letter
- * sink as {@link #DEAD} files.
+ * batch's own RDD of source envelope rows. Each task walks each row's value
+ * ({@link GraftWalk}), rewrites the rows the walker vouches for and writes
+ * them as {@code <dir>/part-<partition>.parquet}; it spills the rows the
+ * walker declines, as source envelopes, to
+ * {@code <spill>/part-<partition>.parquet} for the full path (so the spill
+ * dir exists only if a row was declined). {@link #append} writes the full
+ * path's output rows through the same writer, so every file of a batch has
+ * the one physical schema {@link #TARGET}, and routes the rows it
+ * classified to the dead-letter sink as {@link #DEAD} files.
  *
  * <p>Each file is written under a hidden task-attempt name and renamed into
  * place when its task succeeds, so a retried attempt replaces it. There is
@@ -58,8 +59,8 @@ import org.apache.spark.util.LongAccumulator;
  * Hadoop {@code OutputFile} on the shared file system.
  *
  * <p>{@link #key} and {@link #retarget} are the fast path's one rewrite,
- * also registered as the SQL functions {@code graft_key} ({@link Key}) and
- * {@code graft_value} ({@link Value}) for static plans.
+ * also registered, after the walk, as the SQL function
+ * {@code graft_replicate} ({@link Replicate}) for static plans.
  */
 public final class GraftSink {
   private GraftSink() {}
@@ -109,7 +110,7 @@ public final class GraftSink {
 
   /**
    * The target key of a vouched row: {@code frame} followed by the id's
-   * span ({@code start << 32 | end}, as {@code graft_walk} returns it) of
+   * span ({@code start << 32 | end}, as {@link GraftWalk#walk} returns it) of
    * {@code value}.
    */
   static byte[] key(byte[] frame, byte[] value, long span) {
@@ -124,52 +125,47 @@ public final class GraftSink {
   /**
    * Replaces the schema id of the framed {@code value} (bytes 1-4) in
    * place by its target; {@code targets} is {@code [source:int32][target:int32]}
-   * pairs. False, with {@code value} unchanged, when no pair names its id.
+   * pairs. The walker vouches only for ids that have a pair.
    */
-  static boolean retarget(byte[] value, byte[] targets) {
+  static void retarget(byte[] value, byte[] targets) {
     for (int at = 0; at < targets.length; at += 8) {
       if (targets[at] == value[1] && targets[at + 1] == value[2]
           && targets[at + 2] == value[3] && targets[at + 3] == value[4]) {
         System.arraycopy(targets, at + 4, value, 1, 4);
-        return true;
+        return;
       }
-    }
-    return false;
-  }
-
-  /** {@code graft_key(value, span, frame)}: {@link #key}, NULL for a declined row. */
-  public static final class Key implements UDF3<byte[], Long, byte[], byte[]> {
-    @Override
-    public byte[] call(byte[] value, Long span, byte[] frame) {
-      return value == null || span == null || span < 0 ? null : key(frame, value, span);
-    }
-  }
-
-  /** {@code graft_value(value, targets)}: a copy of value under its target id, or NULL. */
-  public static final class Value implements UDF2<byte[], byte[], byte[]> {
-    @Override
-    public byte[] call(byte[] value, byte[] targets) {
-      if (value == null || value.length < 5) {
-        return null;
-      }
-      byte[] out = value.clone();
-      return retarget(out, targets) ? out : null;
     }
   }
 
   /**
-   * Rewrites and writes one walked batch ({@code value, partition, offset,
-   * timestamp, _span}) under {@code dir}, in one job; returns the number of
-   * declined rows spilled to {@code spill}.
+   * {@code graft_replicate(value, program, keyFrame, targets)}: the target
+   * {@code struct<key, value>} of a row the walker vouches for, NULL for a
+   * declined one.
    */
-  public static long write(Dataset<Row> walked, String dir, String spill, byte[] keyFrame,
-      byte[] targets, String topic) {
-    StructType schema = walked.schema();
-    LongAccumulator declined = walked.sparkSession().sparkContext().longAccumulator();
-    walked.queryExecution().toRdd().toJavaRDD().foreachPartition(new Rewrite(dir, spill,
-        keyFrame, targets, topic.getBytes(UTF_8), schema.fieldIndex("_span"),
-        ordinals(schema, "value", "partition", "offset", "timestamp"), declined));
-    return declined.value();
+  public static final class Replicate implements UDF4<byte[], byte[], byte[], byte[], Row> {
+    @Override
+    public Row call(byte[] value, byte[] program, byte[] keyFrame, byte[] targets) {
+      long span = GraftWalk.walk(value, program);
+      if (span < 0) {
+        return null;
+      }
+      byte[] out = value.clone(); // the argument may be the input row's own bytes
+      retarget(out, targets);
+      return RowFactory.create(key(keyFrame, out, span), out);
+    }
+  }
+
+  /**
+   * Rewrites and writes one batch of source envelope rows ({@code value,
+   * partition, offset, timestamp}, by name) under {@code dir}, walking each
+   * value by {@code program}, in one job; spills the declined rows to
+   * {@code spill}.
+   */
+  public static void write(Dataset<Row> batch, String dir, String spill, byte[] program,
+      byte[] keyFrame, byte[] targets, String topic) {
+    batch.queryExecution().toRdd().toJavaRDD().foreachPartition(new Rewrite(dir, spill,
+        program, keyFrame, targets, topic.getBytes(UTF_8),
+        ordinals(batch.schema(), "value", "partition", "offset", "timestamp")));
   }
 
   /**
@@ -177,28 +173,33 @@ public final class GraftSink {
    * {@code full-<partition>.parquet}, in one job. With a {@code dead} dir
    * (route mode: the rows carry an {@code error} column), a row with an
    * error class goes to {@code <dead>/full-<partition>.parquet} instead.
+   * The job runs as its own SQL execution, so Spark's SQL status store
+   * records the plan that built {@code rows}.
    */
   public static void append(Dataset<Row> rows, String dir, String dead) {
     StructType schema = rows.schema();
     int[] from = ordinals(schema, names(TARGET));
     int[] fromDead = dead == null ? null : ordinals(schema, names(DEAD));
     int error = dead == null ? -1 : schema.fieldIndex("error");
-    rows.queryExecution().toRdd().toJavaRDD().foreachPartition(
-        (VoidFunction<Iterator<InternalRow>>) it -> {
-          String part = "full-" + TaskContext.getPartitionId();
-          try (File out = new File(Paths.get(dir), part, new Columns(TARGET, from, schema));
-              File routed = dead == null ? null
-                  : new File(Paths.get(dead), part, new Columns(DEAD, fromDead, schema))) {
-            while (it.hasNext()) {
-              InternalRow row = it.next();
-              (error < 0 || row.isNullAt(error) ? out : routed).write(row);
+    SQLExecution.withNewExecutionId(rows.queryExecution(), Option.empty(), () -> {
+      rows.queryExecution().toRdd().toJavaRDD().foreachPartition(
+          (VoidFunction<Iterator<InternalRow>>) it -> {
+            String part = "full-" + TaskContext.getPartitionId();
+            try (File out = new File(Paths.get(dir), part, new Columns(TARGET, from, schema));
+                File routed = dead == null ? null
+                    : new File(Paths.get(dead), part, new Columns(DEAD, fromDead, schema))) {
+              while (it.hasNext()) {
+                InternalRow row = it.next();
+                (error < 0 || row.isNullAt(error) ? out : routed).write(row);
+              }
+              out.commit();
+              if (routed != null) {
+                routed.commit();
+              }
             }
-            out.commit();
-            if (routed != null) {
-              routed.commit();
-            }
-          }
-        });
+          });
+      return null;
+    });
   }
 
   static String[] names(MessageType type) {
@@ -217,23 +218,21 @@ public final class GraftSink {
   static final class Rewrite implements VoidFunction<Iterator<InternalRow>> {
     final String dir;
     final String spill;
+    final byte[] program;
     final byte[] keyFrame;
     final byte[] targets;
     final byte[] topic;
-    final int span;
     final int[] source; // value, partition, offset, timestamp
-    final LongAccumulator declined;
 
-    Rewrite(String dir, String spill, byte[] keyFrame, byte[] targets, byte[] topic, int span,
-        int[] source, LongAccumulator declined) {
+    Rewrite(String dir, String spill, byte[] program, byte[] keyFrame, byte[] targets,
+        byte[] topic, int[] source) {
       this.dir = dir;
       this.spill = spill;
+      this.program = program;
       this.keyFrame = keyFrame;
       this.targets = targets;
       this.topic = topic;
-      this.span = span;
       this.source = source;
-      this.declined = declined;
     }
 
     @Override
@@ -243,24 +242,21 @@ public final class GraftSink {
       Columns target = new Columns(TARGET,
           new int[] {-1, -1, -1, source[1], source[2], source[3]}, null);
       target.bytes[2] = topic;
-      long n = 0;
       try (File out = new File(Paths.get(dir), "part-" + partition, target);
           File spilled = new File(Paths.get(spill), "part-" + partition,
               new Columns(DECLINED, source, null))) {
         while (rows.hasNext()) {
           InternalRow row = rows.next();
-          long at = row.isNullAt(span) ? -1 : row.getLong(span);
+          byte[] value = row.isNullAt(source[0]) ? null : row.getBinary(source[0]);
+          long at = GraftWalk.walk(value, program);
           if (at < 0) {
             spilled.write(row);
-            n++;
             continue;
           }
-          byte[] value = row.getBinary(source[0]);
           if (!(row instanceof UnsafeRow)) {
             value = value.clone(); // an UnsafeRow's getBinary is a copy already
           }
           target.bytes[0] = key(keyFrame, value, at);
-          // the walker vouches only for ids with a target
           retarget(value, targets);
           target.bytes[1] = value;
           out.write(row);
@@ -271,7 +267,6 @@ public final class GraftSink {
         out.commit();
         spilled.commit();
       }
-      declined.add(n);
     }
   }
 

@@ -1,13 +1,12 @@
 package sparkgraft;
 
-import org.apache.spark.sql.api.java.UDF2;
-
 /**
- * The replication fast path's payload check, as a Spark SQL UDF:
- * {@code graft_walk(value, program)} returns the span of the record's
- * {@code id} string within the Confluent-framed {@code value}, packed as
- * {@code start << 32 | end} (byte offsets into {@code value}, the span
- * includes the string's length prefix), or -1 when it declines the row.
+ * The replication fast path's payload check: {@link #walk} returns the
+ * span of the record's {@code id} string within a Confluent-framed value,
+ * packed as {@code start << 32 | end} (byte offsets into the value, the
+ * span includes the string's length prefix), or -1 when it declines the
+ * row. {@link GraftSink} calls it on each row of its task loop and in the
+ * SQL function {@code graft_replicate}.
  *
  * <p>It vouches for a row only if re-encoding the decoded datum would give
  * the payload back byte for byte: every varint is the shortest encoding of
@@ -26,12 +25,14 @@ import org.apache.spark.sql.api.java.UDF2;
  * {@code UNION branches:int32} followed by each branch as
  * {@code [length:int32][op]}; the others take no operands.
  */
-public final class GraftWalk implements UDF2<byte[], byte[], Long> {
+final class GraftWalk {
   static final byte NULL = 0, BOOLEAN = 1, LONG = 2, FLOAT = 3, DOUBLE = 4, BYTES = 5,
       STRING = 6, FIXED = 7, ENUM = 8, UNION = 9, RECORD = 10, ID = 11;
 
-  @Override
-  public Long call(byte[] value, byte[] program) {
+  private GraftWalk() {}
+
+  /** The id span of {@code value} under {@code program}, or -1 to decline it. */
+  static long walk(byte[] value, byte[] program) {
     if (value == null || value.length < 5 || value[0] != 0) {
       return -1L;
     }

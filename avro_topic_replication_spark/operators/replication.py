@@ -15,25 +15,28 @@ Spark mapping implemented here:
 |    |                                    | cluster, maxOffsetsPerTrigger)   |
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
-| R3 | KafkaAvroDeserializer              | graft_walk: a Java UDF walks each|
-|    | (application.yml:12)               | payload by opcodes compiled from |
-|    |                                    | the plan-time snapshot and checks|
-|    |                                    | it would re-encode to itself;    |
-|    |                                    | full decode only for the rows it |
-|    |                                    | declines (a second job)          |
-| R4 | consumerRecord.get("id") (:71)     | the walk returns id's byte span  |
+| R3 | KafkaAvroDeserializer              | the sink's task loop walks each  |
+|    | (application.yml:12)               | payload (jvm/GraftWalk.java) by  |
+|    |                                    | opcodes compiled from the plan-  |
+|    |                                    | time snapshot and checks it would|
+|    |                                    | re-encode to itself; full decode |
+|    |                                    | only for the rows it declines (a |
+|    |                                    | second job)                      |
+| R4 | consumerRecord.get("id") (:71)     | the walk finds id's byte span    |
 | R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
 |    |                                    | (jvm/GraftSink.java, one copy per|
 |    |                                    | row; the Avro string of id, serde|
-|    |                                    | parity)                          |
+|    |                                    | parity); static plans call the   |
+|    |                                    | same rewrite as graft_replicate  |
 | R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
 |    | (application.yml:15-16,README:27)  | the payload with its schema id   |
 |    |                                    | swapped for the target's         |
 |    |                                    | (fallback: full re-encode)       |
 | R7 | executeInTransaction (:66-78)      | replicate_stream's foreachBatch: |
-|    |                                    | one JVM job over the batch, each |
-|    |                                    | task rewriting and writing its   |
-|    |                                    | rows as one parquet file (no     |
+|    |                                    | one JVM job over the batch's raw |
+|    |                                    | envelope columns, each task      |
+|    |                                    | walking, rewriting and writing   |
+|    |                                    | its rows as one parquet file (no |
 |    |                                    | dictionaries, no key/value stats,|
 |    |                                    | UTC microsecond timestamps) and  |
 |    |                                    | spilling the declined ones; then |
@@ -177,27 +180,23 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
         return None, None, "unknown_schema" if isinstance(e, KeyError) else "decode_error"
 
 
-_SPAN = "_span"  # the walked envelope's column: the id span, or -1 where declined
-
-# The source envelope columns the full path reads: the walked rows it
-# receives, and the declined rows the sink spills (jvm/GraftSink.java).
+# The source envelope columns the replica sink reads: the streamed batches
+# (jvm/GraftSink.java), and the declined rows it spills for the full path.
 _DECLINED_ENVELOPE = StructType([KAFKA_ENVELOPE["value"]] + KAFKA_ENVELOPE.fields[3:])
 
 
 def _ensure_walker(spark: SparkSession) -> None:
-    """Register the JVM walker and rewrite (``graft_jar``) as the SQL
-    functions ``graft_walk``, ``graft_key`` and ``graft_value``, once per
-    session object like ``ensure_runtime_conf``. A JVM ``get_spark``
-    launched has the jar on its class path; any other gets it by
-    ``ADD JAR``."""
-    if getattr(spark, "_graft_walk_registered", False):
+    """Register the JVM walk and rewrite (``graft_jar``) as the SQL function
+    ``graft_replicate``, once per session object like
+    ``ensure_runtime_conf``. A JVM ``get_spark`` launched has the jar on its
+    class path; any other gets it by ``ADD JAR``."""
+    if getattr(spark, "_graft_replicate_registered", False):
         return
     if not jar_on_class_path():
         spark.sql(f"ADD JAR '{graft_jar()}'")
-    spark.udf.registerJavaFunction("graft_walk", "sparkgraft.GraftWalk", LongType())
-    spark.udf.registerJavaFunction("graft_key", "sparkgraft.GraftSink$Key", BinaryType())
-    spark.udf.registerJavaFunction("graft_value", "sparkgraft.GraftSink$Value", BinaryType())
-    spark._graft_walk_registered = True
+    spark.udf.registerJavaFunction("graft_replicate", "sparkgraft.GraftSink$Replicate",
+                                   "struct<key: binary, value: binary>")
+    spark._graft_replicate_registered = True
 
 
 class ReplicationPlan:
@@ -212,18 +211,19 @@ class ReplicationPlan:
     KafkaAvroSerializer. The (partition, offset, timestamp) columns pass
     through untouched for downstream dedup/audit.
 
-    ``walk`` adds the JVM walker's verdict to each envelope row: the span of
-    its ``id`` within the value, or -1 where the walker declines it (null,
-    bad frame, unknown id, a schema it does not cover, a payload that would
-    not re-encode to itself). The rows it vouches for take the JVM rewrite
-    (``jvm/GraftSink.java``): key = the key frame + the id span; value =
-    the payload with its schema id swapped for the target's; exactly the
-    bytes the full path would encode, and no Python worker runs. The
-    streaming sink (``batch_writer``) runs it in its task loop, the static
-    ``transform`` as the SQL functions ``graft_key``/``graft_value``.
-    ``_full`` runs ``_reencode`` over the declined rows only (one
-    ``mapInArrow``), so both modes give the full path's output for every
-    input.
+    The JVM walker (``jvm/GraftWalk.java``) checks each value against a
+    program compiled from the snapshot and finds its ``id``, or declines it
+    (null, bad frame, unknown id, a schema it does not cover, a payload
+    that would not re-encode to itself). The rows it vouches for take the
+    JVM rewrite (``jvm/GraftSink.java``): key = the key frame + the id's
+    bytes; value = the payload with its schema id swapped for the
+    target's; exactly the bytes the full path would encode, and no Python
+    worker runs. Walk and rewrite run together, in the streaming sink's
+    task loop (``batch_writer``, which passes ``_rewrite`` to each batch's
+    sink call) and, for the static ``transform``, as the one SQL function
+    ``graft_replicate``. ``_full`` runs ``_reencode`` over the declined
+    rows only (one ``mapInArrow``), so both modes give the full path's
+    output for every input.
 
     ``on_error`` picks what a bad record does:
 
@@ -260,17 +260,17 @@ class ReplicationPlan:
             if ops is not None:
                 program.append(struct.pack(">ii", sid, len(ops)) + ops)
                 targets += struct.pack(">II", sid, mapping[sid])
-        # the JVM rewrite's arguments: the key frame, the (source, target)
-        # schema id pairs, the target topic
-        self._rewrite = (avro_codec.frame(key_schema_id, b""), targets, target_topic)
-        # Built once as SQL text: every Column method is a few py4j round
-        # trips, so per-batch Column building made each micro-batch pay
-        # hundreds of them; a selectExpr/where is one call.
-        self._walk_sql = ["value", "`partition`", "`offset`", "`timestamp`",
-                          f"graft_walk(value, X'{b''.join(program).hex()}') AS {_SPAN}"]
+        # the JVM walk and rewrite's arguments: the walker program, the key
+        # frame, the (source, target) schema id pairs, the target topic
+        self._rewrite = (b"".join(program), avro_codec.frame(key_schema_id, b""), targets,
+                         target_topic)
+        # the static transform's SQL text: one selectExpr/where call each
+        self._replicate_sql = [
+            "graft_replicate(value, {}) AS _replica".format(
+                ", ".join(f"X'{arg.hex()}'" for arg in self._rewrite[:3])),
+            "value", "`partition`", "`offset`", "`timestamp`"]
         self._rewrite_sql = [
-            f"graft_key(value, {_SPAN}, X'{self._rewrite[0].hex()}') AS key",
-            f"graft_value(value, X'{targets.hex()}') AS value",
+            "_replica.key AS key", "_replica.value AS value",
             # the topic as UTF-8 bytes: no quoting or escaping rules apply
             f"CAST(X'{target_topic.encode().hex()}' AS STRING) AS topic",
             "`partition`", "`offset`", "`timestamp`",
@@ -318,10 +318,6 @@ class ReplicationPlan:
         }
         return cls(spark, snapshot, target_topic, key_id, id_mapping, on_error)
 
-    def walk(self, env: DataFrame) -> DataFrame:
-        """The envelope columns the output keeps, plus the walker's span."""
-        return env.selectExpr(*self._walk_sql)
-
     def _full(self, env: DataFrame) -> DataFrame:
         """The full path's output (``self.schema``) for every row of
         ``env``, a ``_DECLINED_ENVELOPE``."""
@@ -333,12 +329,12 @@ class ReplicationPlan:
         ``isEmpty`` would scan partitions in waves): a Python stage costs
         its fixed price even over 0 rows, so a clean ``env`` gets the
         rewrite alone."""
-        walked = self.walk(env)
-        fast = walked.where(f"{_SPAN} >= 0").selectExpr(*self._rewrite_sql)
-        declined = walked.where(f"{_SPAN} < 0")
-        if not declined.count():
-            return fast
-        return fast.unionByName(self._full(declined.drop(_SPAN)))
+        replicated = env.selectExpr(*self._replicate_sql)
+        declined = replicated.where("_replica IS NULL")
+        if not declined.count():  # no filter: it would call graft_replicate again
+            return replicated.selectExpr(*self._rewrite_sql)
+        fast = replicated.where("_replica IS NOT NULL").selectExpr(*self._rewrite_sql)
+        return fast.unionByName(self._full(declined.drop("_replica")))
 
 
 def plan_replication(
@@ -381,13 +377,15 @@ def _graft_sink(spark: SparkSession):
 
 
 def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = None):
-    """foreachBatch body over ``plan.walk`` batches: write-then-commit-
-    marker, idempotent on replay. ``dlq_dir`` is given in route mode only.
+    """foreachBatch body over source envelope batches (the
+    ``_DECLINED_ENVELOPE`` columns, or more): write-then-commit-marker,
+    idempotent on replay. ``dlq_dir`` is given in route mode only.
 
     - <main_dir>/data/<batch_id>/ is cleared, then one job
-      (``jvm/GraftSink.java``) runs over the batch itself: each task
-      rewrites the rows the walker vouches for into its part file and
-      spills the declined ones to the dir's hidden ``.declined`` dir;
+      (``jvm/GraftSink.java``) runs over the batch itself: each task walks
+      each value with ``plan``'s walker program, rewrites the rows the
+      walker vouches for into its part file and spills the declined ones to
+      the dir's hidden ``.declined`` dir, which only a declined row creates;
     - in route mode <dlq_dir>/data/<batch_id>/ is cleared too;
     - only if it spilled any does a second job run ``_reencode`` over the
       spill alone (the batch is not read again) and write its output
@@ -426,7 +424,8 @@ def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = Non
         spark = batch_df.sparkSession
         sink = _graft_sink(spark)
         spill = os.path.join(data, _DECLINED)
-        if sink.write(batch_df._jdf, data, spill, *plan._rewrite):
+        sink.write(batch_df._jdf, data, spill, *plan._rewrite)
+        if os.path.isdir(spill):
             slow = plan._full(spark.read.schema(_DECLINED_ENVELOPE).parquet(spill))
             sink.append(slow._jdf, data, dead)
             shutil.rmtree(spill)
@@ -475,7 +474,8 @@ def replicate_stream(
         spark, source_registry, target_registry, target_topic, value_schema,
         on_error="abort" if dlq_dir is None else "route",
     )
-    writer = plan.walk(env).writeStream.foreachBatch(batch_writer(plan, target_dir, dlq_dir))
+    writer = env.select(*_DECLINED_ENVELOPE.fieldNames()).writeStream.foreachBatch(
+        batch_writer(plan, target_dir, dlq_dir))
     return drain(writer, checkpoint_dir, timeout_sec)
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import events_ts, load_table
 from ..functions.numeric import dec_sum, dec_sum_sql
 from . import query
 
@@ -662,15 +662,7 @@ def stream_live_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(stage_dir, "slice=*"))
     )
-    if dict(sdf.dtypes).get("ts") == "bigint":
-        sdf = sdf.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    sdf = events_ts(sdf).withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         sdf.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "6 hours"), "event_type")

@@ -267,14 +267,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     new files); the testdata is a single file, so it is staged once into a
     scratch replay dir — the cluster equivalent is a drop-box directory or
     a Kafka topic, with an identical downstream plan."""
-    df = _stage_replay(spark, sf_dir, "events", "replay")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
+    from ..catalog import events_ts
+
+    df = events_ts(_stage_replay(spark, sf_dir, "events", "replay"))
     # Watermarks require TIMESTAMP (not NTZ); the session runs UTC, so the
     # cast is value-identical.
     return df.withColumn("ts", F.col("ts").cast("timestamp"))

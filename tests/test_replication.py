@@ -152,7 +152,7 @@ def test_truncated_frame_no_longer_decodes_shortened():
 
 
 # ---------------------------------------------------------------------------
-# JVM walker + expression rewrite vs the full decode → re-encode path
+# JVM walker + header rewrite vs the full decode → re-encode path
 # ---------------------------------------------------------------------------
 ARRAY_SCHEMA = {
     "type": "record",
@@ -185,9 +185,9 @@ def _examples(strategy, n: int) -> list:
 
 def _envelope(spark, raws: list, partition=None):
     """The framed values ``raws`` as a source envelope DataFrame read from
-    one parquet file (a real scan, so the walk and the rewrite run as
-    generated code): ``offset`` is the row's index, ``partition`` 0 or the
-    given per-row numbers."""
+    one parquet file (a real scan, whose rows reach the sink's task loop
+    and ``graft_replicate`` as a stream's batch does): ``offset`` is the
+    row's index, ``partition`` 0 or the given per-row numbers."""
     path = os.path.join(SCRATCH, "repltest", uuid.uuid4().hex[:12], "env.parquet")
     os.makedirs(os.path.dirname(path))
     n = len(raws)
@@ -208,11 +208,20 @@ def _plan(spark, snapshot=_SNAPSHOT, mapping=_MAPPING, on_error="abort"):
 
 def _spans(spark, raws: list, snapshot=_SNAPSHOT) -> list:
     """The ``id`` span (value offsets, length prefix included) the JVM
-    walker finds in each framed value, or None where it declines it."""
+    walker finds in each framed value, or None where it declines it, for
+    schemas whose ``id`` is the record's first field: read from the key
+    ``graft_replicate`` builds (the key frame, then the span's bytes), the
+    span starts right after the frame header."""
     plan = _plan(spark, snapshot, {sid: sid for sid in snapshot})
-    spans = dict(plan.walk(_envelope(spark, raws)).select("offset", "_span").collect())
-    return [None if spans[i] < 0 else (spans[i] >> 32, spans[i] & 0xFFFFFFFF)
-            for i in range(len(raws))]
+    frame = plan._rewrite[1]
+    keys = dict(_envelope(spark, raws).selectExpr("offset", plan._replicate_sql[0])
+                .selectExpr("offset", "_replica.key").collect())
+    spans = []
+    for i, raw in enumerate(raws):
+        key = keys[i] and bytes(keys[i])
+        spans.append(key and (5, 5 + len(key) - len(frame)))
+        assert key is None or key == frame + raw[5:spans[-1][1]], raw
+    return spans
 
 
 def _run(fn):
@@ -224,18 +233,19 @@ def _run(fn):
 
 def _sink_rewrite(spark, plan, env) -> tuple[dict, dict]:
     """One job of the replica sink's task loop (``jvm/GraftSink.java``)
-    over ``plan.walk(env)`` into a fresh dir: offset → (key, value) of the
-    rows it rewrote into its part files, and offset → value of the rows it
-    spilled for the full path."""
+    over the source envelope ``env`` into a fresh dir: offset → (key,
+    value) of the rows it rewrote into its part files, and offset → value
+    of the rows it spilled for the full path (the spill dir exists only
+    if it spilled any)."""
     data = os.path.join(SCRATCH, "repltest", uuid.uuid4().hex[:12], "data")
     os.makedirs(data)
     spill = os.path.join(data, R._DECLINED)
-    n = R._graft_sink(spark).write(plan.walk(env)._jdf, data, spill, *plan._rewrite)
+    R._graft_sink(spark).write(env._jdf, data, spill, *plan._rewrite)
     out = pq.read_table(data)  # pyarrow skips the hidden spill dir
     fast = dict(zip(out.column("offset").to_pylist(),
                     zip(out.column("key").to_pylist(), out.column("value").to_pylist())))
-    spilled = pq.read_table(spill) if n else pa.table({"offset": [], "value": []})
-    assert spilled.num_rows == n
+    spilled = pq.read_table(spill) if os.path.exists(spill) else pa.table(
+        {"offset": [], "value": []})
     return fast, dict(zip(spilled.column("offset").to_pylist(),
                           spilled.column("value").to_pylist()))
 
@@ -827,8 +837,8 @@ def test_idempotent_replay_of_committed_batch(spark, dirs):
     plan = R.ReplicationPlan.from_registries(
         spark, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
     writer = R.batch_writer(plan, dirs["tgt"])
-    writer(plan.walk(env), 0)
-    writer(plan.walk(env), 0)  # replay
+    writer(env, 0)
+    writer(env, 0)  # replay
     assert R.read_committed(spark, dirs["tgt"]).count() == 10
 
 
@@ -849,13 +859,13 @@ def test_replay_replaces_an_uncommitted_attempt(spark, dirs):
     stray = pa.table({"offset": pa.array([99], pa.int64())})
     for name in ("part-5.parquet", ".part-0.17.tmp", os.path.join(R._DECLINED, "part-0.parquet")):
         pq.write_table(stray, os.path.join(data, name))
-    writer(plan.walk(env), 0)
+    writer(env, 0)
     assert os.listdir(data) == ["part-0.parquet"]
     got = R.read_committed(spark, dirs["tgt"]).collect()
     assert sorted(r["offset"] for r in got) == list(range(10))
 
     stat = os.stat(os.path.join(data, "part-0.parquet"))
-    writer(plan.walk(env.limit(3)), 0)  # a committed batch is skipped
+    writer(env.limit(3), 0)  # a committed batch is skipped
     assert os.listdir(data) == ["part-0.parquet"]
     assert os.stat(os.path.join(data, "part-0.parquet")).st_mtime_ns == stat.st_mtime_ns
     assert R.read_committed(spark, dirs["tgt"]).count() == 10
@@ -997,9 +1007,12 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
     """The fast path's regression guard. A clean Foo v1/v2 drain runs one
     Spark job per micro-batch in both modes, and no executed plan holds a
     Python node (route mode no longer materializes the batch), and route
-    mode drops dead letters an earlier attempt left for the batch. With
-    one truncated record the declined rows' second job runs: route mode
-    still commits, the record alone in the dead-letter sink (an earlier
+    mode drops dead letters an earlier attempt left for the batch. The
+    batch's own plan is the scan of the envelope columns: no projection
+    and no SQL function (the sink walks each value in its task loop).
+    With one truncated record the declined rows' second job runs, as its
+    own SQL execution (its plan holds the ``MapInArrow``): route mode still
+    commits, the record alone in the dead-letter sink (an earlier
     attempt's dead letters dropped there too); abort mode raises the
     record's error and commits nothing."""
     import datetime as dt
@@ -1018,15 +1031,17 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
     spark.createDataFrame(rows, R.KAFKA_ENVELOPE).coalesce(1).write.parquet(corrupt)
 
     def drain(source, mode):
-        """(plans, jobs, micro-batches) of one drain of ``source`` into a
-        fresh sink, in ``mode``; the micro-batches are the returned query's
-        progress entries."""
+        """(plans, jobs, micro-batches, the last batch's executed plan) of
+        one drain of ``source`` into a fresh sink, in ``mode``; the
+        micro-batches are the returned query's progress entries."""
         run = os.path.join(dirs["tgt"], f"{os.path.basename(source)}-{mode}")
         before = _last_execution_id(spark)
         q = R.replicate_stream(spark, source, run, src_reg, tgt_reg, "target-topic-b", None,
                                run + "-ckpt", timeout_sec=60,
                                dlq_dir=run + "-dlq" if mode == "route" else None)
-        return _sql_plans(spark, after=before), _query_jobs(spark, q), len(q.recentProgress)
+        batch_plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+        return (_sql_plans(spark, after=before), _query_jobs(spark, q), len(q.recentProgress),
+                batch_plan)
 
     def stale(source) -> str:
         """A dead letter of an earlier, uncommitted route-mode attempt at
@@ -1039,18 +1054,18 @@ def test_clean_drain_runs_one_job_per_batch_without_python(spark, dirs):
 
     seeded = stale(clean)
     for mode in ("abort", "route"):
-        plans, jobs, batches = drain(clean, mode)
+        plans, jobs, batches, batch_plan = drain(clean, mode)
         assert batches == 1 and jobs == batches, mode
         assert plans and not [n for p in plans for n in _PYTHON_NODES if n in p], mode
+        assert "FileScan" in batch_plan, batch_plan
+        assert "graft_" not in batch_plan and "Project" not in batch_plan, batch_plan
         run = os.path.join(dirs["tgt"], f"{os.path.basename(clean)}-{mode}")
         assert R.read_committed(spark, run).count() == 40
     assert not os.path.exists(os.path.dirname(seeded))
 
     seeded = stale(corrupt)
-    # the fallback job runs outside any SQL execution, as the sink's does;
-    # its decode_error, which only _reencode assigns, shows that it ran
-    _, jobs, batches = drain(corrupt, "route")
-    assert batches == 1 and jobs == 2
+    plans, jobs, batches, _ = drain(corrupt, "route")
+    assert batches == 1 and jobs == 2 and any("MapInArrow" in p for p in plans)
     assert not os.path.exists(seeded)
     run = os.path.join(dirs["tgt"], f"{os.path.basename(corrupt)}-route")
     assert R.read_committed(spark, run).count() == 39
