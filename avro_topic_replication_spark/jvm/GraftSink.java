@@ -28,8 +28,6 @@ import org.apache.parquet.schema.Types;
 import org.apache.spark.TaskContext;
 import org.apache.spark.api.java.function.VoidFunction;
 import org.apache.spark.sql.Row;
-import org.apache.spark.sql.RowFactory;
-import org.apache.spark.sql.api.java.UDF4;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow;
 import org.apache.spark.sql.classic.Dataset;
@@ -39,8 +37,8 @@ import org.apache.spark.sql.types.StructType;
 import scala.Option;
 
 /**
- * The replica sink's task loop: one Spark job per micro-batch over the
- * batch's own RDD of source envelope rows. Each task walks each row's value
+ * The replica sink's task loop: one Spark job per micro-batch (a static
+ * plan's one batch too) over the batch's own RDD of source envelope rows. Each task walks each row's value
  * ({@link GraftWalk}), rewrites the rows the walker vouches for and writes
  * them as {@code <dir>/part-<partition>.parquet}; it spills the rows the
  * walker declines, as source envelopes, to
@@ -57,10 +55,6 @@ import scala.Option;
  * Files are written through java.nio ({@link LocalOutputFile}), as the
  * caller writes its markers; a cluster deployment replaces both with a
  * Hadoop {@code OutputFile} on the shared file system.
- *
- * <p>{@link #key} and {@link #retarget} are the fast path's one rewrite,
- * also registered, after the walk, as the SQL function
- * {@code graft_replicate} ({@link Replicate}) for static plans.
  */
 public final class GraftSink {
   private GraftSink() {}
@@ -134,24 +128,6 @@ public final class GraftSink {
         System.arraycopy(targets, at + 4, value, 1, 4);
         return;
       }
-    }
-  }
-
-  /**
-   * {@code graft_replicate(value, program, keyFrame, targets)}: the target
-   * {@code struct<key, value>} of a row the walker vouches for, NULL for a
-   * declined one.
-   */
-  public static final class Replicate implements UDF4<byte[], byte[], byte[], byte[], Row> {
-    @Override
-    public Row call(byte[] value, byte[] program, byte[] keyFrame, byte[] targets) {
-      long span = GraftWalk.walk(value, program);
-      if (span < 0) {
-        return null;
-      }
-      byte[] out = value.clone(); // the argument may be the input row's own bytes
-      retarget(out, targets);
-      return RowFactory.create(key(keyFrame, out, span), out);
     }
   }
 

@@ -5,8 +5,7 @@ package sparkgraft;
  * span of the record's {@code id} string within a Confluent-framed value,
  * packed as {@code start << 32 | end} (byte offsets into the value, the
  * span includes the string's length prefix), or -1 when it declines the
- * row. {@link GraftSink} calls it on each row of its task loop and in the
- * SQL function {@code graft_replicate}.
+ * row. {@link GraftSink} calls it on each row of its task loop.
  *
  * <p>It vouches for a row only if re-encoding the decoded datum would give
  * the payload back byte for byte: every varint is the shortest encoding of

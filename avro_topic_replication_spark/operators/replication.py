@@ -26,14 +26,16 @@ Spark mapping implemented here:
 | R5 | re-key with id.toString() (:70-71) | key = key frame + those bytes    |
 |    |                                    | (jvm/GraftSink.java, one copy per|
 |    |                                    | row; the Avro string of id, serde|
-|    |                                    | parity); static plans call the   |
-|    |                                    | same rewrite as graft_replicate  |
+|    |                                    | parity); a static plan runs the  |
+|    |                                    | same sink once, as batch 0       |
 | R6 | KafkaAvroSerializer + auto-register| register() at plan time; value = |
 |    | (application.yml:15-16,README:27)  | the payload with its schema id   |
 |    |                                    | swapped for the target's         |
 |    |                                    | (fallback: full re-encode)       |
-| R7 | executeInTransaction (:66-78)      | replicate_stream's foreachBatch: |
-|    |                                    | one JVM job over the batch's raw |
+| R7 | executeInTransaction (:66-78)      | batch_writer (each micro-batch   |
+|    |                                    | of replicate_stream; a static    |
+|    |                                    | transform's one batch): one JVM  |
+|    |                                    | job over the batch's raw         |
 |    |                                    | envelope columns, each task      |
 |    |                                    | walking, rewriting and writing   |
 |    |                                    | its rows as one parquet file (no |
@@ -68,10 +70,12 @@ from __future__ import annotations
 import os
 import shutil
 import struct
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 import pyarrow as pa
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
@@ -86,7 +90,7 @@ from pyspark.sql.types import (
 
 from ..functions import avro_codec
 from ..sources.registry import MockSchemaRegistry
-from ..session import graft_jar, jar_on_class_path
+from ..session import SCRATCH, graft_jar, jar_on_class_path
 from ..streaming.replay import drain
 
 # A2 envelope (FIXTURES.md): the fixed schema of Spark's Kafka source.
@@ -185,20 +189,6 @@ def _reencode(raw, snapshot: dict, mapping: dict, key_schema_id: int, route: boo
 _DECLINED_ENVELOPE = StructType([KAFKA_ENVELOPE["value"]] + KAFKA_ENVELOPE.fields[3:])
 
 
-def _ensure_walker(spark: SparkSession) -> None:
-    """Register the JVM walk and rewrite (``graft_jar``) as the SQL function
-    ``graft_replicate``, once per session object like
-    ``ensure_runtime_conf``. A JVM ``get_spark`` launched has the jar on its
-    class path; any other gets it by ``ADD JAR``."""
-    if getattr(spark, "_graft_replicate_registered", False):
-        return
-    if not jar_on_class_path():
-        spark.sql(f"ADD JAR '{graft_jar()}'")
-    spark.udf.registerJavaFunction("graft_replicate", "sparkgraft.GraftSink$Replicate",
-                                   "struct<key: binary, value: binary>")
-    spark._graft_replicate_registered = True
-
-
 class ReplicationPlan:
     """The plan-time half of R3–R6 for one registry snapshot: for each
     source envelope row, extract ``id`` from the Confluent-framed value and
@@ -218,12 +208,11 @@ class ReplicationPlan:
     JVM rewrite (``jvm/GraftSink.java``): key = the key frame + the id's
     bytes; value = the payload with its schema id swapped for the
     target's; exactly the bytes the full path would encode, and no Python
-    worker runs. Walk and rewrite run together, in the streaming sink's
-    task loop (``batch_writer``, which passes ``_rewrite`` to each batch's
-    sink call) and, for the static ``transform``, as the one SQL function
-    ``graft_replicate``. ``_full`` runs ``_reencode`` over the declined
-    rows only (one ``mapInArrow``), so both modes give the full path's
-    output for every input.
+    worker runs. Walk and rewrite run together in the replica sink's task
+    loop (``batch_writer``, which passes ``_rewrite`` to each batch's sink
+    call); a static ``transform`` runs that writer once. ``_full`` runs
+    ``_reencode`` over the declined rows only (one ``mapInArrow``), so
+    both modes give the full path's output for every input.
 
     ``on_error`` picks what a bad record does:
 
@@ -240,16 +229,15 @@ class ReplicationPlan:
       carries a schema id absent from the plan-time snapshot — KeyError),
       ``missing_id`` (decoded record lacks the re-key field),
       ``decode_error`` (any other failure: malformed frame or payload).
-      The streaming sink splits main and dead-letter rows by ``error`` in
-      its one task loop; a static consumer filters on it (partition-local,
-      no extra shuffle).
+      The sink writes the rows with an error class to their own dead-letter
+      dir (``batch_writer``); a static ``transform`` returns both sinks'
+      rows, ``error`` NULL on the main sink's.
     """
 
-    def __init__(self, spark: SparkSession, schemas_by_id: dict, target_topic: str,
-                 key_schema_id: int, id_mapping: dict, on_error: str = "abort") -> None:
+    def __init__(self, schemas_by_id: dict, target_topic: str, key_schema_id: int,
+                 id_mapping: dict, on_error: str = "abort") -> None:
         if on_error not in ("abort", "route"):
             raise ValueError(f"on_error must be 'abort' or 'route', got {on_error!r}")
-        _ensure_walker(spark)
         snapshot, mapping = dict(schemas_by_id), dict(id_mapping)
         route = on_error == "route"
         self.route = route
@@ -264,17 +252,6 @@ class ReplicationPlan:
         # frame, the (source, target) schema id pairs, the target topic
         self._rewrite = (b"".join(program), avro_codec.frame(key_schema_id, b""), targets,
                          target_topic)
-        # the static transform's SQL text: one selectExpr/where call each
-        self._replicate_sql = [
-            "graft_replicate(value, {}) AS _replica".format(
-                ", ".join(f"X'{arg.hex()}'" for arg in self._rewrite[:3])),
-            "value", "`partition`", "`offset`", "`timestamp`"]
-        self._rewrite_sql = [
-            "_replica.key AS key", "_replica.value AS value",
-            # the topic as UTF-8 bytes: no quoting or escaping rules apply
-            f"CAST(X'{target_topic.encode().hex()}' AS STRING) AS topic",
-            "`partition`", "`offset`", "`timestamp`",
-        ] + (["CAST(NULL AS STRING) AS error"] if route else [])
         names = self.schema.fieldNames()
 
         def fallback(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -297,7 +274,7 @@ class ReplicationPlan:
         self._fallback = fallback
 
     @classmethod
-    def from_registries(cls, spark: SparkSession, source_registry: MockSchemaRegistry,
+    def from_registries(cls, source_registry: MockSchemaRegistry,
                         target_registry: MockSchemaRegistry, target_topic: str,
                         value_schema=None, on_error: str = "abort") -> ReplicationPlan:
         """Plan-time registry work (R6 auto-registration, README.adoc:27
@@ -316,7 +293,7 @@ class ReplicationPlan:
             src_id: target_registry.register(f"{target_topic}-value", schema)
             for src_id, schema in snapshot.items()
         }
-        return cls(spark, snapshot, target_topic, key_id, id_mapping, on_error)
+        return cls(snapshot, target_topic, key_id, id_mapping, on_error)
 
     def _full(self, env: DataFrame) -> DataFrame:
         """The full path's output (``self.schema``) for every row of
@@ -324,17 +301,20 @@ class ReplicationPlan:
         return env.mapInArrow(self._fallback, schema=self.schema)
 
     def transform(self, env: DataFrame) -> DataFrame:
-        """The whole output over a static ``env``, as one DataFrame. A
-        JVM-only job counts the declined rows first (one parallel pass;
-        ``isEmpty`` would scan partitions in waves): a Python stage costs
-        its fixed price even over 0 rows, so a clean ``env`` gets the
-        rewrite alone."""
-        replicated = env.selectExpr(*self._replicate_sql)
-        declined = replicated.where("_replica IS NULL")
-        if not declined.count():  # no filter: it would call graft_replicate again
-            return replicated.selectExpr(*self._rewrite_sql)
-        fast = replicated.where("_replica IS NOT NULL").selectExpr(*self._rewrite_sql)
-        return fast.unionByName(self._full(declined.drop("_replica")))
+        """The whole output over a static ``env``: the stream's own writer
+        (``batch_writer``) runs once, as batch 0, into a fresh ``run_dir``,
+        and the committed rows are read back; in route mode the main sink's
+        with a NULL ``error``, then the dead letters. In abort mode a bad
+        record raises here."""
+        spark = env.sparkSession
+        main = os.path.join(run_dir(), "main")
+        dlq = main + "-dlq" if self.route else None
+        batch_writer(self, main, dlq)(env, 0)
+        out = read_committed(spark, main)
+        if not self.route:
+            return out
+        return out.selectExpr("*", "CAST(NULL AS STRING) AS error").unionByName(
+            read_committed(spark, dlq, marker_dir=main, schema=DLQ_ENVELOPE))
 
 
 def plan_replication(
@@ -348,8 +328,7 @@ def plan_replication(
     """``ReplicationPlan.from_registries`` (the registry propagation) +
     ``ReplicationPlan.transform`` over a static ``env``."""
     return ReplicationPlan.from_registries(
-        env.sparkSession, source_registry, target_registry, target_topic, value_schema,
-        on_error,
+        source_registry, target_registry, target_topic, value_schema, on_error,
     ).transform(env)
 
 
@@ -363,23 +342,35 @@ def committed_marker(target_dir: str, batch_id: int) -> str:
 _DECLINED = ".declined"  # a batch dir's spill of the rows the walker declines
 
 
+def run_dir() -> str:
+    """A fresh dir for one replication run's sinks (and checkpoint):
+    ``SCRATCH/replrun/<run id>``, which ``gc_scratch`` sweeps once cold."""
+    return os.path.join(SCRATCH, "replrun", uuid.uuid4().hex[:12])
+
+
 def _graft_sink(spark: SparkSession):
-    """``jvm/GraftSink.java``'s class, for calls from this thread. py4j
-    finds classes through the calling JVM thread's context class loader:
-    in a JVM that has the jar by ``ADD JAR`` only, that is the session's
-    jar class loader on the thread that ran ``ADD JAR`` alone, so any other
-    thread (a stream started from another Python thread) is given it."""
+    """``jvm/GraftSink.java``'s class, for calls from this thread. A JVM
+    ``get_spark`` launched has the jar (``graft_jar``) on its class path;
+    any other gets it by ``ADD JAR``, once per session state. py4j finds
+    classes through the calling JVM thread's context class loader: there,
+    that is the session's jar class loader on the thread that ran ``ADD
+    JAR`` alone, so any other thread (a stream started from another Python
+    thread) is given it."""
     jvm = spark._jvm
     if not jar_on_class_path():
         jvm.java.lang.Thread.currentThread().setContextClassLoader(
             spark._jsparkSession.sharedState().jarClassLoader())
+        if not isinstance(jvm.sparkgraft.GraftSink, JavaClass):  # not added yet
+            spark.sql(f"ADD JAR '{graft_jar()}'")
     return jvm.sparkgraft.GraftSink
 
 
 def batch_writer(plan: ReplicationPlan, main_dir: str, dlq_dir: str | None = None):
     """foreachBatch body over source envelope batches (the
-    ``_DECLINED_ENVELOPE`` columns, or more): write-then-commit-marker,
-    idempotent on replay. ``dlq_dir`` is given in route mode only.
+    ``_DECLINED_ENVELOPE`` columns, or more), which a static
+    ``ReplicationPlan.transform`` calls once, as batch 0:
+    write-then-commit-marker, idempotent on replay. ``dlq_dir`` is given
+    in route mode only.
 
     - <main_dir>/data/<batch_id>/ is cleared, then one job
       (``jvm/GraftSink.java``) runs over the batch itself: each task walks
@@ -471,7 +462,7 @@ def replicate_stream(
     triggerExecution — whichever the batch ran)."""
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
     plan = ReplicationPlan.from_registries(
-        spark, source_registry, target_registry, target_topic, value_schema,
+        source_registry, target_registry, target_topic, value_schema,
         on_error="abort" if dlq_dir is None else "route",
     )
     writer = env.select(*_DECLINED_ENVELOPE.fieldNames()).writeStream.foreachBatch(

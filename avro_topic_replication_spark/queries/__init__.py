@@ -84,10 +84,12 @@ _MODULES = (
 # the new implementation lands green. Order within the tuple = order in
 # the window.
 _RESAMPLE_FIRST: "tuple[str, ...]" = (
-    # rebuilt on the single replication transform (on_error argument)
-    # and the shared registry propagation of plan_replication:
+    # rebuilt on the stream's batch writer (a static transform runs
+    # batch_writer once, as batch 0):
     "replication_dlq_routing",
     "replication_batch_roundtrip",
+    # rebuilt on the single replication transform (on_error argument)
+    # and the shared registry propagation of plan_replication:
     "replication_stream_roundtrip",
     # decodes through the shared consumer decoder (decode_envelope):
     "replication_evolved_consumer",

@@ -1147,7 +1147,7 @@ def stat_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     The CI is the [2nd, 31st] ORDER STATISTIC of the 32 sorted replicate
     means (~93.75% coverage) rather than an interpolated percentile —
     selection is bit-exact across engines, interpolation formulas are
-    not. Replicate means divide exact decimal sums once. 100-TB shape:
+    not. The replicate means divide exact decimal sums once. 100-TB shape:
     a 32× map-side expansion feeding one 32-group partial aggregate; the
     driver sees 32 numbers."""
     o = load_table(spark, sf_dir, "orders", rebalance_on="o_orderkey")

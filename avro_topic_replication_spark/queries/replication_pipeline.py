@@ -12,7 +12,6 @@ transactional sink, read-committed consumer) end to end, rows-only.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,8 +112,7 @@ def replication_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (sink layout is engine-defined); the pytest golden test
     asserts the key==value.id contract on this exact path."""
     src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
-    sf_tag = scratch_tag(sf_dir, ("nation",))
-    base = os.path.join(SCRATCH, "replq-live", sf_tag, uuid.uuid4().hex[:8])
+    base = R.run_dir()
     src_dir = _staged_source(spark, sf_dir, src_reg)
     tgt_dir = os.path.join(base, "target-topic-b")
     ckpt = os.path.join(base, "ckpt")
@@ -150,8 +148,7 @@ def replication_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     every record exactly once, key == value.id (mirrors
     reference ReplicationApplicationTest.java:118-124)."""
     src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
-    sf_tag = scratch_tag(sf_dir, ("nation",))
-    base = os.path.join(SCRATCH, "replq-rt", sf_tag, uuid.uuid4().hex[:8])
+    base = R.run_dir()
     src_dir = _staged_source(spark, sf_dir, src_reg)
     tgt_dir = os.path.join(base, "target-topic-b")
     ckpt = os.path.join(base, "ckpt")
@@ -316,8 +313,7 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the nation oracle, and pytest covers the class taxonomy.
     """
     src_reg, tgt_reg = MockSchemaRegistry(), MockSchemaRegistry()
-    sf_tag = scratch_tag(sf_dir, ("nation",))
-    base = os.path.join(SCRATCH, "replq-dlq", sf_tag, uuid.uuid4().hex[:8])
+    base = R.run_dir()
     src_dir = _staged_corrupt_source(spark, sf_dir, src_reg)
     main_dir = os.path.join(base, "target-topic-b")
     ckpt = os.path.join(base, "ckpt")

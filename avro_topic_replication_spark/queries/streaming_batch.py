@@ -625,6 +625,34 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sliced_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a stream of four micro-batches: staged once
+    (per source content, ``scratch_tag``) as four files, deterministic
+    slices by ``event_id``, and read one file per trigger
+    (maxFilesPerTrigger=1)."""
+    import os
+    import shutil
+
+    from ..session import ensure_runtime_conf
+    from ..streaming.replay import SCRATCH, scratch_tag
+
+    ensure_runtime_conf(spark)
+    stage_dir = os.path.join(SCRATCH, "replay_multi", scratch_tag(sf_dir, ("events",)))
+    if not os.path.exists(os.path.join(stage_dir, "_done")):
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        ev = load_table(spark, sf_dir, "events")
+        ev.withColumn("slice", F.pmod(F.col("event_id"), F.lit(4))).write.mode(
+            "overwrite"
+        ).partitionBy("slice").parquet(stage_dir)
+        with open(os.path.join(stage_dir, "_done"), "w") as f:
+            f.write("ok")
+    return (
+        spark.readStream.schema(load_table(spark, sf_dir, "events").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(stage_dir, "slice=*"))
+    )
+
+
 @query("stream_live_multibatch", oracle=None, tags=("streaming", "live"))
 def stream_live_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Genuinely incremental micro-batching: the events table is staged as
@@ -635,34 +663,10 @@ def stream_live_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     store between them — not one bulk pass. The output must equal the
     single-batch answer; n_batches is surfaced so the multi-batch
     execution is visible, not assumed."""
-    import os
-    import shutil
-    import uuid as _uuid
+    from ..streaming.replay import run_to_memory
 
-    from ..streaming.replay import SCRATCH, run_to_memory, scratch_tag
-
-    from ..catalog import load_table
-    from ..session import ensure_runtime_conf
-
-    ensure_runtime_conf(spark)
-    sf_tag = scratch_tag(sf_dir, ("events",))
-    stage_dir = os.path.join(SCRATCH, "replay_multi", sf_tag)
-    if not os.path.exists(os.path.join(stage_dir, "_done")):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
-        # 4 deterministic slices by event_id — each becomes one trigger
-        ev.withColumn("slice", F.pmod(F.col("event_id"), F.lit(4))).write.mode(
-            "overwrite"
-        ).partitionBy("slice").parquet(stage_dir)
-        with open(os.path.join(stage_dir, "_done"), "w") as f:
-            f.write("ok")
-    schema = load_table(spark, sf_dir, "events").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage_dir, "slice=*"))
-    )
-    sdf = events_ts(sdf).withColumn("ts", F.col("ts").cast("timestamp"))
+    sdf = events_ts(_sliced_events_stream(spark, sf_dir))
+    sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         sdf.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "6 hours"), "event_type")
@@ -732,46 +736,16 @@ def stream_live_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern every warehouse ingest runs; on a lakehouse the foreachBatch
     body becomes a transactional MERGE INTO."""
     import os
-    import shutil
-    import uuid as _uuid
+    import uuid
 
-    from ..catalog import load_table
-    from ..session import ensure_runtime_conf
-    from ..streaming.replay import SCRATCH, scratch_tag
+    from ..streaming.replay import SCRATCH, drain
 
-    ensure_runtime_conf(spark)
-    sf_tag = scratch_tag(sf_dir, ("events",))
-    stage_dir = os.path.join(SCRATCH, "replay_multi", sf_tag)
-    if not os.path.exists(os.path.join(stage_dir, "_done")):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
-        ev.withColumn("slice", F.pmod(F.col("event_id"), F.lit(4))).write.mode(
-            "overwrite"
-        ).partitionBy("slice").parquet(stage_dir)
-        with open(os.path.join(stage_dir, "_done"), "w") as f:
-            f.write("ok")
-    run_id = _uuid.uuid4().hex[:12]
-    state_dir = os.path.join(SCRATCH, "upsert_state", sf_tag, run_id)
-    ckpt = os.path.join(SCRATCH, "ckpt", f"upsert_{run_id}")
-
-    schema = load_table(spark, sf_dir, "events").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage_dir, "slice=*"))
+    run_id = uuid.uuid4().hex[:12]
+    state_dir = os.path.join(SCRATCH, "upsert_state", run_id)
+    writer = _sliced_events_stream(spark, sf_dir).writeStream.foreachBatch(
+        lambda batch_df, batch_id: _merge_upsert_batch(batch_df, batch_id, state_dir)
     )
-
-    q = (
-        sdf.writeStream.foreachBatch(
-            lambda batch_df, batch_id: _merge_upsert_batch(
-                batch_df, batch_id, state_dir
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(writer, os.path.join(SCRATCH, "ckpt", f"upsert_{run_id}"), 120)
     return spark.read.parquet(state_dir).orderBy("user_id")
 
 

@@ -106,9 +106,11 @@ def _register_tag(tag: str, sf_dir: str, tables: "tuple[str, ...]") -> None:
 
 
 # SCRATCH subdirs whose children are run-id-scoped (uuid checkpoint /
-# state / test dirs): garbage the moment their run ends, swept whole by
-# gc_scratch at session start.
-_EPHEMERAL_SUBDIRS = frozenset(("ckpt", "httpreg", "repltest", "upsert_state"))
+# state / test dirs, replication runs' sinks): garbage the moment their
+# run ends, swept whole by gc_scratch at session start. The replq-* dirs
+# held the replication queries' runs before they moved to replrun.
+_EPHEMERAL_SUBDIRS = frozenset(("ckpt", "httpreg", "replrun", "repltest", "upsert_state",
+                                "replq-dlq", "replq-live", "replq-rt"))
 
 
 def _live_tags() -> "set[str]":

@@ -186,8 +186,8 @@ def _examples(strategy, n: int) -> list:
 def _envelope(spark, raws: list, partition=None):
     """The framed values ``raws`` as a source envelope DataFrame read from
     one parquet file (a real scan, whose rows reach the sink's task loop
-    and ``graft_replicate`` as a stream's batch does): ``offset`` is the
-    row's index, ``partition`` 0 or the given per-row numbers."""
+    as a stream's batch does): ``offset`` is the row's index,
+    ``partition`` 0 or the given per-row numbers."""
     path = os.path.join(SCRATCH, "repltest", uuid.uuid4().hex[:12], "env.parquet")
     os.makedirs(os.path.dirname(path))
     n = len(raws)
@@ -202,23 +202,22 @@ def _envelope(spark, raws: list, partition=None):
     return spark.read.schema(R.KAFKA_ENVELOPE).parquet(path)
 
 
-def _plan(spark, snapshot=_SNAPSHOT, mapping=_MAPPING, on_error="abort"):
-    return R.ReplicationPlan(spark, snapshot, "t", _KEY_ID, mapping, on_error)
+def _plan(snapshot=_SNAPSHOT, mapping=_MAPPING, on_error="abort"):
+    return R.ReplicationPlan(snapshot, "t", _KEY_ID, mapping, on_error)
 
 
 def _spans(spark, raws: list, snapshot=_SNAPSHOT) -> list:
     """The ``id`` span (value offsets, length prefix included) the JVM
     walker finds in each framed value, or None where it declines it, for
     schemas whose ``id`` is the record's first field: read from the key
-    ``graft_replicate`` builds (the key frame, then the span's bytes), the
-    span starts right after the frame header."""
-    plan = _plan(spark, snapshot, {sid: sid for sid in snapshot})
+    the sink's task loop (``_sink_rewrite``) builds (the key frame, then
+    the span's bytes), the span starts right after the frame header."""
+    plan = _plan(snapshot, {sid: sid for sid in snapshot})
     frame = plan._rewrite[1]
-    keys = dict(_envelope(spark, raws).selectExpr("offset", plan._replicate_sql[0])
-                .selectExpr("offset", "_replica.key").collect())
+    fast, _ = _sink_rewrite(spark, plan, _envelope(spark, raws))
     spans = []
     for i, raw in enumerate(raws):
-        key = keys[i] and bytes(keys[i])
+        key = fast[i][0] if i in fast else None
         spans.append(key and (5, 5 + len(key) - len(frame)))
         assert key is None or key == frame + raw[5:spans[-1][1]], raw
     return spans
@@ -258,7 +257,7 @@ def _check_kernel(spark, raws: list, snapshot=_SNAPSHOT, mapping=_MAPPING) -> di
     path must give exactly its key and value with no error in both modes.
     The sink spills every other value unchanged, and the declined rows'
     job runs ``_reencode`` on it (the Spark tests below cover that job)."""
-    plan = _plan(spark, snapshot, mapping)
+    plan = _plan(snapshot, mapping)
     fast, spilled = _sink_rewrite(spark, plan, _envelope(spark, raws))
     assert sorted([*fast, *spilled]) == list(range(len(raws)))
     assert all(raws[i] == raw for i, raw in spilled.items())
@@ -514,7 +513,7 @@ def _replicated(spark, env, route: bool):
     in offset order, by partition, or, when its job fails, the Spark
     error's text."""
     try:
-        rows = _plan(spark, on_error="route" if route else "abort").transform(env).collect()
+        rows = _plan(on_error="route" if route else "abort").transform(env).collect()
     except Exception as e:
         return str(e)
     out = {}
@@ -573,10 +572,10 @@ def _fallback_outcome(plan, raws: list, lo: int = 0):
 def test_kernel_matches_full_path_on_mixed_batches(spark):
     """25 drawn batches mixing Foo v1/v2 frames, their damaged copies,
     nulls, unknown ids and records of a schema the walker does not cover,
-    each in a shuffled order, through ``ReplicationPlan.transform`` (the JVM
-    rewrite ∪ the declined rows' ``_reencode`` job): in route mode every
-    batch gets per-row ``_reencode``'s (key, value, error) rows, in one
-    job; in abort mode a batch fails with its first failing row's
+    each in a shuffled order, through ``ReplicationPlan.transform`` (the
+    sink's task loop, then the declined rows' ``_reencode`` job): in route
+    mode every batch gets per-row ``_reencode``'s (key, value, error) rows,
+    in one run; in abort mode a batch fails with its first failing row's
     exception type and message; batches with no failing row replicate
     whole in abort mode, as in route mode.
 
@@ -624,7 +623,7 @@ def test_kernel_matches_full_path_on_mixed_batches(spark):
         k: _first_error(clean, True) for k, clean in enumerate(cleans)}
 
     walked = iter(_spans(spark, [r for raws in batches for r in raws]))
-    plans = {route: _plan(spark, on_error="route" if route else "abort")
+    plans = {route: _plan(on_error="route" if route else "abort")
              for route in (False, True)}
     for k, (raws, (_, rnd)) in enumerate(zip(batches, examples)):
         vouched = [next(walked) is not None for _ in raws]
@@ -834,8 +833,7 @@ def test_idempotent_replay_of_committed_batch(spark, dirs):
         spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA
     )
     env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(dirs["src"])
-    plan = R.ReplicationPlan.from_registries(
-        spark, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
+    plan = R.ReplicationPlan.from_registries(src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
     writer = R.batch_writer(plan, dirs["tgt"])
     writer(env, 0)
     writer(env, 0)  # replay
@@ -851,8 +849,7 @@ def test_replay_replaces_an_uncommitted_attempt(spark, dirs):
     records = [{"id": str(i), "name": f"n{i}"} for i in range(10)]
     R.write_envelope_fixture(spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA)
     env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(dirs["src"])
-    plan = R.ReplicationPlan.from_registries(
-        spark, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
+    plan = R.ReplicationPlan.from_registries(src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
     writer = R.batch_writer(plan, dirs["tgt"])
     data = os.path.join(dirs["tgt"], "data", "0")
     os.makedirs(os.path.join(data, R._DECLINED))
@@ -967,6 +964,21 @@ def test_route_mode_replicates_good_records_like_abort_mode(spark):
         assert bytes(r["key"]) == bytes(want[off]["key"])
         assert bytes(r["value"]) == bytes(want[off]["value"])
         assert (r["topic"], r["partition"]) == (want[off]["topic"], want[off]["partition"])
+
+
+def test_empty_static_env_gives_an_empty_frame_in_both_modes(spark):
+    """A static ``env`` without rows, read from an empty file or with no
+    partitions at all (so no task of the sink's job runs), replicates to
+    an empty frame of the plan's schema in both modes."""
+    envs = {"empty file": _envelope(spark, []),
+            "no partitions": spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                                   R.KAFKA_ENVELOPE)}
+    assert envs["no partitions"].rdd.getNumPartitions() == 0
+    for name, env in envs.items():
+        for on_error in ("abort", "route"):
+            plan = _plan(on_error=on_error)
+            out = plan.transform(env)
+            assert out.schema == plan.schema and out.collect() == [], (name, on_error)
 
 
 def _sql_plans(spark, after: int) -> list:

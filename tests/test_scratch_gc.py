@@ -100,23 +100,28 @@ def test_gc_sweeps_tag_of_deleted_source(scratch, sf):
 
 
 def test_gc_sweeps_ephemeral_run_scoped_dirs(scratch, sf):
-    """Streaming checkpoints and uuid-scoped test scratch are garbage the
-    moment their run ends (measured: ~400 dirs accumulated over ten
-    rounds); gc sweeps those subdirs whole while live content-keyed
-    fixture caches stay."""
+    """Streaming checkpoints, replication runs' sinks and uuid-scoped test
+    scratch are garbage the moment their run ends (measured: ~400 dirs
+    accumulated over ten rounds); gc sweeps those subdirs whole while live
+    content-keyed fixture caches (a replication query's source topic
+    among them) stay."""
     live = replay.scratch_tag(str(sf), ("events",))
     for sub, name in [
         ("ckpt", "mem_0051a0899230"),
         ("ckpt", "upsert_abc123"),
         ("httpreg", "05e293e8"),
+        ("replrun", "1f0e9d8c7b6a"),
+        ("replq-rt", f"{live}/0badc0de"),  # a run from before replrun
         ("repltest", "0470a2a7"),
         ("upsert_state", live),  # even tag-named children: state is per-run
-        ("replay", live),  # live fixture cache: kept
+        ("replay", live),  # live fixture caches: kept
+        ("replq", f"{live}/source-topic-a"),
     ]:
         (scratch / sub / name).mkdir(parents=True)
-    assert replay.gc_scratch(ephemeral_ttl_s=0) == 5
+    assert replay.gc_scratch(ephemeral_ttl_s=0) == 7
     assert (scratch / "replay" / live).exists()
-    for sub in ("ckpt", "httpreg", "repltest", "upsert_state"):
+    assert (scratch / "replq" / live / "source-topic-a").exists()
+    for sub in ("ckpt", "httpreg", "replrun", "replq-rt", "repltest", "upsert_state"):
         assert not any((scratch / sub).iterdir())
 
 

@@ -27,7 +27,8 @@ def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
     from avro_topic_replication_spark.streaming.replay import SCRATCH
 
     qs = all_queries()
-    runs = os.path.join(SCRATCH, "replq-dlq", "*", "*")
+    # stream runs only: the static arm's run dir has no checkpoint
+    runs = os.path.join(SCRATCH, "replrun", "*", "ckpt")
     before = set(glob.glob(runs))
     batch = {
         r["disposition"]: r
@@ -59,7 +60,8 @@ def test_stream_dlq_accounting_equals_driver_green_batch_arm(spark):
 
     # Both sinks of the stream arm were written without parquet
     # dictionaries (the run's scope dir is the one the query just made).
-    (run,) = set(glob.glob(runs)) - before
+    (ckpt,) = set(glob.glob(runs)) - before
+    run = os.path.dirname(ckpt)
     for sink in ("target-topic-b", "target-topic-b-dlq"):
         assert dictionary_encoded_chunks(os.path.join(run, sink)) == [], sink
 
